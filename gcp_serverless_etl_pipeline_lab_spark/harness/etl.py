@@ -16,7 +16,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.local_frames import literal_frame
-from ..operators.transform import split_clean_errors
+from ..operators.transform import (
+    finalize_clean,
+    finalize_errors,
+    split_clean_errors,
+)
 from ..operators.validate import annotate
 from ..sources.text_csv import LINE_COL, LINE_ID_COL
 from ._registry import _t, register
@@ -263,7 +267,7 @@ def _etl_annotated(spark: SparkSession, sf_dir: str):
     """,
 )
 def etl_clean_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    clean, _ = split_clean_errors(_etl_annotated(spark, sf_dir), persist=False)
+    clean = finalize_clean(_etl_annotated(spark, sf_dir))
     return clean.agg(
         F.count(F.lit(1)).alias("n_clean"),
         F.countDistinct("id").alias("n_ids"),
@@ -284,7 +288,7 @@ def etl_clean_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def etl_error_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _, errors = split_clean_errors(_etl_annotated(spark, sf_dir), persist=False)
+    errors = finalize_errors(_etl_annotated(spark, sf_dir))
     return errors.groupBy("error").agg(F.count(F.lit(1)).alias("n")).orderBy("error")
 
 
@@ -411,7 +415,7 @@ def etl_split_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the annotated intermediate, two filters). Benchmark twin of
     `etl_split_staged` — BASELINE.md records the measured tradeoff."""
     annotated = _etl_annotated(spark, sf_dir)
-    clean, errors = split_clean_errors(annotated, persist=True)
+    clean, errors = split_clean_errors(annotated)
     try:
         joined = _split_fanout_agg(spark, clean, errors)
         rows = joined.collect()

@@ -562,10 +562,10 @@ def merge_upsert_last_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
     DataFrame plan: union base + update batches, one window by key
     ordered by version desc, keep rank 1. At 100 TB this is ONE shuffle
     of base+updates by key — the same cost profile a format-native MERGE
-    pays in its join — and it needs no table format. The versioned
-    warehouse sink (sinks.py) provides the time-travel half of that
-    story; together they bracket what delta-spark would give us (COVERAGE
-    documents the skip)."""
+    pays in its join — and it needs no table format. The warehouse
+    sink's pinned-version reads (sinks.read_warehouse(version=)) provide
+    the time-travel half of that story; together they bracket what
+    delta-spark would give us (COVERAGE documents the skip)."""
     o = _t(spark, sf_dir, "orders")
     base = o.select(
         F.col("o_orderkey").alias("k"),

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ._registry import register
 from .etl import _ETL_ORACLE_BASE, _ETL_ORACLE_CHAIN, _etl_lines
-from ..operators.transform import split_clean_errors
+from ..operators.transform import finalize_clean
 from ..operators.validate import annotate
 from ..sources.tables import register_views
 
@@ -88,7 +88,7 @@ def _sales_view(spark: SparkSession, sf_dir: str) -> None:
             LINE_COL,
         )
     )
-    clean, _ = split_clean_errors(annotate(lines), persist=False)
+    clean = finalize_clean(annotate(lines))
     clean.createOrReplaceTempView("sales_data")
 
 

@@ -526,7 +526,7 @@ def a0b_csv_rfc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Warehouse time travel — pinned-version reads through the versioned sink
+# Warehouse time travel — pinned-version reads of retained snapshots
 # ---------------------------------------------------------------------------
 
 
@@ -550,7 +550,7 @@ def a0b_csv_rfc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def a0_warehouse_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snapshot time travel through the versioned warehouse sink: write
+    """Snapshot time travel through the warehouse sink: write
     orders as snapshot v=0, write a mutated half-size snapshot v=1
     (every even key, price +12345 cents), then read BOTH — the pinned
     ``version=0`` read must still see the full original table after v1
@@ -564,7 +564,7 @@ def a0_warehouse_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ..sinks import read_warehouse_versioned, write_warehouse_versioned
+    from ..sinks import read_warehouse, write_warehouse
 
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
     orders = _t(spark, sf_dir, "orders").select(
@@ -572,16 +572,16 @@ def a0_warehouse_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = tempfile.mkdtemp(prefix="wh_tt_")
     try:
-        write_warehouse_versioned(orders, base)
+        write_warehouse(orders, base)
         mutated = orders.filter(F.col("o_orderkey") % 2 == 0).select(
             "o_orderkey", (F.col("price_cents") + 12345).alias("price_cents")
         )
-        write_warehouse_versioned(mutated, base)
-        pinned = read_warehouse_versioned(spark, base, version=0).agg(
+        write_warehouse(mutated, base)
+        pinned = read_warehouse(spark, base, version=0).agg(
             F.count(F.lit(1)).cast("bigint").alias("v0_rows"),
             F.sum("price_cents").cast("bigint").alias("v0_sum_cents"),
         )
-        latest = read_warehouse_versioned(spark, base).agg(
+        latest = read_warehouse(spark, base).agg(
             F.count(F.lit(1)).cast("bigint").alias("v1_rows"),
             F.sum("price_cents").cast("bigint").alias("v1_sum_cents"),
         )

@@ -156,7 +156,8 @@ def compact_epochs(
 ) -> dict:
     """Fold the streaming sink's ``epoch=K`` micro-batch dirs (plus any
     previously-compacted snapshot) into ONE fresh ``v=N`` snapshot and
-    commit it with the warehouse pointer — the small-file answer for the
+    commit it through the warehouse's own commit protocol
+    (``sinks._commit``) — the small-file answer for the
     availableNow sink, which otherwise leaves one file set per
     micro-batch forever.
 
@@ -175,7 +176,6 @@ def compact_epochs(
     with a broadcast file→group map; the 100 TB deployment runs this on
     a schedule with ``target_bytes`` at the cluster scan unit."""
     import functools
-    import os
     import shutil
 
     from .. import sinks
@@ -186,15 +186,7 @@ def compact_epochs(
     if not live:
         return {"epochs_compacted": 0, "version": ver, "through": through}
 
-    roots: list[str] = []
-    if ver is not None:
-        cur = sinks._resolve_current(path)
-        if cur is None:
-            raise FileNotFoundError(
-                f"_CURRENT points at v={ver} under {path}, but that "
-                "snapshot directory is missing"
-            )
-        roots.append(cur)
+    roots = [] if ver is None else [sinks._snapshot_dir(path, ver)]
     roots.extend(d for _, d in live)
 
     files: list[tuple[str, int]] = []
@@ -217,15 +209,17 @@ def compact_epochs(
     df = functools.reduce(
         lambda a, b: a.unionByName(b), [_read_root(r) for r in roots]
     )
-    new_v = sinks._claim_version(path)
-    _rewrite_planned(spark, df, plan, os.path.join(path, f"v={new_v}"))
     new_through = max(k for k, _ in live)
-    sinks._flip_pointer(path, new_v, through=new_through)
+    new_v = sinks._commit(
+        path,
+        lambda target: _rewrite_planned(spark, df, plan, target),
+        keep_versions,
+        through=new_through,
+    )
     # cleanup: absorbed epochs (including stale pre-watermark replays)
     for k, d in epochs:
         if k <= new_through:
             shutil.rmtree(d, ignore_errors=True)
-    sinks._prune_versions(path, keep_versions)
     return {
         "epochs_compacted": len(live),
         "version": new_v,

@@ -45,18 +45,17 @@ def finalize_errors(annotated: DataFrame) -> DataFrame:
     )
 
 
-def split_clean_errors(
-    annotated: DataFrame, persist: bool = True
-) -> tuple[DataFrame, DataFrame]:
-    """One annotated pass → (clean, errors). ``persist=True`` caches the
-    annotated intermediate so the two sinks don't rescan the source.
+def split_clean_errors(annotated: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """One annotated pass → (clean, errors), caching the annotated
+    intermediate so the two sinks don't rescan the source. A caller that
+    consumes only one side calls ``finalize_clean`` / ``finalize_errors``
+    directly and caches nothing.
 
     For inputs too large to cache, use ``split_clean_errors_staged``: at
     100 TB the MEMORY_AND_DISK cache is itself the dominant cost (and dies
     with executors); a columnar staging write is cheaper than two source
     re-scans and is fault-tolerant."""
-    if persist:
-        annotated = annotated.persist(StorageLevel.MEMORY_AND_DISK)
+    annotated = annotated.persist(StorageLevel.MEMORY_AND_DISK)
     return finalize_clean(annotated), finalize_errors(annotated)
 
 

@@ -59,18 +59,17 @@ def run_sales_etl(
     input_path: str,
     warehouse_path: str | None = None,
     dead_letter_path: str | None = None,
-    stable_multifile: bool = False,
     run_id: str | None = None,
 ) -> PipelineResult:
     """The full reference pipeline: scan → validate/clean/derive →
     (warehouse, dead-letter) → quality gate → summary report.
-    ``stable_multifile`` pins first-wins dedup to (file name, line) order
-    when ``input_path`` is a multi-file glob (see sources.text_csv).
+    First-wins dedup follows (file name, line) order when ``input_path``
+    resolves to several files (see sources.text_csv).
     ``run_id`` scopes the dead-letter write to a retry-idempotent
     ``run=<id>`` directory (sinks.write_dead_letter) — the warehouse side
     needs no equivalent because version-and-flip is already idempotent
     under re-attempts (a retry writes a fresh snapshot and flips)."""
-    raw = read_raw_lines(spark, input_path, stable_multifile=stable_multifile)
+    raw = read_raw_lines(spark, input_path)
     annotated = annotate(raw)
     clean, errors = split_clean_errors(annotated)
     if warehouse_path:

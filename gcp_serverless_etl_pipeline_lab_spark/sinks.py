@@ -2,15 +2,29 @@
 
 S2 mirrors ``WriteToBigQuery(..., WRITE_TRUNCATE, CREATE_IF_NEEDED)``
 (`dataflow/dataflow_transform.py:152-160`): the writer owns the schema and
-fully replaces the table each run → ``mode('overwrite')``. S3 persists the
-error records the reference only logs/sketches
-(`dataflow_transform.py:162-168`) → append-mode JSON dead-letter directory.
+fully replaces the table each run. S3 persists the error records the
+reference only logs/sketches (`dataflow_transform.py:162-168`) →
+append-mode JSON dead-letter directory.
+
+The warehouse has ONE on-disk layout: immutable ``v=N`` snapshot dirs
+behind a ``_CURRENT`` pointer file. The pointer flip is the commit point
+for the current read, and the retained snapshots are the time-travel
+history — the parquet-native analogue of the reference's GCS bucket
+versioning on the warehouse bucket (`terraform/main.tf:36-54`), where
+every WRITE_TRUNCATE leaves the prior object generation readable.
+``write_warehouse`` and ``compaction.compact_epochs`` both commit through
+``_commit``; ``read_warehouse`` reads the pointer target, a pinned
+``version=``, streamed ``epoch=K`` dirs, or a flat directory another tool
+wrote.
 
 Scale note: both writers accept a ``partition_by`` so a 100 TB run can
 partition the warehouse by date and prune at read time.
 """
 
 from __future__ import annotations
+
+import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -21,24 +35,24 @@ def write_warehouse(
     path: str,
     partition_by: list[str] | None = None,
     fmt: str = "parquet",
-    atomic: bool = True,
-    keep_versions: int = 2,
-) -> None:
-    """S2 truncate-overwrite. BigQuery's WRITE_TRUNCATE replaces the table
-    ATOMICALLY — a reader never sees a missing or partial table. Spark's
-    plain ``mode('overwrite')`` has a delete-then-write window, so the
-    default commit protocol here is version-and-flip: write a fresh
-    immutable ``v=N`` snapshot, then atomically flip the ``_CURRENT``
-    pointer file to it (``os.replace`` locally; on an object store the
-    pointer flip is a single-object PUT, equally atomic). Readers resolve
-    the pointer (``read_warehouse``), so a writer that dies mid-write
-    leaves the pointer — and every concurrent reader — on the previous
-    complete snapshot; the orphaned partial ``v=N`` directory is ignored
-    by routine pruning (which must not touch incomplete dirs — they may
-    be a LIVE concurrent writer's) and swept by ``vacuum_versions`` once
-    demonstrably stale. ``keep_versions`` bounds disk: the newest N
-    snapshots survive each commit (keep >= 2 so readers mid-scan of the
-    prior version don't lose their files).
+    keep_versions: int | None = 2,
+) -> int:
+    """S2 truncate-overwrite; returns the committed version N.
+    BigQuery's WRITE_TRUNCATE replaces the table ATOMICALLY — a reader
+    never sees a missing or partial table. Spark's plain
+    ``mode('overwrite')`` has a delete-then-write window, so this writes a
+    fresh immutable ``v=N`` snapshot, then atomically flips the
+    ``_CURRENT`` pointer file to it (``os.replace`` locally; on an object
+    store the pointer flip is a single-object PUT, equally atomic).
+    Readers resolve the pointer (``read_warehouse``), so a writer that
+    dies mid-write leaves the pointer — and every concurrent reader — on
+    the previous complete snapshot; the orphaned partial ``v=N`` directory
+    is ignored by routine pruning (which must not touch incomplete dirs —
+    they may be a LIVE concurrent writer's) and swept by
+    ``vacuum_versions`` once demonstrably stale. ``keep_versions`` bounds
+    disk: the newest N complete snapshots survive each commit (keep >= 2
+    so readers mid-scan of the prior version don't lose their files);
+    ``None`` keeps every snapshot, the GCS bucket-versioning default.
 
     CONCURRENT WRITERS are safe: each writer CLAIMS its version number
     via an exclusive-create marker file (atomic on POSIX and on object
@@ -47,26 +61,33 @@ def write_warehouse(
     flip is last-writer-wins but only ever FORWARD (a writer whose claim
     is older than the committed pointer skips its flip), so ``_CURRENT``
     always names one complete snapshot (tests/test_sinks_atomic.py pins
-    the interleavings).
+    the interleavings)."""
 
-    ``atomic=False`` restores the plain in-place overwrite (flat layout,
-    delete-then-write window) for sinks whose consumers require the bare
-    directory contract."""
-    import os
-
-    if not atomic:
+    def write(target: str) -> None:
         writer = df.write.mode("overwrite").format(fmt)
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.save(path)
-        return
+        writer.save(target)
+
+    return _commit(path, write, keep_versions)
+
+
+def _commit(
+    path: str,
+    write: Callable[[str], None],
+    keep_versions: int | None,
+    through: int | None = None,
+) -> int:
+    """The warehouse commit protocol, in its one place: claim ``v=N``,
+    ``write`` the snapshot into ``path/v=N``, flip ``_CURRENT`` to it
+    (recording the ``through`` epoch watermark when given), then prune
+    to ``keep_versions`` (None: keep all). Returns N."""
     new_v = _claim_version(path)
-    writer = df.write.mode("overwrite").format(fmt)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(os.path.join(path, f"v={new_v}"))
-    _flip_pointer(path, new_v)
-    _prune_versions(path, keep_versions)
+    write(os.path.join(path, f"v={new_v}"))
+    _flip_pointer(path, new_v, through=through)
+    if keep_versions is not None:
+        _prune_versions(path, keep_versions)
+    return new_v
 
 
 _POINTER = "_CURRENT"
@@ -76,11 +97,25 @@ _POINTER = "_CURRENT"
 _CLAIM_PREFIX = ".claim-v"
 
 
+def _list_versions(path: str) -> list[int]:
+    """Version numbers of every ``v=N`` dir under ``path``, complete or
+    not. Discovery is a directory listing; on an object store this is one
+    LIST of the table prefix."""
+    import re
+
+    if not os.path.isdir(path):
+        return []
+    out = []
+    for name in os.listdir(path):
+        m = re.fullmatch(r"v=(\d+)", name)
+        if m and os.path.isdir(os.path.join(path, name)):
+            out.append(int(m.group(1)))
+    return sorted(out)
+
+
 def _list_claims(path: str) -> list[int]:
     """Version numbers claimed (marker present) but possibly not yet
     written — a racing or crashed writer holds these."""
-    import os
-
     if not os.path.isdir(path):
         return []
     return sorted(
@@ -98,8 +133,6 @@ def _claim_version(path: str) -> int:
     claim the same N: the loser's create fails and it retries one higher.
     Crashed writers leave a stale marker, which only costs a skipped
     number — claims never block progress."""
-    import os
-
     os.makedirs(path, exist_ok=True)
     while True:
         taken = set(_list_versions(path)) | set(_list_claims(path))
@@ -119,7 +152,6 @@ def _pointer_info(path: str) -> tuple[int | None, int | None]:
     snapshot AND the epoch watermark together — a crash can never leave
     a snapshot visible while the epochs it absorbed still count as
     live (that would double-read them)."""
-    import os
     import re
 
     try:
@@ -136,10 +168,6 @@ def _pointer_info(path: str) -> tuple[int | None, int | None]:
         if t:
             through = int(t.group(1))
     return int(m.group(1)), through
-
-
-def _pointer_version(path: str) -> int | None:
-    return _pointer_info(path)[0]
 
 
 def _flip_pointer(path: str, version: int, through: int | None = None) -> None:
@@ -160,7 +188,6 @@ def _flip_pointer(path: str, version: int, through: int | None = None) -> None:
     analogue is a conditional PUT (if-match on the pointer's etag),
     retried on precondition failure."""
     import fcntl
-    import os
 
     with open(os.path.join(path, f".{_POINTER}.lock"), "w") as lock:
         fcntl.flock(lock, fcntl.LOCK_EX)
@@ -183,7 +210,6 @@ def _flip_pointer(path: str, version: int, through: int | None = None) -> None:
 def _list_epochs(path: str) -> list[tuple[int, str]]:
     """(epoch id, directory) for every ``epoch=K`` micro-batch dir the
     streaming sink wrote under ``path``, ascending."""
-    import os
     import re
 
     if not os.path.isdir(path):
@@ -194,6 +220,23 @@ def _list_epochs(path: str) -> list[tuple[int, str]]:
         if m and os.path.isdir(os.path.join(path, name)):
             out.append((int(m.group(1)), os.path.join(path, name)))
     return sorted(out)
+
+
+def _is_complete(path: str, version: int) -> bool:
+    return os.path.exists(os.path.join(path, f"v={version}", "_SUCCESS"))
+
+
+def _snapshot_dir(path: str, version: int) -> str:
+    """Directory of the complete snapshot ``v=<version>`` — the target of
+    ``_CURRENT`` or of a pinned time-travel read. A pruned, deleted or
+    never-finished (no ``_SUCCESS``) snapshot raises ``FileNotFoundError``
+    here, for every caller."""
+    if not _is_complete(path, version):
+        raise FileNotFoundError(
+            f"no complete snapshot v={version} under {path}: it was pruned, "
+            "deleted, or its writer never finished"
+        )
+    return os.path.join(path, f"v={version}")
 
 
 def _prune_versions(path: str, keep_versions: int) -> None:
@@ -213,15 +256,10 @@ def _prune_versions(path: str, keep_versions: int) -> None:
     with ``keep_versions=2`` that would leave ONE readable snapshot, and
     a reader mid-scan of the prior complete version could lose its files
     before ``vacuum_versions`` ever ran."""
-    import os
     import shutil
 
-    cur = _pointer_version(path)
-    complete = [
-        v
-        for v in _list_versions(path)
-        if os.path.exists(os.path.join(path, f"v={v}", "_SUCCESS"))
-    ]
+    cur, _ = _pointer_info(path)
+    complete = [v for v in _list_versions(path) if _is_complete(path, v)]
     for old in complete[:-keep_versions]:
         if old == cur:
             continue
@@ -242,20 +280,17 @@ def vacuum_versions(path: str, min_age_seconds: float = 86400.0) -> list[int]:
     a snapshot for longer than the vacuum horizon. Never touches the
     committed pointer target or any complete snapshot (those are
     ``_prune_versions``'s business). Returns the version numbers swept."""
-    import os
     import shutil
     import time
 
-    cur = _pointer_version(path)
+    cur, _ = _pointer_info(path)
     now = time.time()
     swept: list[int] = []
     claimed = set(_list_claims(path)) | set(_list_versions(path))
     for v in sorted(claimed):
-        if v == cur:
-            continue
-        d = os.path.join(path, f"v={v}")
-        if os.path.exists(os.path.join(d, "_SUCCESS")):
+        if v == cur or _is_complete(path, v):
             continue  # complete snapshot: time-travel asset, not debris
+        d = os.path.join(path, f"v={v}")
         marker = os.path.join(path, f"{_CLAIM_PREFIX}{v}")
         stamps = [
             os.path.getmtime(p) for p in (d, marker) if os.path.exists(p)
@@ -269,18 +304,6 @@ def vacuum_versions(path: str, min_age_seconds: float = 86400.0) -> list[int]:
             pass
         swept.append(v)
     return swept
-
-
-def _resolve_current(path: str) -> str | None:
-    """The snapshot directory ``_CURRENT`` points at, or None when the
-    path uses the legacy flat layout (no pointer)."""
-    import os
-
-    v, _ = _pointer_info(path)
-    if v is None:
-        return None
-    sub = os.path.join(path, f"v={v}")
-    return sub if os.path.isdir(sub) else None
 
 
 def write_dead_letter(
@@ -315,150 +338,60 @@ def write_dead_letter(
 _LAYOUT_COLS = ("_compact_group",)  # compaction.GROUP_COL (no import cycle)
 
 
-def read_warehouse(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
-    """ONE reader over every warehouse layout this package writes —
-    callers never need to know whether a table was batch-written,
-    streamed, or compacted:
+def read_warehouse(
+    spark: SparkSession,
+    path: str,
+    fmt: str = "parquet",
+    version: int | None = None,
+) -> DataFrame:
+    """ONE reader over every warehouse layout — callers never need to
+    know whether a table was batch-written, streamed, or compacted:
 
-    - atomic batch layout (``_CURRENT`` + ``v=N``): resolve the pointer,
-      read the committed snapshot;
+    - ``version=N`` pins a time-travel read of retained snapshot
+      ``v=N`` alone (a pruned or incomplete one raises
+      ``FileNotFoundError``). Streamed epochs are not part of a pinned
+      snapshot;
+    - pointer layout (``_CURRENT`` + ``v=N``): read the committed
+      snapshot, unioned with any ``epoch=K`` dirs NEWER than the
+      pointer's compacted-through watermark — epochs at or below it were
+      folded into the snapshot, and a crash-replayed micro-batch that
+      re-creates such a dir is correctly ignored (exactly-once survives
+      compaction);
     - streamed layout (``epoch=K`` micro-batch dirs from
       streaming/file_stream.py): union the epoch dirs (the epoch id is a
       commit artifact like ``v=``, so it is NOT a data column here; read
       the path directly with Spark partition discovery if you want it);
-    - compacted-streaming layout (pointer + ``through=K`` + live
-      epochs): the snapshot unioned with epochs NEWER than the
-      compacted-through watermark — epochs at or below it were folded
-      into the snapshot, and a crash-replayed micro-batch that re-creates
-      such a dir is correctly ignored (exactly-once survives
-      compaction);
-    - flat legacy layout: plain directory read.
+    - flat layout written by another tool: plain directory read.
 
     A pointerless directory that DOES contain ``v=N`` snapshots is
     REFUSED: a flat read would union every retained snapshot and
     silently return duplicated/stale rows (the round-7 ADVICE hazard).
-    Use ``read_warehouse_versioned`` for explicit time travel there.
 
     Internal layout columns (compaction's ``_compact_group``) are
     dropped; user partition columns pass through."""
     import functools
-    import os
-
-    ver, through = _pointer_info(path)
-    epochs = _list_epochs(path)
 
     def _read_dir(d: str) -> DataFrame:
         df = spark.read.format(fmt).load(d)
         return df.drop(*[c for c in _LAYOUT_COLS if c in df.columns])
 
-    if ver is not None:
-        target = _resolve_current(path)
-        if target is None:
-            raise FileNotFoundError(
-                f"_CURRENT points at v={ver} under {path}, but that "
-                "snapshot directory is missing"
-            )
-        snap = _read_dir(target)
-        live = [d for k, d in epochs if through is None or k > through]
-        if not live:
-            return snap
+    if version is not None:
+        return _read_dir(_snapshot_dir(path, version))
+    ver, through = _pointer_info(path)
+    dirs = [] if ver is None else [_snapshot_dir(path, ver)]
+    dirs += [d for k, d in _list_epochs(path) if through is None or k > through]
+    if dirs:
         return functools.reduce(
-            lambda a, b: a.unionByName(b), [snap] + [_read_dir(d) for d in live]
-        )
-    if epochs:
-        return functools.reduce(
-            lambda a, b: a.unionByName(b), [_read_dir(d) for _, d in epochs]
+            lambda a, b: a.unionByName(b), [_read_dir(d) for d in dirs]
         )
     if _list_versions(path):
         raise ValueError(
             f"{path} holds v=N snapshot dirs but no _CURRENT pointer — a "
             "flat read would union every retained snapshot and return "
-            "duplicated/stale rows. Use read_warehouse_versioned(spark, "
-            "path[, version]) to pick a snapshot explicitly."
+            "duplicated/stale rows. Use read_warehouse(spark, path, "
+            "version=N) to pick a snapshot explicitly."
         )
     return spark.read.format(fmt).load(path)
-
-
-# ---------------------------------------------------------------------------
-# Versioned warehouse (parquet-native time travel)
-# ---------------------------------------------------------------------------
-#
-# The reference keeps history via GCS bucket versioning on the warehouse
-# bucket (`terraform/main.tf:36-54`): every WRITE_TRUNCATE leaves the prior
-# object generation readable. delta-spark is not installable in this
-# environment (no package, and the JVM would need the delta-core jar), so
-# the same semantics are provided parquet-native: each overwrite lands in a
-# fresh `v=N` subdirectory and readers can time-travel to any retained N.
-# Version discovery is directory listing; on an object store you'd keep a
-# tiny JSON manifest instead (one RPC vs a LIST) — the API is the same.
-
-
-def _list_versions(path: str) -> list[int]:
-    import os
-    import re
-
-    if not os.path.isdir(path):
-        return []
-    out = []
-    for name in os.listdir(path):
-        m = re.fullmatch(r"v=(\d+)", name)
-        if m and os.path.isdir(os.path.join(path, name)):
-            out.append(int(m.group(1)))
-    return sorted(out)
-
-
-def write_warehouse_versioned(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    fmt: str = "parquet",
-    keep_versions: int | None = None,
-) -> int:
-    """Truncate-overwrite with history: write a new immutable ``v=N``
-    snapshot (N = prior latest + 1) and return N. ``keep_versions`` prunes
-    the oldest snapshots past that count (None = keep all, the GCS
-    bucket-versioning default)."""
-    import os
-    import shutil
-
-    new_v = _claim_version(path)  # exclusive claim: racing writers get distinct N
-    write_warehouse(
-        df, os.path.join(path, f"v={new_v}"), partition_by, fmt, atomic=False
-    )
-    if keep_versions is not None:
-        # keep window over COMPLETE snapshots only (same rule as
-        # _prune_versions): a racing writer's in-flight v=M must neither
-        # be deleted out from under it nor occupy a newest-N slot.
-        complete = [
-            v
-            for v in _list_versions(path)
-            if os.path.exists(os.path.join(path, f"v={v}", "_SUCCESS"))
-        ]
-        for old in complete[:-keep_versions]:
-            shutil.rmtree(os.path.join(path, f"v={old}"), ignore_errors=True)
-            try:
-                os.remove(os.path.join(path, f"{_CLAIM_PREFIX}{old}"))
-            except OSError:
-                pass
-    return new_v
-
-
-def read_warehouse_versioned(
-    spark: SparkSession,
-    path: str,
-    version: int | None = None,
-    fmt: str = "parquet",
-) -> DataFrame:
-    """Read the latest snapshot, or time-travel to ``version``."""
-    import os
-
-    versions = _list_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no versions under {path}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise FileNotFoundError(f"version {v} not in {versions} under {path}")
-    return read_warehouse(spark, os.path.join(path, f"v={v}"), fmt)
 
 
 # ---------------------------------------------------------------------------
@@ -500,7 +433,6 @@ def write_bucketed(
     size (~128-256 MB) at the table's full scale and keep it stable
     across tables that join — a mismatch silently reintroduces the
     shuffle on one side."""
-    import os
     import shutil
 
     if single_file_buckets:

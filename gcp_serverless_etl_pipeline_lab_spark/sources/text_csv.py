@@ -11,9 +11,10 @@ first-occurrence-wins dedup downstream.
 Scale note: ``monotonically_increasing_id`` is assigned per input split in
 split order, so ids are monotone in file order for a SINGLE-file text scan
 — no shuffle needed to establish arrival order. For MULTI-file globs the
-scan packs splits largest-first, so the raw id order follows file SIZE,
-not file name: pass ``stable_multifile=True`` to get the deterministic
-(lexicographic file name, line offset) order instead.
+scan packs splits largest-first, so the raw id order would follow file
+SIZE, not file name; the reader therefore switches to the deterministic
+(lexicographic file name, line offset) order whenever the scan resolved
+more than one file.
 """
 
 from __future__ import annotations
@@ -31,15 +32,13 @@ LINE_ID_COL = "_line_id"
 _FILE_RANK_SHIFT = 40
 
 
-def read_raw_lines(
-    spark: SparkSession, path: str, stable_multifile: bool = False
-) -> DataFrame:
+def read_raw_lines(spark: SparkSession, path: str) -> DataFrame:
     """Scan a text file → DataFrame[value: string, _line_id: long].
 
-    Default: raw scan order (exact file order for a single input file —
-    the reference's contract, one CSV per run). ``stable_multifile=True``
-    makes ``_line_id`` a total order of (file name ASC, position in file)
-    so first-wins dedup is deterministic across any glob:
+    One input file (the reference's contract, one CSV per run): raw scan
+    order, which is exact file order. More than one file (a directory or
+    glob): ``_line_id`` is a total order of (file name ASC, position in
+    file) so first-wins dedup is deterministic across any glob:
 
     - per-file position is ``row_number`` over (file, split order) — exact
       because Spark's size-descending split sort is STABLE, so equal-size
@@ -53,16 +52,16 @@ def read_raw_lines(
       file, the standard contract for file-granular arrival order).
     """
     raw = spark.read.text(path)
-    if not stable_multifile:
+    # inputFiles() returns the resolved file URIs in the same form
+    # input_file_name() emits (file source), so the rank join keys align.
+    files = sorted(raw.inputFiles())
+    if len(files) <= 1:
         return raw.withColumn(LINE_ID_COL, F.monotonically_increasing_id())
     df = raw.select(
         LINE_COL,
         F.input_file_name().alias("_file"),
         F.monotonically_increasing_id().alias("_mono"),
     )
-    # inputFiles() returns the resolved file URIs in the same form
-    # input_file_name() emits (file source), so the rank join keys align.
-    files = sorted(raw.inputFiles())
     ranks = spark.createDataFrame(
         [(f, i) for i, f in enumerate(files)], "_file string, _frank long"
     )

@@ -10,7 +10,6 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from gcp_serverless_etl_pipeline_lab_spark import sinks
 from gcp_serverless_etl_pipeline_lab_spark.operators.compaction import (
     compact_epochs,
     list_part_files,
@@ -18,7 +17,6 @@ from gcp_serverless_etl_pipeline_lab_spark.operators.compaction import (
 from gcp_serverless_etl_pipeline_lab_spark.sinks import (
     read_warehouse,
     write_warehouse,
-    write_warehouse_versioned,
 )
 
 
@@ -55,12 +53,12 @@ def test_reader_refuses_pointerless_versioned_layout(spark, tmp_path):
     retained snapshot (duplicated/stale rows) — the round-7 ADVICE
     hazard. The unified reader refuses instead."""
     path = str(tmp_path / "wh")
-    write_warehouse_versioned(_df(spark, [1]), path)
-    write_warehouse_versioned(_df(spark, [1, 2]), path)
-    with pytest.raises(ValueError, match="read_warehouse_versioned"):
+    _df(spark, [1]).write.parquet(os.path.join(path, "v=0"))
+    _df(spark, [1, 2]).write.parquet(os.path.join(path, "v=1"))
+    with pytest.raises(ValueError, match=r"version=N"):
         read_warehouse(spark, path)
     # explicit time travel still works
-    got = sinks.read_warehouse_versioned(spark, path)
+    got = read_warehouse(spark, path, version=1)
     assert sorted(r.id for r in got.collect()) == [1, 2]
 
 

@@ -1,16 +1,19 @@
 """Deterministic multi-file arrival order: first-wins dedup must follow
 (file name, line) order regardless of file sizes — Spark's split packing
-is size-descending, so without the stable path a larger later-named file
-would be scanned first."""
+is size-descending, so under raw scan order a larger later-named file
+would be scanned first. read_raw_lines takes the (file name, line) path
+whenever the scan resolves more than one file."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from gcp_serverless_etl_pipeline_lab_spark.operators.transform import (
-    split_clean_errors,
+    finalize_clean,
+    finalize_errors,
 )
 from gcp_serverless_etl_pipeline_lab_spark.operators.validate import annotate
+from gcp_serverless_etl_pipeline_lab_spark.pipeline import run_sales_etl
 from gcp_serverless_etl_pipeline_lab_spark.sources.text_csv import (
     LINE_ID_COL,
     read_raw_lines,
@@ -30,7 +33,7 @@ def _write_two_files(tmp_path):
 
 def test_stable_multifile_line_ids_follow_filename_order(spark, tmp_path):
     d = _write_two_files(tmp_path)
-    raw = read_raw_lines(spark, str(d), stable_multifile=True)
+    raw = read_raw_lines(spark, str(d))
     # file rank lives in the id's high bits; a.csv (1 line, smaller —
     # size-ordered scans would put it LAST) must still get rank 0
     per_rank = {
@@ -51,13 +54,15 @@ def test_stable_multifile_line_ids_follow_filename_order(spark, tmp_path):
 
 
 def test_stable_order_survives_multi_split_files(spark, tmp_path):
-    """Pin the stable path's one Spark-internal assumption: splits of a
+    """Pin the reader's one Spark-internal assumption: splits of a
     single file keep offset order under the size-descending split sort
     (equal-size splits sort STABLY; a file's smaller tail split sorts after
-    its full splits). Force a multi-split read by shrinking
-    maxPartitionBytes and assert within-file positions equal true line
-    order — if a future Spark version reorders splits, this fails loudly
-    rather than silently corrupting first-wins dedup."""
+    its full splits). A single file takes the raw-order path, and the
+    multi-file path's within-file positions rest on the same split order.
+    Force a multi-split read by shrinking maxPartitionBytes and assert the
+    line ids follow true line order — if a future Spark version reorders
+    splits, this fails loudly rather than silently corrupting first-wins
+    dedup."""
     d = tmp_path / "split"
     d.mkdir()
     n = 2000
@@ -68,10 +73,9 @@ def test_stable_order_survives_multi_split_files(spark, tmp_path):
     old = spark.conf.get(key)
     try:
         spark.conf.set(key, "4096")  # ~33-byte lines -> dozens of splits
-        # the scan itself must really split (the stable df's own partition
-        # count is post-shuffle and AQE-coalesced, so check the raw read)
+        # the scan itself must really split
         assert spark.read.text(str(d)).rdd.getNumPartitions() > 4
-        raw = read_raw_lines(spark, str(d), stable_multifile=True)
+        raw = read_raw_lines(spark, str(d))
         rows = raw.orderBy(LINE_ID_COL).collect()
     finally:
         spark.conf.set(key, old)
@@ -80,8 +84,9 @@ def test_stable_order_survives_multi_split_files(spark, tmp_path):
 
 def test_stable_multifile_first_wins_is_filename_deterministic(spark, tmp_path):
     d = _write_two_files(tmp_path)
-    raw = read_raw_lines(spark, str(d), stable_multifile=True)
-    clean, errors = split_clean_errors(annotate(raw), persist=False)
+    raw = read_raw_lines(spark, str(d))
+    annotated = annotate(raw)
+    clean, errors = finalize_clean(annotated), finalize_errors(annotated)
     winner = clean.filter(F.col("id") == "100").collect()
     assert len(winner) == 1
     assert winner[0]["product"] == "FromA"  # a.csv wins by name, not size
@@ -89,3 +94,13 @@ def test_stable_multifile_first_wins_is_filename_deterministic(spark, tmp_path):
     assert len(dup) == 1
     assert "FromB" in dup[0]["row"]
     assert clean.count() == 501  # 1 winner + 500 pad rows
+
+
+def test_run_sales_etl_over_directory_is_filename_deterministic(spark, tmp_path):
+    d = _write_two_files(tmp_path)
+    res = run_sales_etl(spark, str(d))
+    try:
+        winner = res.clean.filter(F.col("id") == "100").collect()
+    finally:
+        res.unpersist()
+    assert [r["product"] for r in winner] == ["FromA"]

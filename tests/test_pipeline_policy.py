@@ -93,7 +93,8 @@ def test_staged_split_matches_persist_split(spark, tmp_path):
     """The write-once staging path must produce byte-identical clean and
     error partitions to the persist path."""
     from gcp_serverless_etl_pipeline_lab_spark.operators.transform import (
-        split_clean_errors,
+        finalize_clean,
+        finalize_errors,
         split_clean_errors_staged,
     )
     from gcp_serverless_etl_pipeline_lab_spark.operators.validate import annotate
@@ -102,7 +103,7 @@ def test_staged_split_matches_persist_split(spark, tmp_path):
     )
 
     annotated = annotate(read_raw_lines(spark, MESSY_CSV))
-    c1, e1 = split_clean_errors(annotated, persist=False)
+    c1, e1 = finalize_clean(annotated), finalize_errors(annotated)
     c2, e2 = split_clean_errors_staged(annotated, str(tmp_path / "staging"))
     assert c2.schema == c1.schema
     assert sorted(map(tuple, c1.collect())) == sorted(map(tuple, c2.collect()))

@@ -9,7 +9,8 @@ from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from gcp_serverless_etl_pipeline_lab_spark.operators.transform import (
-    split_clean_errors,
+    finalize_clean,
+    finalize_errors,
 )
 from gcp_serverless_etl_pipeline_lab_spark.operators.validate import annotate
 from gcp_serverless_etl_pipeline_lab_spark.sources.text_csv import (
@@ -28,8 +29,8 @@ def _run_chain(spark, lines):
     df = spark.createDataFrame(
         [(i, s) for i, s in enumerate(lines)], [LINE_ID_COL, LINE_COL]
     )
-    clean, errors = split_clean_errors(annotate(df), persist=False)
-    return clean.collect(), errors.collect()
+    annotated = annotate(df)
+    return finalize_clean(annotated).collect(), finalize_errors(annotated).collect()
 
 
 def _reference_row(line: str):

@@ -54,8 +54,13 @@ def test_version_pruning_keeps_newest(spark, tmp_path):
     for i in range(4):
         write_warehouse(_df(spark, [i], f"t{i}"), path, keep_versions=2)
     kept = sorted(d for d in os.listdir(path) if d.startswith("v="))
-    assert len(kept) == 2
+    assert kept == ["v=2", "v=3"]
     assert [r["id"] for r in read_warehouse(spark, path).collect()] == [3]
+    # keep_versions=None keeps every snapshot (bucket-versioning default)
+    write_warehouse(_df(spark, [4], "t4"), path, keep_versions=None)
+    kept = sorted(d for d in os.listdir(path) if d.startswith("v="))
+    assert kept == ["v=2", "v=3", "v=4"]
+    assert [r["id"] for r in read_warehouse(spark, path, version=2).collect()] == [2]
 
 
 def test_partitioned_atomic_write_prunes_at_read(spark, tmp_path):
@@ -72,8 +77,7 @@ def test_partitioned_atomic_write_prunes_at_read(spark, tmp_path):
 
 def test_legacy_flat_layout_still_reads(spark, tmp_path):
     path = str(tmp_path / "flat")
-    write_warehouse(_df(spark, [5, 6], "x"), path, atomic=False)
-    assert not os.path.exists(os.path.join(path, "_CURRENT"))
+    _df(spark, [5, 6], "x").write.parquet(path)  # written by another tool
     assert sorted(r["id"] for r in read_warehouse(spark, path).collect()) == [5, 6]
 
 
@@ -94,7 +98,7 @@ def test_racing_writers_distinct_versions_forward_pointer(spark, tmp_path):
     # A finishes later: its snapshot lands, but the flip must be a no-op
     _df(spark, [1], "a").write.parquet(os.path.join(path, f"v={va}"))
     sinks._flip_pointer(path, va)
-    assert sinks._pointer_version(path) == vb
+    assert sinks._pointer_info(path)[0] == vb
     got = read_warehouse(spark, path).collect()
     assert [r["id"] for r in got] == [2] and got[0]["tag"] == "b"
 

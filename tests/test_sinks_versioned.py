@@ -1,23 +1,26 @@
-"""Versioned warehouse (parquet-native time travel) + partitioned
-dead-letter sink.
+"""Warehouse time travel (pinned-version reads of retained snapshots) +
+partitioned dead-letter sink.
 
 The reference's warehouse history comes from GCS bucket versioning on the
 target bucket (`terraform/main.tf:36-54`) — every WRITE_TRUNCATE leaves the
 prior generation readable. delta-spark is not installable here (documented
-in COVERAGE.md), so sinks.write_warehouse_versioned provides the same
-semantics with immutable `v=N` parquet snapshots.
+in COVERAGE.md), so sinks.write_warehouse keeps immutable `v=N` parquet
+snapshots behind its `_CURRENT` pointer and sinks.read_warehouse(version=)
+reads any retained one.
 """
 
 from __future__ import annotations
 
 import os
 
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from gcp_serverless_etl_pipeline_lab_spark.sinks import (
-    read_warehouse_versioned,
+    read_warehouse,
     write_dead_letter,
-    write_warehouse_versioned,
+    write_warehouse,
 )
 
 
@@ -29,44 +32,54 @@ def _df(spark, values, tag):
 
 def test_versioned_overwrite_and_time_travel(spark, tmp_path):
     path = str(tmp_path / "wh")
-    v0 = write_warehouse_versioned(_df(spark, [1, 2, 3], "a"), path)
-    v1 = write_warehouse_versioned(_df(spark, [4, 5], "b"), path)
+    v0 = write_warehouse(_df(spark, [1, 2, 3], "a"), path)
+    v1 = write_warehouse(_df(spark, [4, 5], "b"), path)
     assert (v0, v1) == (0, 1)
 
     # Latest read sees only the newest truncate-overwrite snapshot.
-    latest = read_warehouse_versioned(spark, path)
+    latest = read_warehouse(spark, path)
     assert sorted(r.id for r in latest.collect()) == [4, 5]
     assert {r.tag for r in latest.collect()} == {"b"}
 
     # Time travel to the prior version — the reference's bucket-versioning
     # "read the previous generation" analogue.
-    prior = read_warehouse_versioned(spark, path, version=0)
+    prior = read_warehouse(spark, path, version=0)
     assert sorted(r.id for r in prior.collect()) == [1, 2, 3]
 
 
 def test_versioned_retention_prunes_oldest(spark, tmp_path):
     path = str(tmp_path / "wh")
     for i in range(4):
-        write_warehouse_versioned(
-            _df(spark, [i], "t"), path, keep_versions=2
-        )
+        write_warehouse(_df(spark, [i], "t"), path, keep_versions=2)
     kept = sorted(d for d in os.listdir(path) if d.startswith("v="))
     assert kept == ["v=2", "v=3"]
-    # Latest still reads; pruned version raises.
-    assert read_warehouse_versioned(spark, path).collect()[0].id == 3
-    try:
-        read_warehouse_versioned(spark, path, version=0)
-        raise AssertionError("expected FileNotFoundError for pruned version")
-    except FileNotFoundError:
+    # Latest still reads; a pinned read of a pruned version raises.
+    assert read_warehouse(spark, path).collect()[0].id == 3
+    with pytest.raises(FileNotFoundError):
+        read_warehouse(spark, path, version=0)
+
+
+def test_incomplete_snapshot_is_invisible_to_reads(spark, tmp_path):
+    """A writer has claimed v=1 and created its dir but not finished it
+    (no _SUCCESS). The unpinned read stays on committed v=0, and a pinned
+    read of v=1 raises instead of failing inside Spark's schema
+    inference."""
+    path = str(tmp_path / "wh")
+    write_warehouse(_df(spark, [1, 2, 3], "a"), path)
+    with open(os.path.join(path, ".claim-v1"), "w"):
         pass
+    os.makedirs(os.path.join(path, "v=1", "_temporary"))
+    assert sorted(r.id for r in read_warehouse(spark, path).collect()) == [1, 2, 3]
+    with pytest.raises(FileNotFoundError, match="v=1"):
+        read_warehouse(spark, path, version=1)
 
 
 def test_versioned_read_missing_path(spark, tmp_path):
-    try:
-        read_warehouse_versioned(spark, str(tmp_path / "nope"))
-        raise AssertionError("expected FileNotFoundError")
-    except FileNotFoundError:
-        pass
+    missing = str(tmp_path / "nope")
+    with pytest.raises(FileNotFoundError):
+        read_warehouse(spark, missing, version=0)
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        read_warehouse(spark, missing)
 
 
 def test_dead_letter_partitioned_prunes_at_read(spark, tmp_path):
