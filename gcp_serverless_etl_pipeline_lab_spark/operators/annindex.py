@@ -49,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import commit
 from ..functions.local_frames import literal_frame
 
 from .similarity import (
@@ -58,8 +59,6 @@ from .similarity import (
     _sq_dist_expr,
     kmeans_centroids,
 )
-
-_MANIFEST = "_MANIFEST.json"
 
 # the ANN membership artifact (round-12 verdict task 6): one row per
 # indexed vector, hive-partitioned by vb = pmod(vec_id, VEC_BUCKETS) —
@@ -166,9 +165,6 @@ def build_ann_index(
     corpus under ``path``. ``sample_rate`` forwards to training (0.1 =
     the scale-safe hash-Bernoulli sample; 1.0 = the full-corpus model the
     DuckDB oracles mirror)."""
-    import json
-    import os
-
     trained_sr: float | None = None
     if model is None:
         model = kmeans_centroids(
@@ -176,10 +172,10 @@ def build_ann_index(
         )
         trained_sr = float(sample_rate)
     cell_counts = _write_vectors_gen(corpus, path, 0, model)
-    _write_ann_manifest(
+    commit.write_manifest(
         path,
         {
-            "version": 2,
+            "version": commit.MANIFEST_VERSION,
             "dim": dim,
             "model": [[cid, vec] for cid, vec in model],
             # training coverage (round-12 verdict task 1): what fraction
@@ -263,25 +259,6 @@ def _write_veclist_gen(vectors: DataFrame, path: str, gen: int) -> None:
     )
 
 
-def _write_ann_manifest(path: str, man: dict) -> None:
-    import json
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    tmp = os.path.join(path, _MANIFEST + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(man, fh)
-    os.replace(tmp, os.path.join(path, _MANIFEST))
-
-
-def _load_ann_manifest(path: str) -> dict:
-    import json
-    import os
-
-    with open(os.path.join(path, _MANIFEST)) as fh:
-        return json.load(fh)
-
-
 def append_ann_index(
     spark,
     increment: DataFrame,
@@ -309,26 +286,15 @@ def append_ann_index(
     under the superseded centroids, and committing them would leave
     queries routing by the new model silently missing them. The raise is
     retriable: a re-run re-reads the new model and re-assigns."""
-    import os
-
-    from .incremental import _GENCLAIM_PREFIX, _claim_generation, _manifest_lock
-
-    man = _load_ann_manifest(path)
-    if man.get("version", 1) < 2:
-        raise ValueError(
-            f"ANN index at {path} predates generations; rebuild with "
-            "build_ann_index to enable appends"
-        )
-    applied = {
-        g.get("increment_id") for g in man["generations"]
-    } | set(man.get("compacted_increments", []))
+    man = commit.load_manifest(path)
+    applied = commit.applied_increments(man)
     if increment_id is not None and increment_id in applied:
         return False
     if increment.limit(1).count() == 0:
         return False
     model = [(int(cid), [float(x) for x in vec]) for cid, vec in man["model"]]
     model_epoch = int(man.get("model_epoch", 0))
-    gen = _claim_generation(path)  # manifests share the generations shape
+    gen = commit.claim_generation(path)
     cell_counts = _write_vectors_gen(increment, path, gen, model)
     # the increment's own quantization error against the PINNED model —
     # one aggregate over the increment (cost tracks increment size),
@@ -336,16 +302,11 @@ def append_ann_index(
     # data has drifted away from the centroids (recall decays silently
     # otherwise; the model is never retrained by appends)
     drift_msd = _mean_assign_msd(increment, model)
-    with _manifest_lock(path):
-        cur = _load_ann_manifest(path)
-        applied_now = {
-            g.get("increment_id") for g in cur["generations"]
-        } | set(cur.get("compacted_increments", []))
+    with commit.manifest_lock(path):
+        cur = commit.load_manifest(path)
+        applied_now = commit.applied_increments(cur)
         if increment_id is not None and increment_id in applied_now:
-            try:
-                os.remove(os.path.join(path, f"{_GENCLAIM_PREFIX}{gen}"))
-            except OSError:
-                pass
+            commit.release(path, commit.GENCLAIM_PREFIX, gen)
             return False
         if int(cur.get("model_epoch", 0)) != model_epoch:
             # a retrain flipped the model between our model read and this
@@ -372,17 +333,14 @@ def append_ann_index(
                 "cell_counts": cell_counts,
             }
         )
-        _write_ann_manifest(path, cur)
-    try:
-        os.remove(os.path.join(path, f"{_GENCLAIM_PREFIX}{gen}"))
-    except OSError:
-        pass
+        commit.write_manifest(path, cur)
+    commit.release(path, commit.GENCLAIM_PREFIX, gen)
     return True
 
 
 def load_ann_model(path: str) -> tuple[int, list[tuple[int, list[float]]]]:
     """(dim, centroid model) from the index manifest."""
-    man = _load_ann_manifest(path)
+    man = commit.load_manifest(path)
     return int(man["dim"]), [
         (int(cid), [float(x) for x in vec]) for cid, vec in man["model"]
     ]
@@ -390,20 +348,14 @@ def load_ann_model(path: str) -> tuple[int, list[tuple[int, list[float]]]]:
 
 def _read_vectors(spark, path: str, man: dict) -> DataFrame:
     """Union of the committed vector generations (manifest-listed only —
-    crashed appends' orphans are never read). v1 indexes (pre-append
-    flat layout) read the bare ``vectors/`` dir. Each v2 slice carries
-    its generation number as ``_gen`` (a literal) so tombstone masking
-    can scope deletes to the generations they covered (round 13 — a
-    vec_id re-appended after its delete lands in a higher generation
-    and serves unmasked)."""
+    crashed appends' orphans are never read). Each slice carries its
+    generation number as ``_gen`` (a literal) so tombstone masking can
+    scope deletes to the generations they covered (round 13 — a vec_id
+    re-appended after its delete lands in a higher generation and serves
+    unmasked)."""
     import os
 
     root = os.path.join(path, "vectors")
-    if man.get("version", 1) < 2:
-        d = root
-        return spark.read.option("basePath", d).parquet(d).withColumn(
-            "_gen", F.lit(0)
-        )
     out = None
     for g in man["generations"]:
         d = os.path.join(root, f"gen={g['gen']}")
@@ -470,17 +422,9 @@ def delete_from_ann_index(
     is a no-op that does not consume the id."""
     import os
 
-    from .incremental import _GENCLAIM_PREFIX, _claim_generation, _manifest_lock
 
-    man = _load_ann_manifest(path)
-    if man.get("version", 1) < 2:
-        raise ValueError(
-            f"ANN index at {path} predates generations; rebuild with "
-            "build_ann_index to enable deletes"
-        )
-    applied = {
-        t.get("increment_id") for t in man.get("tombstones", [])
-    } | set(man.get("applied_deletes", []))
+    man = commit.load_manifest(path)
+    applied = commit.applied_deletes(man)
     if increment_id is not None and increment_id in applied:
         return False
     want = ids.select(
@@ -489,7 +433,7 @@ def delete_from_ann_index(
     member = indexed_vec_ids(spark, path, want)
     if member.limit(1).count() == 0:
         return False
-    gen = _claim_generation(path)
+    gen = commit.claim_generation(path)
     (
         member.withColumn("vb", _vb("vec_id"))
         .repartition(1, F.col("vb"))
@@ -497,16 +441,11 @@ def delete_from_ann_index(
         .partitionBy("vb")
         .parquet(os.path.join(path, "tombstones", f"gen={gen}"))
     )
-    with _manifest_lock(path):
-        cur = _load_ann_manifest(path)
-        applied_now = {
-            t.get("increment_id") for t in cur.get("tombstones", [])
-        } | set(cur.get("applied_deletes", []))
+    with commit.manifest_lock(path):
+        cur = commit.load_manifest(path)
+        applied_now = commit.applied_deletes(cur)
         if increment_id is not None and increment_id in applied_now:
-            try:
-                os.remove(os.path.join(path, f"{_GENCLAIM_PREFIX}{gen}"))
-            except OSError:
-                pass
+            commit.release(path, commit.GENCLAIM_PREFIX, gen)
             return False
         if {g["gen"] for g in cur["generations"]} != {
             g["gen"] for g in man["generations"]
@@ -527,25 +466,25 @@ def delete_from_ann_index(
                 "max_gen": max(g["gen"] for g in cur["generations"]),
             }
         )
-        _write_ann_manifest(path, cur)
-    try:
-        os.remove(os.path.join(path, f"{_GENCLAIM_PREFIX}{gen}"))
-    except OSError:
-        pass
+        commit.write_manifest(path, cur)
+    commit.release(path, commit.GENCLAIM_PREFIX, gen)
     return True
 
 
-def _read_veclist(spark, path: str, man: dict) -> DataFrame | None:
-    """Union of the committed veclist generations, or None when any
-    listed generation predates the artifact (pre-round-13 index) —
-    callers run ``_materialize_missing_veclists`` once and re-read."""
+def _read_veclist(spark, path: str, man: dict) -> DataFrame:
+    """Union of the committed veclist generations. Every writer lists a
+    generation only after its veclist landed, so a missing dir is a
+    damaged index: ``FileNotFoundError`` names it."""
     import os
 
     out = None
     for g in man["generations"]:
         d = os.path.join(path, "veclist", f"gen={g['gen']}")
         if not os.path.isdir(d):
-            return None
+            raise FileNotFoundError(
+                f"ANN index at {path} lists generation {g['gen']} but has "
+                f"no veclist/gen={g['gen']} dir; rebuild the index"
+            )
         part = (
             spark.read.schema(_VECLIST_SCHEMA)
             .option("basePath", d)
@@ -554,45 +493,6 @@ def _read_veclist(spark, path: str, man: dict) -> DataFrame | None:
         )
         out = part if out is None else out.unionByName(part)
     return out
-
-
-def _materialize_missing_veclists(spark, path: str) -> list[int]:
-    """One-time in-place upgrade of a pre-round-13 ANN index: derive the
-    veclist of every listed generation lacking one from that
-    generation's own vectors (distinct vec_id — one narrow-column scan
-    per legacy generation, once ever). Same discipline as the lexical
-    doclist upgrade: serialized under the manifest lock, temp + atomic
-    rename so a listed generation's dir is never readable half-written.
-    Unlike the doclist there is no blindness caveat — every indexed
-    vector has a vectors/ row, so the derived artifact is complete."""
-    import os
-    import shutil
-
-    from .incremental import _manifest_lock
-
-    with _manifest_lock(path):
-        man = _load_ann_manifest(path)
-        missing = [
-            g["gen"]
-            for g in man["generations"]
-            if not os.path.isdir(os.path.join(path, "veclist", f"gen={g['gen']}"))
-        ]
-        for gen in missing:
-            d = os.path.join(path, "vectors", f"gen={gen}")
-            vec = spark.read.option("basePath", d).parquet(d)
-            tmp = os.path.join(path, "veclist", f".tmp-gen={gen}")
-            shutil.rmtree(tmp, ignore_errors=True)
-            (
-                vec.select(F.col("vec_id").cast("long").alias("vec_id"))
-                .distinct()
-                .withColumn("vb", _vb("vec_id"))
-                .repartition(VEC_BUCKETS, F.col("vb"))
-                .write.mode("overwrite")
-                .partitionBy("vb")
-                .parquet(tmp)
-            )
-            os.rename(tmp, os.path.join(path, "veclist", f"gen={gen}"))
-    return missing
 
 
 def indexed_vec_ids(
@@ -614,12 +514,7 @@ def indexed_vec_ids(
     ``generations`` restricts the probe to an explicit entry subset
     (the nightly consistency check scopes to tonight's generations);
     entries must come from this index's manifest."""
-    man = _load_ann_manifest(path)
-    if man.get("version", 1) < 2:
-        raise ValueError(
-            f"ANN index at {path} predates generations; rebuild with "
-            "build_ann_index to enable membership probes"
-        )
+    man = commit.load_manifest(path)
     gens = [
         g
         for g in (generations if generations is not None else man["generations"])
@@ -631,9 +526,6 @@ def indexed_vec_ids(
         return want.limit(0)
     sub = dict(man, generations=gens)
     vl = _read_veclist(spark, path, sub)
-    if vl is None:
-        _materialize_missing_veclists(spark, path)
-        vl = _read_veclist(spark, path, sub)
     vbs = [r["vb"] for r in want.select(_vb("vec_id").alias("vb")).distinct().collect()]
     if len(vbs) < VEC_BUCKETS:
         vl = vl.filter(F.col("vb").isin(vbs))
@@ -692,7 +584,7 @@ def query_ann_index(
     ANDs with the per-query one)."""
     from pyspark.sql import Window
 
-    man = _load_ann_manifest(path)
+    man = commit.load_manifest(path)
     dim, model = load_ann_model(path)
     nprobe_eff = _effective_nprobe(man, nprobe, auto_escalate)
     q = queries.select(
@@ -809,22 +701,11 @@ def compact_ann_index(
     the rebuild flag."""
     import os
 
-    from .incremental import (
-        _GENCLAIM_PREFIX,
-        _claim_generation,
-        _manifest_lock,
-        _split_fold_slice,
-    )
 
-    man = _load_ann_manifest(path)
-    if man.get("version", 1) < 2:
-        raise ValueError(
-            f"ANN index at {path} predates generations; rebuild with "
-            "build_ann_index (compaction is a no-op for flat layouts)"
-        )
+    man = commit.load_manifest(path)
     entries = list(man["generations"])
     old_gens = [g["gen"] for g in entries]
-    fold_entries, keep_entries = _split_fold_slice(
+    fold_entries, keep_entries = commit.split_fold_slice(
         entries, max_generations_to_fold
     )
     fold_man = dict(man, generations=fold_entries)
@@ -844,7 +725,7 @@ def compact_ann_index(
         for t in man.get("tombstones", [])
         if t["gen"] in absorbed_gens and t.get("increment_id") is not None
     }
-    gen = _claim_generation(path)
+    gen = commit.claim_generation(path)
     vec = _mask_deleted_vecs(_read_vectors(spark, path, fold_man), tomb)
     _fold_dir = os.path.join(path, "vectors", f"gen={gen}")
     (
@@ -856,14 +737,9 @@ def compact_ann_index(
     )
     fold_cell_counts = _read_gen_cell_counts(spark, _fold_dir)
     # fold the membership artifact alongside — from the folded slice's
-    # own veclists (narrow scan; materialized first for pre-round-13
-    # generations so the fold never propagates the legacy state)
-    vl = _read_veclist(spark, path, fold_man)
-    if vl is None:
-        _materialize_missing_veclists(spark, path)
-        vl = _read_veclist(spark, path, fold_man)
+    # own veclists (narrow scan)
     (
-        _mask_deleted_vecs(vl, tomb)
+        _mask_deleted_vecs(_read_veclist(spark, path, fold_man), tomb)
         .select("vec_id", "vb")
         .repartition(VEC_BUCKETS, F.col("vb"))
         .write.mode("overwrite")
@@ -894,8 +770,8 @@ def compact_ann_index(
         for g in fold_entries
         if g.get("increment_id") is not None
     ]
-    with _manifest_lock(path):
-        cur = _load_ann_manifest(path)
+    with commit.manifest_lock(path):
+        cur = commit.load_manifest(path)
         if {g["gen"] for g in cur["generations"]} != set(old_gens):
             raise RuntimeError(
                 f"concurrent append landed during compaction of {path}; "
@@ -927,11 +803,8 @@ def compact_ann_index(
         if carried:
             entry["carried_max_drift_msd"] = max(carried)
         cur["generations"] = keep_entries + [entry]
-        _write_ann_manifest(path, cur)
-    try:
-        os.remove(os.path.join(path, f"{_GENCLAIM_PREFIX}{gen}"))
-    except OSError:
-        pass
+        commit.write_manifest(path, cur)
+    commit.release(path, commit.GENCLAIM_PREFIX, gen)
     return gen
 
 
@@ -976,7 +849,7 @@ def serving_overlap_probe(
     never on the serving path. Returns None for an empty index."""
     from .similarity import brute_force_topk
 
-    man = _load_ann_manifest(path)
+    man = commit.load_manifest(path)
     dim = int(man["dim"])
     # ground truth over the LIVE population only (tombstone mask) — the
     # served probe masks identically, so overlap measures the probe, not
@@ -1026,10 +899,8 @@ def record_serving_overlap(
     replace, capped at ``keep_last`` entries — the manifest stays a tiny
     driver-side JSON). ``night`` is a monotone counter, not a clock:
     readings order by position."""
-    from .incremental import _manifest_lock
-
-    with _manifest_lock(path):
-        man = _load_ann_manifest(path)
+    with commit.manifest_lock(path):
+        man = commit.load_manifest(path)
         tel = list(man.get("telemetry", []))
         tel.append(
             {
@@ -1042,7 +913,7 @@ def record_serving_overlap(
             }
         )
         man["telemetry"] = tel[-keep_last:]
-        _write_ann_manifest(path, man)
+        commit.write_manifest(path, man)
 
 
 def ann_drift_report(path: str, ratio_threshold: float = DRIFT_REBUILD_RATIO) -> dict:
@@ -1065,7 +936,7 @@ def ann_drift_report(path: str, ratio_threshold: float = DRIFT_REBUILD_RATIO) ->
     maintenance can never silently clear ``rebuild_recommended`` by
     diluting a drifted increment into a well-fitted base — only
     ``rebuild_ann_index``'s baseline reset clears it."""
-    man = _load_ann_manifest(path)
+    man = commit.load_manifest(path)
     baseline = man.get("baseline_msd")
     gens = []
     max_ratio = None
@@ -1168,18 +1039,17 @@ def ann_index_stats(spark, path: str) -> "DataFrame":
     tombstones, model_epoch). Manifest-only in the common case; oracling
     the vector count against a fresh recount of the source embeddings
     (a0m_index_stats) parity-checks the append accounting."""
-    man = _load_ann_manifest(path)
+    man = commit.load_manifest(path)
     gens = man["generations"]
     if gens and all(g.get("cell_counts") for g in gens):
         nv = sum(
             sum(int(c) for c in g["cell_counts"].values()) for g in gens
         )
     else:
-        vl = _read_veclist(spark, path, man)
-        if vl is None:
-            _materialize_missing_veclists(spark, path)
-            vl = _read_veclist(spark, path, man)
-        vl = _mask_deleted_vecs(vl, _active_vec_tombstones(spark, path, man))
+        vl = _mask_deleted_vecs(
+            _read_veclist(spark, path, man),
+            _active_vec_tombstones(spark, path, man),
+        )
         nv = vl.count()
     # literal projection over range(1) — see lexical_index_stats: a
     # 1-row createDataFrame is Python-RDD-backed and join-hostile
@@ -1217,26 +1087,13 @@ def rebuild_ann_index(
     commits after the flip fails its own epoch check (see
     ``append_ann_index``), so stale-centroid assignments can never land
     on either side of the retrain."""
-    import os
-
-    from .incremental import (
-        _GENCLAIM_PREFIX,
-        _claim_generation,
-        _manifest_lock,
-    )
-
-    man = _load_ann_manifest(path)
-    if man.get("version", 1) < 2:
-        raise ValueError(
-            f"ANN index at {path} predates generations; rebuild with "
-            "build_ann_index"
-        )
+    man = commit.load_manifest(path)
     dim = int(man["dim"])
     if cells is None:
         cells = len(man["model"])
     old_gens = [g["gen"] for g in man["generations"]]
     old_tomb_gens = {t["gen"] for t in man.get("tombstones", [])}
-    gen = _claim_generation(path)
+    gen = commit.claim_generation(path)
     # deleted vectors must not shape the new quantizer NOR re-enter the
     # rebuilt index — the retrain consumes only the live population, so
     # every tombstone is fully applied and retires below (round 13)
@@ -1254,8 +1111,8 @@ def rebuild_ann_index(
         for g in man["generations"]
         if g.get("increment_id") is not None
     ]
-    with _manifest_lock(path):
-        cur = _load_ann_manifest(path)
+    with commit.manifest_lock(path):
+        cur = commit.load_manifest(path)
         if {g["gen"] for g in cur["generations"]} != set(old_gens):
             raise RuntimeError(
                 f"concurrent append landed during retrain of {path}; "
@@ -1298,9 +1155,6 @@ def rebuild_ann_index(
                 "cell_counts": rebuild_cell_counts,
             }
         ]
-        _write_ann_manifest(path, cur)
-    try:
-        os.remove(os.path.join(path, f"{_GENCLAIM_PREFIX}{gen}"))
-    except OSError:
-        pass
+        commit.write_manifest(path, cur)
+    commit.release(path, commit.GENCLAIM_PREFIX, gen)
     return gen

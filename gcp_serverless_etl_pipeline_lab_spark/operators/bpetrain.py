@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import commit
 from ..functions.local_frames import literal_frame
 
 # split a word into characters (unicode-aware on both engines)
@@ -285,20 +286,17 @@ def save_bpe_model(
     either the old or the new model, never a torn one). ``meta`` rides
     along for provenance (corpus snapshot id, n_merges, min_pair_count)."""
     import json
-    import os
 
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(
+    commit.replace(
+        path,
+        json.dumps(
             {
                 "version": 1,
                 "merges": [[a, b, w] for a, b, w in merges],
                 "meta": meta or {},
-            },
-            fh,
-        )
-    os.replace(tmp, path)
+            }
+        ),
+    )
 
 
 def load_bpe_model(path: str) -> list[tuple[str, str, int]]:

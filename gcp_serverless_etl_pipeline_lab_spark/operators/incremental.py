@@ -56,6 +56,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import commit
 from .dedup import _with_shingles, cap_document_frequency
 
 
@@ -125,7 +126,6 @@ def near_dups_vs_base(
 # ---------------------------------------------------------------------------
 
 INDEX_GRAM_BUCKETS = 64
-_MANIFEST = "_MANIFEST.json"
 
 # Active probe-cache registry (see probe_cache_scope). A contextvar, not a
 # module global, so concurrent probe scopes (e.g. two streaming queries in
@@ -183,11 +183,8 @@ def _register_probe_cache(frame: DataFrame) -> None:
         reg.append(frame)
 
 
-# hashes v3 (round 14, deletes): generations written since carry the
-# doc_id next to the content hash so an id-only takedown can resolve
-# the k it must stop matching; legacy generations' files lack the
-# column and read as NULL doc_id under this explicit schema (their
-# docs need the text passed to delete_from_index — documented there)
+# hash rows carry the doc_id next to the content hash so an id-only
+# takedown can resolve the k it must stop matching
 _HASHES_SCHEMA = "k string, doc_id bigint"
 _GRAMS_SCHEMA = "base_id bigint, g string, gb int"
 _SIZES_SCHEMA = "base_id bigint, sz_b int"
@@ -268,19 +265,19 @@ def build_base_index(
             gramdf=df_tab.select("g", "df", _gb("g").alias("gb")),
             capped=hot,
         )
-        _write_manifest(
+        commit.write_manifest(
             path,
             {
-                "version": 2,
+                "version": commit.MANIFEST_VERSION,
                 "max_df": max_df,
                 "ngram": n,
                 "gram_buckets": INDEX_GRAM_BUCKETS,
                 "generations": [{"gen": 0, "increment_id": None}],
             },
         )
-        # manifest replace is the commit point (see _write_manifest); a
-        # crash before it leaves no manifest, and the builder retries
-        # into the same path cleanly (gen-0 overwrite).
+        # the manifest replace is the commit point; a crash before it
+        # leaves no manifest, and a retried build writes into the same
+        # path cleanly (gen-0 overwrite).
     finally:
         sh.unpersist()
 
@@ -323,152 +320,22 @@ def _write_generation(
     )
 
 
-def _write_manifest(path: str, man: dict) -> None:
-    """Atomic manifest replace — THE commit point for builds and appends
-    (write temp + os.replace; the object-store analogue is one PUT)."""
-    import json
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    tmp = os.path.join(path, _MANIFEST + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(man, fh)
-    os.replace(tmp, os.path.join(path, _MANIFEST))
-
-
-_GENCLAIM_PREFIX = ".genclaim-"
-
-
-class LegacyHashResolutionError(ValueError):
-    """An id-only delete hit documents whose index generations predate
-    per-row-id hash rows (pre-round-14): the content hash to tombstone
-    can only come from the document text, so the caller must re-issue
-    the delete with a (doc_id, text) frame. A DEDICATED type (round-15
-    advice) so the nightly delete stage's corpus-resolution retry
-    triggers ONLY for this condition — not for unrelated ValueErrors
-    (flat-layout/config errors), which previously cost a full merged-
-    corpus read before re-raising."""
-
-
-def _claim_generation(path: str) -> int:
-    """Reserve the next generation number with an exclusive-create marker
-    (the warehouse's version-claim discipline, sinks._claim_version):
-    racing appenders write DISTINCT gen dirs instead of clobbering one.
-    Crashed appenders leave a stale marker — swept by vacuum_index —
-    which only costs a skipped number."""
-    import os
-
-    while True:
-        man = _load_manifest(path)
-        taken = {g["gen"] for g in man["generations"]}
-        # tombstone generations (lexical/ANN deletes, round 13) share
-        # the number space: without this a later claim could reuse an
-        # active tombstone's number and overwrite its rows
-        taken |= {t["gen"] for t in man.get("tombstones", [])}
-        for name in os.listdir(path):
-            if name.startswith(_GENCLAIM_PREFIX) and name[
-                len(_GENCLAIM_PREFIX):
-            ].isdigit():
-                taken.add(int(name[len(_GENCLAIM_PREFIX):]))
-        cand = max(taken) + 1
-        try:
-            with open(os.path.join(path, f"{_GENCLAIM_PREFIX}{cand}"), "x"):
-                pass
-            return cand
-        except FileExistsError:
-            continue
-
-
-def _manifest_lock(path: str):
-    """Exclusive flock on the manifest's sidecar lock — serializes the
-    read-modify-replace commit (the object-store analogue is a
-    conditional PUT on the manifest's etag, retried on failure)."""
-    import contextlib
-    import fcntl
-    import os
-
-    @contextlib.contextmanager
-    def _lock():
-        with open(os.path.join(path, "." + _MANIFEST + ".lock"), "w") as fh:
-            fcntl.flock(fh, fcntl.LOCK_EX)
-            try:
-                yield
-            finally:
-                fcntl.flock(fh, fcntl.LOCK_UN)
-
-    return _lock()
-
-
-def _split_fold_slice(
-    entries: list[dict],
-    max_generations_to_fold: int | None,
-    protect_increments: set[str] | None = None,
-) -> tuple[list[dict], list[dict]]:
-    """The one tiering policy every compactor in the family shares
-    (text, lexical, ANN — round-12 advice factored it out of three
-    verbatim copies): ``(fold_entries, keep_entries)`` where the fold
-    slice is the NEWEST ``max_generations_to_fold`` listed generations
-    (all of them when None or >= len — a full fold), and keep is the
-    untouched prefix in its original order. ``k < 2`` raises — a 1-fold
-    is a no-op rewrite.
-
-    ``protect_increments`` (round-12 advice on the one-legged-increment
-    hazard): entries whose ``increment_id`` is in the set are PULLED OUT
-    of the fold slice and kept listed under their own generation — the
-    nightly retrieval loop passes the lex-applied-but-ANN-pending ids so
-    a compaction between a mid-night crash and its replay can never fold
-    an increment whose sibling leg still needs ``exclude_increment_id``
-    to find it. Protected entries keep their relative order ahead of the
-    fold result."""
-    if max_generations_to_fold is not None and max_generations_to_fold < 2:
-        raise ValueError(
-            "max_generations_to_fold must be >= 2 (a 1-fold is a no-op rewrite)"
-        )
-    entries = list(entries)
-    full = (
-        max_generations_to_fold is None
-        or max_generations_to_fold >= len(entries)
-    )
-    fold = entries if full else entries[-max_generations_to_fold:]
-    keep = [] if full else entries[: -max_generations_to_fold]
-    if protect_increments:
-        keep = keep + [
-            g for g in fold if g.get("increment_id") in protect_increments
-        ]
-        fold = [g for g in fold if g.get("increment_id") not in protect_increments]
-    return fold, keep
-
-
-def _load_manifest(path: str) -> dict:
-    import json
-    import os
-
-    with open(os.path.join(path, _MANIFEST)) as fh:
-        return json.load(fh)
-
-
 def _read_artifact(spark, path: str, name: str, man: dict, schema: str) -> DataFrame:
     """Union of the artifact's COMMITTED generations (manifest-listed
     only — an orphaned gen dir from a crashed append is never read).
-    v1 indexes (round-8 flat layout, no ``version`` key) read the bare
-    artifact dir. The explicit schema makes an EMPTY generation (e.g. an
-    all-capped increment's postings) read as zero rows instead of
-    failing schema inference; partition columns (gb) resolve from dir
-    names as usual. Each slice carries its generation number as ``_gen``
-    (a literal — free) so tombstone masking can scope a delete to the
-    generations it covered (round 14; v1 reads as gen 0): writers that
-    persist an artifact back must select it away."""
+    The explicit schema makes an EMPTY generation (e.g. an all-capped
+    increment's postings) read as zero rows instead of failing schema
+    inference; partition columns (gb) resolve from dir names as usual.
+    Each slice carries its generation number as ``_gen`` (a literal —
+    free) so tombstone masking can scope a delete to the generations it
+    covered (round 14): writers that persist an artifact back must
+    select it away."""
     import os
 
-    if man.get("version", 1) < 2:
-        gens = [(0, os.path.join(path, name))]
-    else:
-        gens = [
-            (int(g["gen"]), os.path.join(path, name, f"gen={g['gen']}"))
-            for g in man["generations"]
-        ]
     out = None
-    for gen, d in gens:
+    for g in man["generations"]:
+        gen = int(g["gen"])
+        d = os.path.join(path, name, f"gen={gen}")
         part = (
             spark.read.schema(schema)
             .option("basePath", d)
@@ -480,7 +347,7 @@ def _read_artifact(spark, path: str, name: str, man: dict, schema: str) -> DataF
 
 
 def _active_text_tombstones(spark, path: str, man: dict) -> DataFrame | None:
-    """(doc_id, k, max_gen) union of the listed tombstone generations, or
+    """(doc_id, max_gen) union of the listed tombstone generations, or
     None when the index has no active deletes — the text index's twin of
     ``lexindex._active_tombstones``. The frame is delete-volume-sized
     (deletes are rare events), so every mask join rides a small frame
@@ -494,45 +361,28 @@ def _active_text_tombstones(spark, path: str, man: dict) -> DataFrame | None:
             spark.read.schema("doc_id bigint, k string")
             .option("basePath", d)
             .parquet(d)
-            .select("doc_id", "k", F.lit(int(t["max_gen"])).alias("max_gen"))
+            .select("doc_id", F.lit(int(t["max_gen"])).alias("max_gen"))
         )
         out = part if out is None else out.unionByName(part)
     return out
 
 
-def _mask_deleted_ids(df: DataFrame, tomb: DataFrame | None) -> DataFrame:
-    """Drop rows whose (base_id, _gen) a tombstone covers — the probe-
-    side view of a text-index delete for the id-keyed artifacts (grams,
-    sizes) until compaction applies it physically."""
+def _mask_deleted_ids(
+    df: DataFrame, tomb: DataFrame | None, key: str = "base_id"
+) -> DataFrame:
+    """Drop rows whose (``key``, _gen) a tombstone covers — the probe-
+    side view of a text-index delete (grams and sizes by ``base_id``,
+    hashes by ``doc_id``) until compaction applies it physically."""
     if tomb is None:
         return df
-    t = tomb.groupBy(F.col("doc_id").alias("base_id")).agg(
-        F.max("max_gen").alias("max_gen")
+    t = tomb.groupBy(F.col("doc_id").alias("_tomb_id")).agg(
+        F.max("max_gen").alias("_tomb_gen")
     )
     return df.join(
         t,
-        (df["base_id"] == t["base_id"]) & (df["_gen"] <= t["max_gen"]),
+        (df[key] == t["_tomb_id"]) & (df["_gen"] <= t["_tomb_gen"]),
         "left_anti",
     )
-
-
-def _mask_deleted_hashes(df: DataFrame, tomb: DataFrame | None) -> DataFrame:
-    """Drop covered rows from the hashes artifact. v3 rows (doc_id
-    stored) mask precisely by id; legacy rows (NULL doc_id) mask by the
-    content hash the delete recorded — which also masks a byte-identical
-    TWIN doc living in a legacy generation (over-masking documented at
-    ``delete_from_index``: indistinguishable without per-row ids, and
-    conservative for the dedup guard's purpose)."""
-    if tomb is None:
-        return df
-    t = tomb.select(
-        F.col("doc_id").alias("t_id"), F.col("k").alias("t_k"), "max_gen"
-    )
-    cond = (df["_gen"] <= t["max_gen"]) & (
-        (df["doc_id"] == t["t_id"])
-        | (df["doc_id"].isNull() & (df["k"] == t["t_k"]))
-    )
-    return df.join(t, cond, "left_anti")
 
 
 def _keyed_shingles(batch: DataFrame, n: int) -> DataFrame:
@@ -573,15 +423,16 @@ def exact_dups_vs_index(
     ``keyed`` (round 16): optional pre-computed (doc_id, k=md5(text))
     frame — ``classify_batch_vs_index`` passes a slice of its persisted
     one-pass batch frame so the batch is not re-synthesized here."""
-    man = _load_manifest(path)
+    man = commit.load_manifest(path)
     b = (
         keyed.select("doc_id", "k")
         if keyed is not None
         else batch.select("doc_id", F.md5("text").alias("k"))
     )
-    base_k = _mask_deleted_hashes(
+    base_k = _mask_deleted_ids(
         _read_artifact(spark, path, "hashes", man, _HASHES_SCHEMA),
         _active_text_tombstones(spark, path, man),
+        "doc_id",
     )
     return b.join(base_k, "k", "left_semi").select("doc_id")
 
@@ -608,7 +459,7 @@ def near_dups_vs_index(
     frame — ``classify_batch_vs_index`` passes a slice of its persisted
     one-pass batch frame (md5 + shingles in one synthesis); the caller
     then owns persistence and lifetime."""
-    man = _load_manifest(path)
+    man = commit.load_manifest(path)
     nb = int(man["gram_buckets"])
     if shingled is not None:
         sh_new = shingled.select("doc_id", "shingles")
@@ -649,13 +500,12 @@ def near_dups_vs_index(
     # generation-scoped so a re-appended doc's new rows stay live
     _tomb = _active_text_tombstones(spark, path, man)
     g_base = _mask_deleted_ids(g_base, _tomb)
-    if man.get("version", 1) >= 2:
-        # exclude grams that crossed the df-cap in a later generation
-        # (their pre-crossing postings are physically present). The
-        # ledger is small by construction — broadcast anti-join, no
-        # extra shuffle of the postings.
-        capped = _read_artifact(spark, path, "capped", man, _CAPPED_SCHEMA)
-        g_base = g_base.join(F.broadcast(capped), "g", "left_anti")
+    # exclude grams that crossed the df-cap in a later generation (their
+    # pre-crossing postings are physically present). The ledger is small
+    # by construction — broadcast anti-join, no extra shuffle of the
+    # postings.
+    capped = _read_artifact(spark, path, "capped", man, _CAPPED_SCHEMA)
+    g_base = g_base.join(F.broadcast(capped), "g", "left_anti")
     inter = (
         g_new.join(g_base.select("base_id", "g"), "g")
         .groupBy("new_id", "base_id")
@@ -730,25 +580,15 @@ def append_to_index(
     ``compact_index``, which recomputes the ledger from the summed true
     dfs and restores exact cap semantics. Serial appends (the nightly
     loop) are always exact.
-
-    Requires a v2 (generational) index; round-8 flat-layout indexes must
-    be rebuilt once with ``build_base_index``.
     """
     from pyspark.storagelevel import StorageLevel
 
-    man = _load_manifest(path)
-    if man.get("version", 1) < 2:
-        raise ValueError(
-            f"index at {path} uses the pre-append flat layout; rebuild it "
-            "with build_base_index to enable appends"
-        )
-    applied = {
-        g.get("increment_id") for g in man["generations"]
-    } | set(man.get("compacted_increments", []))
+    man = commit.load_manifest(path)
+    applied = commit.applied_increments(man)
     if increment_id is not None and increment_id in applied:
         return False
     max_df = man["max_df"]
-    gen = _claim_generation(path)
+    gen = commit.claim_generation(path)
 
     sh = _with_shingles(increment, int(man["ngram"])).persist(
         StorageLevel.MEMORY_AND_DISK
@@ -830,22 +670,14 @@ def append_to_index(
                 gramdf=inc_df.select("g", "df", "gb"),
                 capped=newly_capped,
             )
-            import os
-
-            with _manifest_lock(path):
-                cur = _load_manifest(path)  # re-read: racing commits land
-                applied_now = {
-                    g.get("increment_id") for g in cur["generations"]
-                } | set(cur.get("compacted_increments", []))
+            with commit.manifest_lock(path):
+                # re-read: racing commits land
+                cur = commit.load_manifest(path)
+                applied_now = commit.applied_increments(cur)
                 if increment_id is not None and increment_id in applied_now:
                     # same-increment race lost: our generation stays an
                     # orphan for vacuum_index; the committed one wins
-                    try:
-                        os.remove(
-                            os.path.join(path, f"{_GENCLAIM_PREFIX}{gen}")
-                        )
-                    except OSError:
-                        pass
+                    commit.release(path, commit.GENCLAIM_PREFIX, gen)
                     return False
                 if any(g["gen"] == gen for g in cur["generations"]):
                     # our claim was stolen (e.g. vacuumed past the horizon
@@ -860,11 +692,8 @@ def append_to_index(
                 cur["generations"].append(
                     {"gen": gen, "increment_id": increment_id}
                 )
-                _write_manifest(path, cur)
-            try:
-                os.remove(os.path.join(path, f"{_GENCLAIM_PREFIX}{gen}"))
-            except OSError:
-                pass
+                commit.write_manifest(path, cur)
+            commit.release(path, commit.GENCLAIM_PREFIX, gen)
             return True
         finally:
             merged.unpersist()
@@ -887,20 +716,13 @@ def delete_from_index(
     fingerprints persisted forever). Same generation-scoped tombstone
     design as the lexical/ANN twins:
 
-    - ``docs`` is a (doc_id) or (doc_id, text) frame. The asked ids
-      resolve against current membership (live ``sizes`` rows); the
-      content hash each membership row must stop matching comes from the
-      stored v3 ``hashes`` (doc_id column, round 14) — for docs indexed
-      by a PRE-round-14 generation the hash rows carry no doc_id, so the
-      text must be passed (the nightly delete stage reads it from
-      ``merged_dir`` before purging); id-only deletes of such docs raise
-      rather than leave the exact-dup probe still matching.
+    - ``docs`` carries a ``doc_id`` column (other columns are ignored).
+      The asked ids resolve against current membership (live ``sizes``
+      rows); the content hash each member stops matching is read from
+      the stored ``hashes`` rows, which carry the doc_id.
     - one ``tombstones/gen=N`` artifact (doc_id, k) plus an atomic
       manifest append commits the delete; every probe masks covered rows
-      (grams/sizes by id, hashes by id or — legacy rows — by content
-      hash, which also masks a byte-identical twin in a legacy
-      generation: indistinguishable without per-row ids, and
-      conservative for the guard's purpose).
+      by (id, generation).
     - generation-scoped ``max_gen`` cover: re-appending a deleted doc_id
       later works — the new generation is above the cover and matches
       normally. ``increment_id`` replays are committed no-ops (False);
@@ -922,22 +744,11 @@ def delete_from_index(
     commit aborts the delete loudly for a re-run."""
     import os
 
-    man = _load_manifest(path)
-    if man.get("version", 1) < 2:
-        raise ValueError(
-            f"index at {path} uses the pre-append flat layout; rebuild it "
-            "with build_base_index to enable deletes"
-        )
-    applied = {
-        t.get("increment_id") for t in man.get("tombstones", [])
-    } | set(man.get("applied_deletes", []))
+    man = commit.load_manifest(path)
+    applied = commit.applied_deletes(man)
     if increment_id is not None and increment_id in applied:
         return False
-    has_text = "text" in docs.columns
-    want = docs.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        *([F.md5("text").alias("k_text")] if has_text else []),
-    ).dropDuplicates(["doc_id"])
+    want = docs.select(F.col("doc_id").cast("long").alias("doc_id")).distinct()
     tomb_now = _active_text_tombstones(spark, path, man)
     member = (
         _mask_deleted_ids(
@@ -948,59 +759,32 @@ def delete_from_index(
         .distinct()
         .join(want, "doc_id", "left_semi")
     )
-    # resolve each member's content hash: stored v3 rows first, the
-    # caller's text as the fallback for legacy rows
+    # one tombstone row per (member, stored content hash): a doc whose
+    # generations hold different texts stops matching under every hash
     stored_k = (
-        _mask_deleted_hashes(
+        _mask_deleted_ids(
             _read_artifact(spark, path, "hashes", man, _HASHES_SCHEMA),
             tomb_now,
+            "doc_id",
         )
-        .filter(F.col("doc_id").isNotNull())
         .select("doc_id", "k")
         .join(member, "doc_id", "left_semi")
         .distinct()
     )
-    # tombstone the UNION of every resolved hash for a member (round-15
-    # advice): a doc present in BOTH a pre-round-14 generation (NULL
-    # doc_id hash row, resolvable only via the caller's text) and a v3
-    # generation with DIFFERENT text must stop matching under both
-    # hashes — a single coalesced value would leave the legacy content
-    # hash live and suppress legitimate re-ingest of the old content
-    # forever. Masking is per (doc_id, k) row, so extra hash rows cost
-    # one tombstone row each and nothing else.
-    resolved = stored_k
-    if has_text:
-        text_k = (
-            member.join(want, "doc_id", "left")
-            .filter(F.col("k_text").isNotNull())
-            .select("doc_id", F.col("k_text").alias("k"))
-        )
-        resolved = resolved.unionByName(text_k).distinct()
-    rows = member.join(resolved, "doc_id", "left")
-    tomb_rows = rows.localCheckpoint(eager=True)
-    n_member = tomb_rows.select("doc_id").distinct().count()
-    if n_member == 0:
+    tomb_rows = member.join(stored_k, "doc_id", "left").localCheckpoint(
+        eager=True
+    )
+    if tomb_rows.limit(1).count() == 0:
         return False
-    if tomb_rows.filter(F.col("k").isNull()).limit(1).count():
-        raise LegacyHashResolutionError(
-            f"index at {path} holds pre-round-14 generations whose hash "
-            "rows carry no doc_id; pass (doc_id, text) to "
-            "delete_from_index so the content hash can be tombstoned"
-        )
-    gen = _claim_generation(path)
+    gen = commit.claim_generation(path)
     tomb_rows.select("doc_id", "k").coalesce(1).write.mode(
         "overwrite"
     ).parquet(os.path.join(path, "tombstones", f"gen={gen}"))
-    with _manifest_lock(path):
-        cur = _load_manifest(path)
-        applied_now = {
-            t.get("increment_id") for t in cur.get("tombstones", [])
-        } | set(cur.get("applied_deletes", []))
+    with commit.manifest_lock(path):
+        cur = commit.load_manifest(path)
+        applied_now = commit.applied_deletes(cur)
         if increment_id is not None and increment_id in applied_now:
-            try:
-                os.remove(os.path.join(path, f"{_GENCLAIM_PREFIX}{gen}"))
-            except OSError:
-                pass
+            commit.release(path, commit.GENCLAIM_PREFIX, gen)
             return False
         if {g["gen"] for g in cur["generations"]} != {
             g["gen"] for g in man["generations"]
@@ -1016,11 +800,8 @@ def delete_from_index(
                 "max_gen": max(g["gen"] for g in cur["generations"]),
             }
         )
-        _write_manifest(path, cur)
-    try:
-        os.remove(os.path.join(path, f"{_GENCLAIM_PREFIX}{gen}"))
-    except OSError:
-        pass
+        commit.write_manifest(path, cur)
+    commit.release(path, commit.GENCLAIM_PREFIX, gen)
     return True
 
 
@@ -1079,22 +860,14 @@ def compact_index(
     generation number. Applied increment_ids are preserved in the
     manifest under ``compacted_increments`` so append idempotence
     survives compaction."""
-    import os
-
-    man = _load_manifest(path)
-    if man.get("version", 1) < 2:
-        raise ValueError(
-            f"index at {path} uses the pre-append flat layout; rebuild it "
-            "with build_base_index (compaction is a no-op for single-"
-            "generation indexes)"
-        )
+    man = commit.load_manifest(path)
     max_df = man["max_df"]
     old_gens = [g["gen"] for g in man["generations"]]
-    fold_entries, keep_entries = _split_fold_slice(
+    fold_entries, keep_entries = commit.split_fold_slice(
         man["generations"], max_generations_to_fold
     )
     full = not keep_entries
-    fold_man = {"version": 2, "generations": fold_entries}
+    fold_man = {"generations": fold_entries}
     # tombstones (round-14 deletes) apply PHYSICALLY at fold time: the
     # folded slice lands under a NEW generation number above every
     # cover, so a covered row carried through would un-mask — covered
@@ -1114,10 +887,12 @@ def compact_index(
         if not any(g["gen"] <= t["max_gen"] for g in keep_entries)
     ]
     absorbed_gens = {t["gen"] for t in absorbed}
-    gen = _claim_generation(path)
+    gen = commit.claim_generation(path)
 
-    hashes = _mask_deleted_hashes(
-        _read_artifact(spark, path, "hashes", fold_man, _HASHES_SCHEMA), tomb
+    hashes = _mask_deleted_ids(
+        _read_artifact(spark, path, "hashes", fold_man, _HASHES_SCHEMA),
+        tomb,
+        "doc_id",
     ).select("k", "doc_id")
     sizes = _mask_deleted_ids(
         _read_artifact(spark, path, "sizes", fold_man, _SIZES_SCHEMA), tomb
@@ -1192,8 +967,8 @@ def compact_index(
         for g in fold_entries
         if g.get("increment_id") is not None
     ]
-    with _manifest_lock(path):
-        cur = _load_manifest(path)
+    with commit.manifest_lock(path):
+        cur = commit.load_manifest(path)
         if {g["gen"] for g in cur["generations"]} != set(old_gens):
             # an append committed while we folded: our fold is missing
             # its generation — abort loudly (the folded dirs are orphans
@@ -1230,11 +1005,8 @@ def compact_index(
         cur["generations"] = keep_entries + [
             {"gen": gen, "increment_id": None}
         ]
-        _write_manifest(path, cur)
-    try:
-        os.remove(os.path.join(path, f"{_GENCLAIM_PREFIX}{gen}"))
-    except OSError:
-        pass
+        commit.write_manifest(path, cur)
+    commit.release(path, commit.GENCLAIM_PREFIX, gen)
     return gen
 
 
@@ -1258,26 +1030,6 @@ def _artifact_roots(path: str) -> list[str]:
         ):
             roots.append(name)
     return roots
-
-
-def _newest_gen_mtime(path: str, gen: int, default: float) -> float:
-    """Newest file mtime across every artifact's ``gen=N`` dir — the
-    liveness signal for that generation's writer (an in-flight append is
-    continuously producing files there)."""
-    import os
-
-    newest = default
-    for artifact in _artifact_roots(path):
-        d = os.path.join(path, artifact, f"gen={gen}")
-        if not os.path.isdir(d):
-            continue
-        for r, _, fs in os.walk(d):
-            for f in fs:
-                try:
-                    newest = max(newest, os.path.getmtime(os.path.join(r, f)))
-                except OSError:
-                    pass
-    return newest
 
 
 def vacuum_index(path: str, min_age_seconds: float = 86400.0) -> list[str]:
@@ -1308,55 +1060,35 @@ def vacuum_index(path: str, min_age_seconds: float = 86400.0) -> list[str]:
     import os
     import re
     import shutil
-    import time
 
-    man = _load_manifest(path)
-    if man.get("version", 1) < 2:
-        return []
+    man = commit.load_manifest(path)
     live = {g["gen"] for g in man["generations"]}
     # active tombstones (round-13 deletes) are live artifacts — only
     # retired ones (absorbed by compaction, unlisted) are debris
     live |= {t["gen"] for t in man.get("tombstones", [])}
-    now = time.time()
+    roots = _artifact_roots(path)
     swept: list[str] = []
     # stale generation-claim markers (crashed appenders) age out too —
     # aged off the newest write under the claimed gen, so a slow but
     # ACTIVE appender is never swept mid-flight
-    for name in os.listdir(path):
-        if not name.startswith(_GENCLAIM_PREFIX):
+    prefix = commit.GENCLAIM_PREFIX
+    for gen in commit.claims(path, prefix):
+        if gen in live:
             continue
-        suffix = name[len(_GENCLAIM_PREFIX):]
-        p = os.path.join(path, name)
-        if not suffix.isdigit() or int(suffix) in live:
-            continue
-        try:
-            last_alive = _newest_gen_mtime(
-                path, int(suffix), os.path.getmtime(p)
-            )
-        except OSError:
-            continue
-        if now - last_alive >= min_age_seconds:
-            try:
-                os.remove(p)
-                swept.append(name)
-            except OSError:
-                pass
-    for artifact in _artifact_roots(path):
+        gen_dirs = [os.path.join(path, a, f"gen={gen}") for a in roots]
+        if commit.is_stale(
+            [commit.marker(path, prefix, gen), *gen_dirs], min_age_seconds
+        ):
+            commit.release(path, prefix, gen)
+            swept.append(f"{prefix}{gen}")
+    for artifact in roots:
         root = os.path.join(path, artifact)
         for name in os.listdir(root):
             m = re.fullmatch(r"gen=(\d+)", name)
             d = os.path.join(root, name)
             if not m or not os.path.isdir(d) or int(m.group(1)) in live:
                 continue
-            newest = max(
-                (
-                    os.path.getmtime(os.path.join(r, f))
-                    for r, _, fs in os.walk(d)
-                    for f in fs
-                ),
-                default=os.path.getmtime(d),
-            )
-            if now - newest < min_age_seconds:
+            if not commit.is_stale([d], min_age_seconds):
                 continue
             shutil.rmtree(d, ignore_errors=True)
             swept.append(f"{artifact}/{name}")
@@ -1382,7 +1114,7 @@ def classify_batch_vs_index(
     replaces."""
     from pyspark.storagelevel import StorageLevel
 
-    man = _load_manifest(path)
+    man = commit.load_manifest(path)
     bk = _keyed_shingles(batch, int(man["ngram"])).persist(
         StorageLevel.MEMORY_AND_DISK
     )

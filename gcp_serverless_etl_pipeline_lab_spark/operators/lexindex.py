@@ -6,10 +6,11 @@ per query, so one query costs a corpus scan; a query SERVICE builds the
 postings ONCE and every probe reads only the term buckets the query
 names.
 
-Layout under ``path`` (same generational manifest/claim/flock
-discipline as the sibling indexes — immutable ``gen=N`` dirs, atomic
-manifest replace as the one commit point, crash orphans invisible,
-``increment_id`` replays committed no-ops, shared ``vacuum_index``):
+Layout under ``path`` (the generational commit discipline the sibling
+indexes share through the ``commit`` module — immutable ``gen=N`` dirs,
+atomic manifest replace as the one commit point, crash orphans
+invisible, ``increment_id`` replays committed no-ops, shared
+``vacuum_index``):
 
 - ``postings/gen=N`` — one row per (term, doc) pair: ``(term, doc_id,
   tf, dl)``, hive-partitioned by ``tb = pmod(xxhash64(term),
@@ -24,10 +25,8 @@ manifest replace as the one commit point, crash orphans invisible,
   column is |postings|-sized and term-bucketed (every bucket would
   scan). Feeds the nightly loop's cross-increment dedup guard and the
   hybrid-consistency check (streaming/retrieval_stream.py); includes
-  tokenless docs (zero postings but counted in ``n_docs``). Pre-round-12
-  indexes lack it — readers fall back to a postings scan.
-- ``doclist`` rows carry ``dl`` from round 13 (v3) so DELETES subtract
-  exact lengths; pre-v3 rows read dl as NULL with a postings fallback.
+  tokenless docs (zero postings but counted in ``n_docs``). Each row
+  also carries the doc length ``dl``, so DELETES subtract exact lengths.
 - ``tombstones/gen=N`` (round 13) — one row per DELETED doc, same
   doc-bucket layout; each tombstone's manifest entry records the
   generations it covers (``max_gen``), so probes mask dead rows with a
@@ -61,6 +60,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import commit
 from ..functions.local_frames import literal_frame
 
 
@@ -71,14 +71,9 @@ def _literal_terms(spark, terms):
     gate and per broadcast build; measured ~0.25 s each at local[32])."""
     return literal_frame(spark, "term string", [(t,) for t in terms])
 
-from .incremental import (
-    _claim_generation,
-    _manifest_lock,
-)
 
 TERM_BUCKETS = 64
 DOC_BUCKETS = 64
-_MANIFEST = "_MANIFEST.json"
 
 _POSTINGS_SCHEMA = "term string, doc_id bigint, tf bigint, dl int, tb int"
 # positions (round-14 verdict task 4 — phrase queries): one row per
@@ -89,10 +84,8 @@ _POSTINGS_SCHEMA = "term string, doc_id bigint, tf bigint, dl int, tb int"
 # BM25 probe does; positions are opt-in at build time (the artifact is
 # token-count-sized, the one index artifact that is).
 _POSITIONS_SCHEMA = "term string, doc_id bigint, positions array<int>, tb int"
-# doclist v3 (round 13) carries the doc length so DELETES can subtract
-# exact (n_docs, sum_dl) even for tokenless docs (no postings to read
-# dl from); pre-round-13 doclist dirs read dl as NULL and the delete
-# falls back to the doc's postings dl
+# the doclist carries the doc length so DELETES can subtract exact
+# (n_docs, sum_dl) even for tokenless docs (no postings to read dl from)
 _DOCLIST_SCHEMA = "doc_id bigint, dl int, db int"
 
 
@@ -216,25 +209,6 @@ def _write_doclist_gen(
     )
 
 
-def _write_lex_manifest(path: str, man: dict) -> None:
-    import json
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    tmp = os.path.join(path, _MANIFEST + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(man, fh)
-    os.replace(tmp, os.path.join(path, _MANIFEST))
-
-
-def _load_lex_manifest(path: str) -> dict:
-    import json
-    import os
-
-    with open(os.path.join(path, _MANIFEST)) as fh:
-        return json.load(fh)
-
-
 def build_lexical_index(
     docs: DataFrame,
     path: str,
@@ -256,13 +230,10 @@ def build_lexical_index(
     if positions:
         _write_positions_gen(_positions_of(docs, id_col, text_col), path, 0)
     n_docs, sum_dl = _corpus_stats(docs, text_col)
-    _write_lex_manifest(
+    commit.write_manifest(
         path,
         {
-            # version 2 = the shared generational layout contract: the
-            # cross-index vacuum treats <2 as a flat pre-append layout
-            # and skips it, and this index is generational from birth
-            "version": 2,
+            "version": commit.MANIFEST_VERSION,
             "term_buckets": TERM_BUCKETS,
             "positions": bool(positions),
             "generations": [
@@ -305,12 +276,8 @@ def append_lexical_index(
     before every append. ``assert_new_doc_ids=True`` makes this append
     verify the contract itself (one doc-bucket-pruned anti-probe; off by
     default — the loop already guards, and a double probe buys nothing)."""
-    import os
-
-    man = _load_lex_manifest(path)
-    applied = {
-        g.get("increment_id") for g in man["generations"]
-    } | set(man.get("compacted_increments", []))
+    man = commit.load_manifest(path)
+    applied = commit.applied_increments(man)
     if increment_id is not None and increment_id in applied:
         return False
     if increment.limit(1).count() == 0:
@@ -327,7 +294,7 @@ def append_lexical_index(
                 "would double-count tf/df/n_docs — exclude them first "
                 "(indexed_doc_ids gives the overlap)"
             )
-    gen = _claim_generation(path)
+    gen = commit.claim_generation(path)
     _write_postings_gen(_postings_of(increment, id_col, text_col), path, gen)
     _write_doclist_gen(increment, path, gen, id_col, text_col)
     if man.get("positions"):
@@ -335,18 +302,11 @@ def append_lexical_index(
             _positions_of(increment, id_col, text_col), path, gen
         )
     n_docs, sum_dl = _corpus_stats(increment, text_col)
-    from .incremental import _GENCLAIM_PREFIX
-
-    with _manifest_lock(path):
-        cur = _load_lex_manifest(path)
-        applied_now = {
-            g.get("increment_id") for g in cur["generations"]
-        } | set(cur.get("compacted_increments", []))
+    with commit.manifest_lock(path):
+        cur = commit.load_manifest(path)
+        applied_now = commit.applied_increments(cur)
         if increment_id is not None and increment_id in applied_now:
-            try:
-                os.remove(os.path.join(path, f"{_GENCLAIM_PREFIX}{gen}"))
-            except OSError:
-                pass
+            commit.release(path, commit.GENCLAIM_PREFIX, gen)
             return False
         if any(g["gen"] == gen for g in cur["generations"]):
             raise RuntimeError(
@@ -361,11 +321,8 @@ def append_lexical_index(
                 "sum_dl": sum_dl,
             }
         )
-        _write_lex_manifest(path, cur)
-    try:
-        os.remove(os.path.join(path, f"{_GENCLAIM_PREFIX}{gen}"))
-    except OSError:
-        pass
+        commit.write_manifest(path, cur)
+    commit.release(path, commit.GENCLAIM_PREFIX, gen)
     return True
 
 
@@ -409,12 +366,10 @@ def compact_lexical_index(
     nothing useful to rewrite."""
     import os
 
-    from .incremental import _GENCLAIM_PREFIX, _split_fold_slice
-
-    man = _load_lex_manifest(path)
+    man = commit.load_manifest(path)
     entries = list(man["generations"])
     old_gens = [g["gen"] for g in entries]
-    fold_entries, keep_entries = _split_fold_slice(
+    fold_entries, keep_entries = commit.split_fold_slice(
         entries, max_generations_to_fold, protect_increments
     )
     # a 1-generation fold is a no-op rewrite UNLESS there are active
@@ -453,7 +408,7 @@ def compact_lexical_index(
     absorbed_gens = {t["gen"] for t in absorbed}
     n_docs -= sum(int(t["n_docs_removed"]) for t in absorbed)
     sum_dl -= sum(int(t["sum_dl_removed"]) for t in absorbed)
-    gen = _claim_generation(path)
+    gen = commit.claim_generation(path)
     _write_postings_gen(
         _mask_deleted(_read_postings(spark, path, fold_man), tomb), path, gen
     )
@@ -466,16 +421,8 @@ def compact_lexical_index(
             path,
             gen,
         )
-    # a fold that contains any pre-round-12 (doclist-less) generation
-    # must not write a doclist-less fold — that would propagate the
-    # legacy state forever (round-12 advice): materialize the missing
-    # legacy doclists first, so the fold's doclist is always complete
-    dl = _read_doclist(spark, path, fold_man)
-    if dl is None:
-        _materialize_missing_doclists(spark, path)
-        dl = _read_doclist(spark, path, fold_man)
     (
-        _mask_deleted(dl, tomb)
+        _mask_deleted(_read_doclist(spark, path, fold_man), tomb)
         .select("doc_id", "dl", "db")
         .repartition(DOC_BUCKETS, F.col("db"))
         .write.mode("overwrite")
@@ -487,8 +434,8 @@ def compact_lexical_index(
         for g in fold_entries
         if g.get("increment_id") is not None
     ]
-    with _manifest_lock(path):
-        cur = _load_lex_manifest(path)
+    with commit.manifest_lock(path):
+        cur = commit.load_manifest(path)
         if {g["gen"] for g in cur["generations"]} != set(old_gens):
             raise RuntimeError(
                 f"concurrent append landed during compaction of {path}; "
@@ -527,11 +474,8 @@ def compact_lexical_index(
                 "sum_dl": sum_dl,
             }
         ]
-        _write_lex_manifest(path, cur)
-    try:
-        os.remove(os.path.join(path, f"{_GENCLAIM_PREFIX}{gen}"))
-    except OSError:
-        pass
+        commit.write_manifest(path, cur)
+    commit.release(path, commit.GENCLAIM_PREFIX, gen)
     return gen
 
 
@@ -558,21 +502,20 @@ def _read_postings(spark, path: str, man: dict) -> DataFrame:
     return out
 
 
-def _read_doclist(spark, path: str, man: dict) -> DataFrame | None:
-    """Union of the committed doclist generations, or None when any
-    listed generation predates the artifact (pre-round-12 index) —
-    callers then run ``_materialize_missing_doclists`` once and re-read
-    (round-12 verdict task 4: the old unpruned-postings fallback was
-    also blind to tokenless docs in every LATER generation, so one
-    legacy generation silently degraded the whole index's membership
-    probes forever)."""
+def _read_doclist(spark, path: str, man: dict) -> DataFrame:
+    """Union of the committed doclist generations. Every writer lists a
+    generation only after its doclist landed, so a missing dir is a
+    damaged index: ``FileNotFoundError`` names it."""
     import os
 
     out = None
     for g in man["generations"]:
         d = os.path.join(path, "doclist", f"gen={g['gen']}")
         if not os.path.isdir(d):
-            return None
+            raise FileNotFoundError(
+                f"lexical index at {path} lists generation {g['gen']} but "
+                f"has no doclist/gen={g['gen']} dir; rebuild the index"
+            )
         part = (
             spark.read.schema(_DOCLIST_SCHEMA)
             .option("basePath", d)
@@ -647,14 +590,13 @@ def delete_from_lexical_index(
     training-data pipeline cannot ship without): the asked ids resolve
     against current membership (doc-bucket-pruned, already-deleted docs
     excluded), their exact (count, total dl) comes from the doclist's
-    stored ``dl`` (postings fallback for pre-v3 generations), and one
-    doc-bucketed ``tombstones/gen=N`` artifact plus an atomic manifest
-    append commits the delete. Every probe masks tombstoned docs and
-    subtracts their mass from N/avgdl, so **probe-after-delete is
-    row-identical to a probe of an index rebuilt without those docs**
-    (df recomputes over surviving postings; oracled by
-    a0k_lex_delete_probe). Compaction applies tombstones physically and
-    retires the fully-absorbed ones.
+    stored ``dl``, and one doc-bucketed ``tombstones/gen=N`` artifact
+    plus an atomic manifest append commits the delete. Every probe
+    masks tombstoned docs and subtracts their mass from N/avgdl, so
+    **probe-after-delete is row-identical to a probe of an index rebuilt
+    without those docs** (df recomputes over surviving postings; oracled
+    by a0k_lex_delete_probe). Compaction applies tombstones physically
+    and retires the fully-absorbed ones.
 
     Scoped by generation: the tombstone covers generations listed at
     commit time (``max_gen``), so RE-APPENDING a deleted doc_id later
@@ -666,51 +608,29 @@ def delete_from_lexical_index(
     never a postings rewrite."""
     import os
 
-    from .incremental import _GENCLAIM_PREFIX
-
-    man = _load_lex_manifest(path)
-    applied = {
-        t.get("increment_id") for t in man.get("tombstones", [])
-    } | set(man.get("applied_deletes", []))
+    man = commit.load_manifest(path)
+    applied = commit.applied_deletes(man)
     if increment_id is not None and increment_id in applied:
         return False
     want = ids.select(
         F.col(ids.columns[0]).cast("long").alias("doc_id")
     ).distinct()
     member = indexed_doc_ids(spark, path, want)
-    # exact removal mass: dl from the doclist (v3); pre-v3 rows carry
-    # NULL dl and fall back to the doc's postings dl (any row — every
-    # posting carries the doc length)
-    dl = _read_doclist(spark, path, man)
-    if dl is None:
-        _materialize_missing_doclists(spark, path)
-        dl = _read_doclist(spark, path, man)
-    # mask already-deleted doclist rows: a deleted-then-re-added doc has
-    # TWO doclist rows and only the live one may contribute its dl
-    dl = _mask_deleted(dl, _active_tombstones(spark, path, man))
-    picked = member.join(
-        dl.select("doc_id", "dl"), "doc_id", "left"
+    # exact removal mass from the doclist's dl; already-deleted rows are
+    # masked — a deleted-then-re-added doc has TWO doclist rows and only
+    # the live one may contribute its dl
+    dl = _mask_deleted(
+        _read_doclist(spark, path, man), _active_tombstones(spark, path, man)
     )
-    row = picked.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("dl").alias("s"),
-        F.count(F.when(F.col("dl").isNull(), 1)).alias("nulls"),
-    ).collect()[0]
+    row = (
+        member.join(dl.select("doc_id", "dl"), "doc_id", "left")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s"))
+        .collect()[0]
+    )
     d_n, d_s = int(row["n"]), int(row["s"] or 0)
     if d_n == 0:
         return False
-    if int(row["nulls"]):
-        pd = (
-            _read_postings(spark, path, man)
-            .join(picked.filter(F.col("dl").isNull()).select("doc_id"),
-                  "doc_id", "left_semi")
-            .groupBy("doc_id")
-            .agg(F.max("dl").alias("dl"))
-            .agg(F.sum("dl").alias("s"))
-            .collect()[0]
-        )
-        d_s += int(pd["s"] or 0)
-    gen = _claim_generation(path)
+    gen = commit.claim_generation(path)
     (
         member.withColumn("db", _db("doc_id"))
         .repartition(1, F.col("db"))
@@ -718,16 +638,11 @@ def delete_from_lexical_index(
         .partitionBy("db")
         .parquet(os.path.join(path, "tombstones", f"gen={gen}"))
     )
-    with _manifest_lock(path):
-        cur = _load_lex_manifest(path)
-        applied_now = {
-            t.get("increment_id") for t in cur.get("tombstones", [])
-        } | set(cur.get("applied_deletes", []))
+    with commit.manifest_lock(path):
+        cur = commit.load_manifest(path)
+        applied_now = commit.applied_deletes(cur)
         if increment_id is not None and increment_id in applied_now:
-            try:
-                os.remove(os.path.join(path, f"{_GENCLAIM_PREFIX}{gen}"))
-            except OSError:
-                pass
+            commit.release(path, commit.GENCLAIM_PREFIX, gen)
             return False
         if {g["gen"] for g in cur["generations"]} != {
             g["gen"] for g in man["generations"]
@@ -754,63 +669,9 @@ def delete_from_lexical_index(
                 "sum_dl_removed": d_s,
             }
         )
-        _write_lex_manifest(path, cur)
-    try:
-        os.remove(os.path.join(path, f"{_GENCLAIM_PREFIX}{gen}"))
-    except OSError:
-        pass
+        commit.write_manifest(path, cur)
+    commit.release(path, commit.GENCLAIM_PREFIX, gen)
     return True
-
-
-def _materialize_missing_doclists(spark, path: str) -> list[int]:
-    """One-time in-place upgrade of a pre-round-12 index: derive the
-    doclist of every listed generation that lacks one from that
-    generation's own postings (distinct doc_id — one narrow-column scan
-    per legacy generation, run ONCE ever, not per probe). Serialized
-    under the manifest lock; each doclist lands via write-to-temp +
-    atomic rename, so a concurrent reader sees either no dir (and blocks
-    on the lock here) or a complete one — a listed generation's dir must
-    never be readable half-written.
-
-    Honest limit: a legacy generation's TOKENLESS docs left no postings,
-    so its derived doclist cannot contain them — exactly as blind as the
-    fallback scan this replaces, but confined to the legacy generations;
-    every post-upgrade append/compact records tokenless docs properly.
-    Returns the generation numbers materialized."""
-    import os
-    import shutil
-
-    with _manifest_lock(path):
-        man = _load_lex_manifest(path)
-        missing = [
-            g["gen"]
-            for g in man["generations"]
-            if not os.path.isdir(os.path.join(path, "doclist", f"gen={g['gen']}"))
-        ]
-        for gen in missing:
-            d = os.path.join(path, "postings", f"gen={gen}")
-            post = (
-                spark.read.schema(_POSTINGS_SCHEMA)
-                .option("basePath", d)
-                .parquet(d)
-            )
-            tmp = os.path.join(path, "doclist", f".tmp-gen={gen}")
-            shutil.rmtree(tmp, ignore_errors=True)
-            (
-                # dl rides along (v3): for legacy docs it is recoverable
-                # from any posting row (every posting carries the doc
-                # length); tokenless legacy docs have no postings and
-                # are not representable here at all — documented limit
-                post.groupBy("doc_id")
-                .agg(F.max("dl").alias("dl"))
-                .withColumn("db", _db("doc_id"))
-                .repartition(DOC_BUCKETS, F.col("db"))
-                .write.mode("overwrite")
-                .partitionBy("db")
-                .parquet(tmp)
-            )
-            os.rename(tmp, os.path.join(path, "doclist", f"gen={gen}"))
-    return missing
 
 
 def indexed_doc_ids(
@@ -836,16 +697,8 @@ def indexed_doc_ids(
     matching. The nightly loop guarantees the ordering (every pending
     increment's BOTH legs are appended before it ever compacts); do not
     hand-run ``compact_lexical_index`` between a mid-night crash and its
-    replay.
-
-    Pre-round-12 indexes (no doclist artifact) are upgraded IN PLACE on
-    first probe — ``_materialize_missing_doclists`` derives each legacy
-    generation's doclist from its own postings, once ever — so every
-    probe after the first runs the pruned path, and tokenless docs in
-    post-upgrade generations are always visible (the deleted fallback
-    scanned ALL generations' postings, so one legacy generation made the
-    probe blind to every later generation's tokenless docs too)."""
-    man = _load_lex_manifest(path)
+    replay."""
+    man = commit.load_manifest(path)
     gens = [
         g for g in man["generations"]
         if exclude_increment_id is None
@@ -856,9 +709,6 @@ def indexed_doc_ids(
     sub = dict(man, generations=gens)
     want = ids.select(F.col("doc_id").cast("long").alias("doc_id")).distinct()
     dl = _read_doclist(spark, path, sub)
-    if dl is None:
-        _materialize_missing_doclists(spark, path)
-        dl = _read_doclist(spark, path, sub)
     dbs = [r["db"] for r in want.select(_db("doc_id").alias("db")).distinct().collect()]
     if len(dbs) < DOC_BUCKETS:
         dl = dl.filter(F.col("db").isin(dbs))
@@ -901,7 +751,7 @@ def bm25_topk_from_index(
     docs whose postings match EVERY distinct query term rank; scores
     unchanged, candidate set narrowed before top-k (identical to the
     scan twin's flag; oracled by a0j_bm25_conjunctive)."""
-    man = _load_lex_manifest(path)
+    man = commit.load_manifest(path)
     # live stats: generation sums minus active-tombstone removals — so
     # after a delete, N/avgdl are exactly what a rebuild-without would
     # compute (round 13)
@@ -1008,7 +858,7 @@ def phrase_matching_docs(
     terms = [t for t in terms if t != ""]
     if not terms:
         raise ValueError("phrase_matching_docs needs a non-empty phrase")
-    man = _load_lex_manifest(path)
+    man = commit.load_manifest(path)
     if not man.get("positions"):
         raise ValueError(
             f"lexical index at {path} was built without positions=True; "
@@ -1056,7 +906,7 @@ def lexical_index_stats(spark, path: str) -> DataFrame:
     append/delete/fold accounting chain."""
     import math
 
-    man = _load_lex_manifest(path)
+    man = commit.load_manifest(path)
     n, s = _live_stats(man)
     avgdl = (
         # half-up at 1e-4, matching F.round/DuckDB ROUND (Python's
@@ -1109,7 +959,7 @@ def proximity_matching_docs(
     if window < 1:
         raise ValueError(f"window must be >= 1, got {window}")
     n_terms = len(set(terms))
-    man = _load_lex_manifest(path)
+    man = commit.load_manifest(path)
     if not man.get("positions"):
         raise ValueError(
             f"lexical index at {path} was built without positions=True; "
@@ -1154,7 +1004,7 @@ def proximity_matching_docs_batch(
     tests/test_phrase.py."""
     if window < 1:
         raise ValueError(f"window must be >= 1, got {window}")
-    man = _load_lex_manifest(path)
+    man = commit.load_manifest(path)
     if not man.get("positions"):
         raise ValueError(
             f"lexical index at {path} was built without positions=True; "
@@ -1211,12 +1061,11 @@ def add_positions_to_index(
     """In-place positions BACKFILL for an existing non-positional index
     (round-15 verdict task 3): a 100 TB index you'd rather not rebuild
     can start serving phrase queries by deriving a ``positions/gen=N``
-    artifact for every committed generation from the corpus text —
-    the same upgrade discipline as ``_materialize_missing_doclists``
-    (the doclist v2→v3 precedent): write every per-generation artifact
-    first, then flip ``positions: true`` in the manifest under the lock
-    as the ONE commit point. A crash anywhere earlier leaves the flag
-    off (probes unaffected — orphan dirs invisible) and a re-run
+    artifact for every committed generation from the corpus text:
+    write every per-generation artifact first, then flip ``positions:
+    true`` in the manifest under the lock as the ONE commit point. A
+    crash anywhere earlier leaves the flag off (probes unaffected —
+    orphan dirs invisible) and a re-run
     overwrites the orphans idempotently; a concurrent append landing
     mid-backfill is fenced loudly (its generation would have no
     positions artifact, silently breaking phrase recall forever).
@@ -1237,14 +1086,10 @@ def add_positions_to_index(
 
     Returns the generation numbers backfilled ([] if the index already
     serves positions)."""
-    man = _load_lex_manifest(path)
+    man = commit.load_manifest(path)
     if man.get("positions"):
         return []
-    _materialize_missing_doclists(spark, path)
-    man = _load_lex_manifest(path)
     dl = _read_doclist(spark, path, man)
-    if dl is None:
-        raise ValueError(f"lexical index at {path} has no readable doclist")
     live = _mask_deleted(dl, _active_tombstones(spark, path, man)).select(
         "doc_id", "_gen"
     )
@@ -1274,15 +1119,15 @@ def add_positions_to_index(
                 path,
                 gen,
             )
-        with _manifest_lock(path):
-            cur = _load_lex_manifest(path)
+        with commit.manifest_lock(path):
+            cur = commit.load_manifest(path)
             if {g["gen"] for g in cur["generations"]} != set(gens):
                 raise RuntimeError(
                     f"concurrent append landed during positions backfill "
                     f"of {path}; re-run add_positions_to_index"
                 )
             cur["positions"] = True
-            _write_lex_manifest(path, cur)
+            commit.write_manifest(path, cur)
         return gens
     finally:
         from .bpetrain import _checkpointed_rdd_id, _unpersist_rdd_ids
@@ -1311,7 +1156,7 @@ def phrase_matching_docs_batch(
     instead of once per phrase. Slot numbering compacts empty tokens
     exactly as the single-phrase spelling (``phrase_matching_docs``), so
     batch==single parity is exact — pinned in tests/test_phrase.py."""
-    man = _load_lex_manifest(path)
+    man = commit.load_manifest(path)
     if not man.get("positions"):
         raise ValueError(
             f"lexical index at {path} was built without positions=True; "
@@ -1638,7 +1483,7 @@ def hybrid_topk_rrf_batch(
                 "left_semi",
             )
         filter_pairs = nm
-    man = _load_lex_manifest(lex_path)
+    man = commit.load_manifest(lex_path)
     n_docs, sum_dl = _live_stats(man)
     if n_docs == 0:
         raise ValueError(f"lexical index at {lex_path} is empty")

@@ -19,16 +19,15 @@ residue report. ``scope`` picks the contract being audited:
   scope is the post-compaction audit ("has the fingerprint left the
   disk"), not a delete-correctness check.
 
-Legacy content-hash rows (pre-round-14 text-index generations carry no
-doc_id) are only detectable by content: pass (doc_id, text) and the
-hashes family is additionally probed by md5(text) — id-only audits
-cover every id-keyed artifact and say so in the report.
+Every audited artifact is id-keyed (the text index's hash rows carry the
+doc_id), so the asked ids alone cover every family.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .. import commit
 from ..functions.local_frames import literal_frame
 
 _REPORT_SCHEMA = "artifact string, doc_id bigint, n_rows bigint"
@@ -53,15 +52,16 @@ def verify_forgotten(
     merged_dir: str | None = None,
     scope: str = "served",
     id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Residue report for a takedown: one row per (artifact, doc_id)
     still holding rows for an asked id — EMPTY means fully forgotten at
     the chosen ``scope``. Families audited (each present only when its
     path is configured): lex ``postings`` / ``positions`` (when the
     index stores them) / ``doclist``; ann ``vectors`` / ``veclist``;
-    text ``grams`` / ``sizes`` / ``hashes`` (id-keyed, plus
-    content-keyed when ``ids`` carries text); ``merged`` corpus rows.
+    text ``grams`` / ``sizes`` / ``hashes``; ``merged`` corpus rows.
+    A listed generation without its doclist or veclist raises
+    ``FileNotFoundError`` rather than dropping that family from the
+    audit.
 
     Cost: delete-sized semi-joins on narrow id columns — the same probe
     class as the deletes themselves; the merged check prunes children
@@ -71,7 +71,6 @@ def verify_forgotten(
     if scope not in ("served", "physical"):
         raise ValueError(f"scope must be 'served' or 'physical', got {scope!r}")
     served = scope == "served"
-    has_text = text_col in ids.columns
     want = ids.select(
         F.col(id_col).cast("long").alias("doc_id")
     ).distinct()
@@ -79,7 +78,7 @@ def verify_forgotten(
     if lex_index_path is not None:
         from . import lexindex as lx
 
-        man = lx._load_lex_manifest(lex_index_path)
+        man = commit.load_manifest(lex_index_path)
         tomb = lx._active_tombstones(spark, lex_index_path, man) if served else None
         post = lx._read_postings(spark, lex_index_path, man)
         parts.append(
@@ -93,14 +92,13 @@ def verify_forgotten(
                 )
             )
         dl = lx._read_doclist(spark, lex_index_path, man)
-        if dl is not None:
-            parts.append(
-                _residue(lx._mask_deleted(dl, tomb), "doc_id", want, "lex:doclist")
-            )
+        parts.append(
+            _residue(lx._mask_deleted(dl, tomb), "doc_id", want, "lex:doclist")
+        )
     if ann_index_path is not None:
         from . import annindex as ax
 
-        man = ax._load_ann_manifest(ann_index_path)
+        man = commit.load_manifest(ann_index_path)
         tomb = (
             ax._active_vec_tombstones(spark, ann_index_path, man)
             if served
@@ -113,16 +111,15 @@ def verify_forgotten(
             )
         )
         vl = ax._read_veclist(spark, ann_index_path, man)
-        if vl is not None:
-            parts.append(
-                _residue(
-                    ax._mask_deleted_vecs(vl, tomb), "vec_id", want, "ann:veclist"
-                )
+        parts.append(
+            _residue(
+                ax._mask_deleted_vecs(vl, tomb), "vec_id", want, "ann:veclist"
             )
+        )
     if text_index_path is not None:
         from . import incremental as inc
 
-        man = inc._load_manifest(text_index_path)
+        man = commit.load_manifest(text_index_path)
         tomb = (
             inc._active_text_tombstones(spark, text_index_path, man)
             if served
@@ -147,34 +144,14 @@ def verify_forgotten(
                 inc._mask_deleted_ids(sizes, tomb), "base_id", want, "text:sizes"
             )
         )
-        hm = inc._mask_deleted_hashes(hashes, tomb)
         parts.append(
             _residue(
-                hm.filter(F.col("doc_id").isNotNull()),
+                inc._mask_deleted_ids(hashes, tomb, "doc_id"),
                 "doc_id",
                 want,
                 "text:hashes",
             )
         )
-        if has_text:
-            # legacy rows carry no doc_id — only the content hash can
-            # prove them gone; report them under the ASKED doc's id
-            want_k = ids.select(
-                F.col(id_col).cast("long").alias("doc_id"),
-                F.md5(text_col).alias("k"),
-            ).distinct()
-            parts.append(
-                hm.filter(F.col("doc_id").isNull())
-                .select("k")
-                .join(want_k, "k")
-                .groupBy("doc_id")
-                .agg(F.count(F.lit(1)).alias("n_rows"))
-                .select(
-                    F.lit("text:hashes:content").alias("artifact"),
-                    "doc_id",
-                    "n_rows",
-                )
-            )
     if merged_dir is not None:
         import os
 

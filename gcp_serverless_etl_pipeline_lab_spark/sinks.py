@@ -13,9 +13,11 @@ history — the parquet-native analogue of the reference's GCS bucket
 versioning on the warehouse bucket (`terraform/main.tf:36-54`), where
 every WRITE_TRUNCATE leaves the prior object generation readable.
 ``write_warehouse`` and ``compaction.compact_epochs`` both commit through
-``_commit``; ``read_warehouse`` reads the pointer target, a pinned
-``version=``, streamed ``epoch=K`` dirs, or a flat directory another tool
-wrote.
+``_commit``, whose claim, lock and pointer replace are the package's
+``commit`` primitives — so the warehouse path must be local: a
+``scheme://`` URI raises ``ValueError`` before any Spark job runs.
+``read_warehouse`` reads the pointer target, a pinned ``version=``,
+streamed ``epoch=K`` dirs, or a flat directory another tool wrote.
 
 Scale note: both writers accept a ``partition_by`` so a 100 TB run can
 partition the warehouse by date and prune at read time.
@@ -28,6 +30,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from . import commit
 
 
 def write_warehouse(
@@ -42,7 +46,7 @@ def write_warehouse(
     never sees a missing or partial table. Spark's plain
     ``mode('overwrite')`` has a delete-then-write window, so this writes a
     fresh immutable ``v=N`` snapshot, then atomically flips the
-    ``_CURRENT`` pointer file to it (``os.replace`` locally; on an object
+    ``_CURRENT`` pointer file to it (``commit.replace``; on an object
     store the pointer flip is a single-object PUT, equally atomic).
     Readers resolve the pointer (``read_warehouse``), so a writer that
     dies mid-write leaves the pointer — and every concurrent reader — on
@@ -113,36 +117,12 @@ def _list_versions(path: str) -> list[int]:
     return sorted(out)
 
 
-def _list_claims(path: str) -> list[int]:
-    """Version numbers claimed (marker present) but possibly not yet
-    written — a racing or crashed writer holds these."""
-    if not os.path.isdir(path):
-        return []
-    return sorted(
-        int(name[len(_CLAIM_PREFIX):])
-        for name in os.listdir(path)
-        if name.startswith(_CLAIM_PREFIX)
-        and name[len(_CLAIM_PREFIX):].isdigit()
-    )
-
-
 def _claim_version(path: str) -> int:
-    """Reserve the next version number with an EXCLUSIVE-create marker
-    file (``open(..., 'x')`` — atomic on POSIX; the object-store analogue
-    is a conditional if-none-match PUT). Two concurrent writers cannot
-    claim the same N: the loser's create fails and it retries one higher.
-    Crashed writers leave a stale marker, which only costs a skipped
-    number — claims never block progress."""
-    os.makedirs(path, exist_ok=True)
-    while True:
-        taken = set(_list_versions(path)) | set(_list_claims(path))
-        cand = (max(taken) + 1) if taken else 0
-        try:
-            with open(os.path.join(path, f"{_CLAIM_PREFIX}{cand}"), "x"):
-                pass
-            return cand
-        except FileExistsError:
-            continue
+    """Reserve the next version number: a ``.claim-vN`` marker through
+    ``commit.claim``, above every ``v=N`` dir and claim already present.
+    Two concurrent writers cannot claim the same N; a crashed writer's
+    stale marker only costs a skipped number."""
+    return commit.claim(path, _CLAIM_PREFIX, lambda: set(_list_versions(path)))
 
 
 def _pointer_info(path: str) -> tuple[int | None, int | None]:
@@ -171,40 +151,28 @@ def _pointer_info(path: str) -> tuple[int | None, int | None]:
 
 
 def _flip_pointer(path: str, version: int, through: int | None = None) -> None:
-    """Atomically point ``path/_CURRENT`` at ``v=<version>`` — write a
-    temp file then ``os.replace`` (atomic on POSIX; the object-store
-    analogue is one PUT of the pointer object). MONOTONIC: if a racing
-    writer already committed a NEWER version, skip the flip — our
-    (older-claimed) snapshot stays on disk for time travel but never
-    rolls the table back. ``through`` records the highest streamed epoch
-    folded into this snapshot (epoch compaction); it rides the same
-    atomic replace and is carried forward when a later plain write
-    omits it.
+    """Atomically point ``path/_CURRENT`` at ``v=<version>`` through
+    ``commit.replace``. MONOTONIC: if a racing writer already committed a
+    NEWER version, skip the flip — our (older-claimed) snapshot stays on
+    disk for time travel but never rolls the table back. ``through``
+    records the highest streamed epoch folded into this snapshot (epoch
+    compaction); it rides the same atomic replace and is carried forward
+    when a later plain write omits it.
 
-    The read-check-replace runs under an exclusive flock on a sidecar
-    lock file: without it two racing flips can interleave as
-    A-reads(none), B-reads(none), B-replaces(v=3), A-replaces(v=2) —
-    a rollback through the unguarded TOCTOU window. The object-store
-    analogue is a conditional PUT (if-match on the pointer's etag),
-    retried on precondition failure."""
-    import fcntl
-
-    with open(os.path.join(path, f".{_POINTER}.lock"), "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
-        try:
-            cur, cur_through = _pointer_info(path)
-            if cur is not None and cur > version:
-                return
-            if through is None:
-                through = cur_through  # never forget absorbed epochs
-            tmp = os.path.join(path, f".{_POINTER}.tmp.{version}")
-            with open(tmp, "w") as fh:
-                fh.write(f"v={version}")
-                if through is not None:
-                    fh.write(f"\nthrough={through}")
-            os.replace(tmp, os.path.join(path, _POINTER))
-        finally:
-            fcntl.flock(lock, fcntl.LOCK_UN)
+    The read-check-replace runs under ``commit.locked``: without it two
+    racing flips can interleave as A-reads(none), B-reads(none),
+    B-replaces(v=3), A-replaces(v=2) — a rollback through the unguarded
+    TOCTOU window."""
+    with commit.locked(path, f".{_POINTER}.lock"):
+        cur, cur_through = _pointer_info(path)
+        if cur is not None and cur > version:
+            return
+        if through is None:
+            through = cur_through  # never forget absorbed epochs
+        text = f"v={version}"
+        if through is not None:
+            text += f"\nthrough={through}"
+        commit.replace(os.path.join(path, _POINTER), text)
 
 
 def _list_epochs(path: str) -> list[tuple[int, str]]:
@@ -265,10 +233,7 @@ def _prune_versions(path: str, keep_versions: int) -> None:
             continue
         d = os.path.join(path, f"v={old}")
         shutil.rmtree(d, ignore_errors=True)
-        try:
-            os.remove(os.path.join(path, f"{_CLAIM_PREFIX}{old}"))
-        except OSError:
-            pass
+        commit.release(path, _CLAIM_PREFIX, old)
 
 
 def vacuum_versions(path: str, min_age_seconds: float = 86400.0) -> list[int]:
@@ -281,27 +246,20 @@ def vacuum_versions(path: str, min_age_seconds: float = 86400.0) -> list[int]:
     committed pointer target or any complete snapshot (those are
     ``_prune_versions``'s business). Returns the version numbers swept."""
     import shutil
-    import time
 
     cur, _ = _pointer_info(path)
-    now = time.time()
     swept: list[int] = []
-    claimed = set(_list_claims(path)) | set(_list_versions(path))
+    claimed = set(commit.claims(path, _CLAIM_PREFIX)) | set(_list_versions(path))
     for v in sorted(claimed):
         if v == cur or _is_complete(path, v):
             continue  # complete snapshot: time-travel asset, not debris
         d = os.path.join(path, f"v={v}")
-        marker = os.path.join(path, f"{_CLAIM_PREFIX}{v}")
-        stamps = [
-            os.path.getmtime(p) for p in (d, marker) if os.path.exists(p)
-        ]
-        if not stamps or now - max(stamps) < min_age_seconds:
+        if not commit.is_stale(
+            [d, commit.marker(path, _CLAIM_PREFIX, v)], min_age_seconds
+        ):
             continue
         shutil.rmtree(d, ignore_errors=True)
-        try:
-            os.remove(marker)
-        except OSError:
-            pass
+        commit.release(path, _CLAIM_PREFIX, v)
         swept.append(v)
     return swept
 

@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from .. import commit
+
 
 def run_ann_search(
     spark,
@@ -110,17 +112,14 @@ def run_nightly_ann_loop(
 
     from ..operators.annindex import (
         ModelEpochChangedError,
-        _load_ann_manifest,
         ann_drift_report,
         append_ann_index,
         compact_ann_index,
     )
     from ..operators.incremental import vacuum_index
 
-    man = _load_ann_manifest(index_path)
-    applied = {
-        g.get("increment_id") for g in man["generations"]
-    } | set(man.get("compacted_increments", []))
+    man = commit.load_manifest(index_path)
+    applied = commit.applied_increments(man)
     appended: list[str] = []
     skipped: list[str] = []
     n_new = 0
@@ -151,7 +150,7 @@ def run_nightly_ann_loop(
     compacted = None
     if (
         compact_every is not None
-        and len(_load_ann_manifest(index_path)["generations"]) >= compact_every
+        and len(commit.load_manifest(index_path)["generations"]) >= compact_every
     ):
         compacted = compact_ann_index(
             spark, index_path, max_generations_to_fold=max_generations_to_fold

@@ -27,6 +27,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import commit
+
 
 def dedup_stream_exact(
     records: DataFrame,
@@ -206,7 +208,6 @@ def run_nightly_loop(
     import re
 
     from ..operators.incremental import (
-        _load_manifest,
         append_to_index,
         compact_index,
         exact_dups_vs_index,
@@ -216,10 +217,8 @@ def run_nightly_loop(
     run_incremental_classify(
         spark, input_dir, index_path, out_path, checkpoint_dir, threshold
     )
-    man = _load_manifest(index_path)
-    applied = {
-        g.get("increment_id") for g in man["generations"]
-    } | set(man.get("compacted_increments", []))
+    man = commit.load_manifest(index_path)
+    applied = commit.applied_increments(man)
     epochs = sorted(
         int(m.group(1))
         for m in (
@@ -277,7 +276,7 @@ def run_nightly_loop(
     compacted = None
     if (
         compact_every is not None
-        and len(_load_manifest(index_path)["generations"]) >= compact_every
+        and len(commit.load_manifest(index_path)["generations"]) >= compact_every
     ):
         compacted = compact_index(
             spark, index_path, max_generations_to_fold=max_generations_to_fold

@@ -33,6 +33,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from .. import commit
+
 
 def _merged_children(merged_dir: str) -> list[str]:
     import os
@@ -44,34 +46,6 @@ def _merged_children(merged_dir: str) -> list[str]:
         for name in os.listdir(merged_dir)
         if not name.startswith((".", "_"))
     )
-
-
-def _read_merged(
-    spark, merged_dir: str, id_col: str, text_col: str, want_stats=None
-):
-    """(doc_id, text) union of the merged-corpus children, or None when
-    the dir is empty — the text-resolution fallback for deleting docs
-    whose index generations predate per-row ids (round 14).
-    ``want_stats`` (round 15): optional id stats of the docs the caller
-    actually needs (`_id_stats_of` of the delete frame) — children whose
-    recorded stats provably cannot hold any wanted doc are left out of
-    the union, so the legacy-hash resolution reads blast-radius bytes
-    like the purge does instead of the whole corpus."""
-    import os
-
-    stats = _load_child_stats(merged_dir) if want_stats is not None else {}
-    out = None
-    for name in _merged_children(merged_dir):
-        if want_stats is not None and _stats_disjoint(
-            stats.get(name), want_stats
-        ):
-            continue
-        part = spark.read.parquet(os.path.join(merged_dir, name)).select(
-            F.col(id_col).cast("long").alias("doc_id"),
-            F.col(text_col).alias("text"),
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
 
 
 # ---- per-child id statistics for the merged corpus (round-15 verdict
@@ -106,11 +80,7 @@ def _write_child_stats(merged_dir: str, stats: dict) -> None:
     import json
     import os
 
-    os.makedirs(merged_dir, exist_ok=True)
-    tmp = os.path.join(merged_dir, _CHILD_STATS + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(stats, fh)
-    os.replace(tmp, os.path.join(merged_dir, _CHILD_STATS))
+    commit.replace(os.path.join(merged_dir, _CHILD_STATS), json.dumps(stats))
 
 
 def _id_stats_of(df, id_col: str) -> dict | None:
@@ -166,10 +136,10 @@ def _purge_merged(spark, merged_dir: str, ids, id_col: str) -> dict:
     Read cost tracks the delete's blast radius (round-15 verdict task
     2): the doomed ids' range/occupancy stats are compared against each
     child's `_child_stats.json` entry and provably-disjoint children are
-    skipped WITHOUT a read; a child with no stats yet (written by a
-    pre-round-15 driver) is read once and its entry backfilled, so the
-    full-corpus id sweep is paid at most once per legacy dir, not once
-    per delete night. For children actually read, one delete-sized
+    skipped WITHOUT a read; a child with no stats entry (a crash between
+    its write and ``_record_child_stats``) is read once and its entry
+    backfilled, so its id sweep is paid at most once, not once per
+    delete night. For children actually read, one delete-sized
     semi-join decides whether the child holds any doomed row; misses
     are untouched, hits have survivors written to a dot-prefixed temp
     dir (hidden from every scan) and swapped in.
@@ -236,9 +206,9 @@ def _purge_merged(spark, merged_dir: str, ids, id_col: str) -> dict:
         n_read += 1
         df = spark.read.parquet(cpath)
         if child_st is None:
-            # legacy child (pre-stats writer): backfill its entry from
-            # the read we are already paying, so the NEXT delete night
-            # can skip it without a read
+            # child without stats: backfill its entry from the read we
+            # are already paying, so the NEXT delete night can skip it
+            # without a read
             st = _id_stats_of(df, id_col)
             if st is not None:
                 stats[name] = st
@@ -320,14 +290,12 @@ def run_nightly(
     forgotten), per increment in crash-stable order **ANN → lexical →
     text** — the REVERSE of the append order, so the serving invariant
     (ANN ⊆ lex) holds at every crash point — then ONE merged-corpus
-    purge for the whole night's increments (after every text leg, so
-    legacy content hashes can still resolve from the corpus copy before
-    it is scrubbed; batched because the purge probes every merged
-    child, a cost worth paying once per night rather than once per
-    increment). Each index leg is replay-idempotent via its manifest
-    ledger, the purge by construction; ``deletes_dir/_applied.json``
-    (written only after the purge) lets replays skip settled
-    increments.
+    purge for the whole night's increments (batched because the purge
+    probes every merged child, a cost worth paying once per night
+    rather than once per increment). Each index leg is replay-idempotent
+    via its manifest ledger, the purge by construction;
+    ``deletes_dir/_applied.json`` (written only after the purge) lets
+    replays skip settled increments.
 
     Maintenance: each configured index folds on its own ``compact_every``
     threshold (tiered by ``max_generations_to_fold``) OR when its active
@@ -363,27 +331,14 @@ def run_nightly(
     if lex_index_path is None and ann_index_path is None and text_index_path is None:
         raise ValueError("run_nightly needs at least one index path")
 
-    def _applied(load, path):
-        man = load(path)
-        return {
-            g.get("increment_id") for g in man["generations"]
-        } | set(man.get("compacted_increments", []))
+    def _applied(path):
+        if path is None:
+            return set()
+        return commit.applied_increments(commit.load_manifest(path))
 
-    lex_applied: set = set()
-    ann_applied: set = set()
-    text_applied: set = set()
-    if lex_index_path is not None:
-        from ..operators.lexindex import _load_lex_manifest
-
-        lex_applied = _applied(_load_lex_manifest, lex_index_path)
-    if ann_index_path is not None:
-        from ..operators.annindex import _load_ann_manifest
-
-        ann_applied = _applied(_load_ann_manifest, ann_index_path)
-    if text_index_path is not None:
-        from ..operators.incremental import _load_manifest
-
-        text_applied = _applied(_load_manifest, text_index_path)
+    lex_applied = _applied(lex_index_path)
+    ann_applied = _applied(ann_index_path)
+    text_applied = _applied(text_index_path)
 
     appended_lex: list[str] = []
     appended_ann: list[str] = []
@@ -571,33 +526,11 @@ def run_nightly(
                     spark, ids, lex_index_path, increment_id=name
                 )
             if text_index_path is not None:
-                from ..operators.incremental import (
-                    LegacyHashResolutionError,
-                    delete_from_index,
-                )
+                from ..operators.incremental import delete_from_index
 
-                try:
-                    delete_from_index(
-                        spark, ids, text_index_path, increment_id=name
-                    )
-                except LegacyHashResolutionError:
-                    # pre-round-14 generations need the text to resolve
-                    # the content hash — the merged corpus still has it
-                    # (the purge below runs AFTER every text leg)
-                    if merged_dir is None:
-                        raise
-                    docs = _read_merged(
-                        spark, merged_dir, id_col, text_col,
-                        want_stats=_id_stats_of(ids, "doc_id"),
-                    )
-                    if docs is None:
-                        raise
-                    delete_from_index(
-                        spark,
-                        docs.join(ids, "doc_id", "left_semi"),
-                        text_index_path,
-                        increment_id=name,
-                    )
+                delete_from_index(
+                    spark, ids, text_index_path, increment_id=name
+                )
             pending_ids = (
                 ids if pending_ids is None else pending_ids.unionByName(ids)
             )
@@ -625,11 +558,7 @@ def run_nightly(
             # entries bounds the file by the pending-delete backlog
             # instead of growing one entry per increment forever
             ledger = (ledger | set(applied_deletes)) & set(dchildren)
-            tmp = ledger_path + ".tmp"
-            os.makedirs(deletes_dir, exist_ok=True)
-            with open(tmp, "w") as fh:
-                json.dump(sorted(ledger), fh)
-            os.replace(tmp, ledger_path)
+            commit.replace(ledger_path, json.dumps(sorted(ledger)))
         if verify_deletes and applied_deletes:
             # per-night takedown audit (round-15 verdict task 4): the
             # served-scope residue report over tonight's ids must be
@@ -646,7 +575,6 @@ def run_nightly(
                 merged_dir=merged_dir,
                 scope="served",
                 id_col=id_col,
-                text_col=text_col,
             )
             rows = residue.limit(20).collect()
             forgotten_residue = len(rows)
@@ -666,15 +594,11 @@ def run_nightly(
     missing = 0
     vacuumed: list[str] = []
     if lex_index_path is not None:
-        from ..operators.incremental import _split_fold_slice
-        from ..operators.lexindex import (
-            _load_lex_manifest,
-            compact_lexical_index,
-        )
+        from ..operators.lexindex import compact_lexical_index
 
         # protect lex-applied increments pending in ANY sibling leg —
         # the replay guard's exclusion must keep matching them
-        lex_now = _load_lex_manifest(lex_index_path)
+        lex_now = commit.load_manifest(lex_index_path)
         lex_ids = {
             g.get("increment_id")
             for g in lex_now["generations"]
@@ -682,13 +606,9 @@ def run_nightly(
         }
         pending: set = set()
         if ann_index_path is not None:
-            from ..operators.annindex import _load_ann_manifest
-
-            pending |= lex_ids - _applied(_load_ann_manifest, ann_index_path)
+            pending |= lex_ids - _applied(ann_index_path)
         if text_index_path is not None:
-            from ..operators.incremental import _load_manifest
-
-            pending |= lex_ids - _applied(_load_manifest, text_index_path)
+            pending |= lex_ids - _applied(text_index_path)
         # fold on generation count OR on tombstone pressure (round-14
         # verdict task 3): a delete-heavy, append-quiet index never hits
         # compact_every, so its tombstone list — and every probe's mask
@@ -702,7 +622,7 @@ def run_nightly(
             compact_every is not None
             and len(lex_now["generations"]) >= compact_every
         ):
-            fold, _ = _split_fold_slice(
+            fold, _ = commit.split_fold_slice(
                 lex_now["generations"], max_generations_to_fold, pending
             )
             # a 1-generation fold is a no-op rewrite UNLESS tombstones
@@ -714,13 +634,9 @@ def run_nightly(
                     protect_increments=pending,
                 )
     if ann_index_path is not None:
-        from ..operators.annindex import (
-            _load_ann_manifest,
-            ann_drift_report,
-            compact_ann_index,
-        )
+        from ..operators.annindex import ann_drift_report, compact_ann_index
 
-        ann_now = _load_ann_manifest(ann_index_path)
+        ann_now = commit.load_manifest(ann_index_path)
         if (
             compact_tombstones_over is not None
             and len(ann_now.get("tombstones", [])) >= compact_tombstones_over
@@ -754,9 +670,9 @@ def run_nightly(
         rebuild = rep["rebuild_recommended"]
         drift = rep["max_ratio"]
     if text_index_path is not None:
-        from ..operators.incremental import _load_manifest, compact_index
+        from ..operators.incremental import compact_index
 
-        text_now = _load_manifest(text_index_path)
+        text_now = commit.load_manifest(text_index_path)
         if (
             compact_tombstones_over is not None
             and len(text_now.get("tombstones", [])) >= compact_tombstones_over
@@ -771,14 +687,12 @@ def run_nightly(
     if ann_index_path is not None and lex_index_path is not None:
         from ..operators.annindex import (
             _active_vec_tombstones,
-            _load_ann_manifest,
             _mask_deleted_vecs,
-            _materialize_missing_veclists,
             _read_veclist,
         )
         from ..operators.lexindex import indexed_doc_ids
 
-        ann_man = _load_ann_manifest(ann_index_path)
+        ann_man = commit.load_manifest(ann_index_path)
         if consistency_scope == "full":
             check_gens = ann_man["generations"]
         elif consistency_scope == "new":
@@ -794,9 +708,6 @@ def run_nightly(
         if check_gens:
             sub = dict(ann_man, generations=check_gens)
             vl = _read_veclist(spark, ann_index_path, sub)
-            if vl is None:
-                _materialize_missing_veclists(spark, ann_index_path)
-                vl = _read_veclist(spark, ann_index_path, sub)
             # mask ANN tombstones: a documented takedown deletes ANN
             # first, then lex — between that and ANN compaction the raw
             # veclist still carries the deleted vec_id while the lexical

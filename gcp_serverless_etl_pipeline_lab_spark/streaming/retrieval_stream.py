@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from .. import commit
+
 
 def _resolve_increment(raw, id_col, text_col, embedding_col, has_vec):
     """Deterministic one-row-per-doc resolution of an at-least-once
@@ -153,24 +155,17 @@ def run_nightly_retrieval_loop(
     import os
 
     from ..operators.lexindex import (
-        _load_lex_manifest,
         append_lexical_index,
         compact_lexical_index,
         indexed_doc_ids,
     )
 
-    lex_man = _load_lex_manifest(lex_index_path)
-    lex_applied = {
-        g.get("increment_id") for g in lex_man["generations"]
-    } | set(lex_man.get("compacted_increments", []))
+    lex_man = commit.load_manifest(lex_index_path)
+    lex_applied = commit.applied_increments(lex_man)
     ann_applied: set = set()
     if ann_index_path is not None:
-        from ..operators.annindex import _load_ann_manifest
-
-        ann_man = _load_ann_manifest(ann_index_path)
-        ann_applied = {
-            g.get("increment_id") for g in ann_man["generations"]
-        } | set(ann_man.get("compacted_increments", []))
+        ann_man = commit.load_manifest(ann_index_path)
+        ann_applied = commit.applied_increments(ann_man)
 
     appended_lex: list[str] = []
     appended_ann: list[str] = []
@@ -257,13 +252,10 @@ def run_nightly_retrieval_loop(
     # here structurally, not by docstring)
     pending: set = set()
     if ann_index_path is not None:
-        from ..operators.annindex import _load_ann_manifest as _lam
-
-        ann_now = _lam(ann_index_path)
-        ann_applied_now = {
-            g.get("increment_id") for g in ann_now["generations"]
-        } | set(ann_now.get("compacted_increments", []))
-        lex_now = _load_lex_manifest(lex_index_path)
+        ann_applied_now = commit.applied_increments(
+            commit.load_manifest(ann_index_path)
+        )
+        lex_now = commit.load_manifest(lex_index_path)
         pending = {
             g.get("increment_id")
             for g in lex_now["generations"]
@@ -271,13 +263,11 @@ def run_nightly_retrieval_loop(
         } - ann_applied_now
     if (
         compact_every is not None
-        and len(_load_lex_manifest(lex_index_path)["generations"])
+        and len(commit.load_manifest(lex_index_path)["generations"])
         >= compact_every
     ):
-        from ..operators.incremental import _split_fold_slice
-
-        fold, _ = _split_fold_slice(
-            _load_lex_manifest(lex_index_path)["generations"],
+        fold, _ = commit.split_fold_slice(
+            commit.load_manifest(lex_index_path)["generations"],
             max_generations_to_fold,
             pending,
         )
@@ -296,9 +286,7 @@ def run_nightly_retrieval_loop(
     if ann_index_path is not None:
         from ..operators.annindex import (
             _active_vec_tombstones,
-            _load_ann_manifest,
             _mask_deleted_vecs,
-            _materialize_missing_veclists,
             _read_veclist,
             ann_drift_report,
             compact_ann_index,
@@ -306,7 +294,7 @@ def run_nightly_retrieval_loop(
 
         if (
             compact_every is not None
-            and len(_load_ann_manifest(ann_index_path)["generations"])
+            and len(commit.load_manifest(ann_index_path)["generations"])
             >= compact_every
         ):
             compacted_ann = compact_ann_index(
@@ -342,7 +330,7 @@ def run_nightly_retrieval_loop(
         # reads only tonight's appended generations (night-bounded);
         # compaction may have just folded them, in which case the fold
         # IS tonight's generation and gets checked instead.
-        ann_man = _load_ann_manifest(ann_index_path)
+        ann_man = commit.load_manifest(ann_index_path)
         if consistency_scope == "full":
             check_gens = ann_man["generations"]
         elif consistency_scope == "new":
@@ -359,12 +347,9 @@ def run_nightly_retrieval_loop(
             # the checked generations' ids come from the ANN membership
             # artifact (veclist, round 13) — a narrow id-only read, so
             # even consistency_scope="full" never scans the embedding-
-            # carrying vectors/; pre-round-13 indexes upgrade in place
+            # carrying vectors/
             sub = dict(ann_man, generations=check_gens)
             vl = _read_veclist(spark, ann_index_path, sub)
-            if vl is None:
-                _materialize_missing_veclists(spark, ann_index_path)
-                vl = _read_veclist(spark, ann_index_path, sub)
             # mask ANN tombstones: after a takedown (delete ANN, then
             # lex) the raw veclist still lists the deleted vec_id until
             # ANN compaction retires the tombstone, while the lexical

@@ -9,6 +9,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from gcp_serverless_etl_pipeline_lab_spark import commit
 from gcp_serverless_etl_pipeline_lab_spark.operators import annindex, similarity
 from gcp_serverless_etl_pipeline_lab_spark.sources.tables import load_table
 
@@ -169,7 +170,7 @@ def test_compact_ann_index_folds_generations_preserves_queries(spark, tmp_path):
     )
     assert after == before and after
     assert annindex.load_ann_model(idx) == model_before
-    man = annindex._load_ann_manifest(idx)
+    man = commit.load_manifest(idx)
     (fold,) = man["generations"]
     assert fold["gen"] == 2 and fold["increment_id"] is None
     # round 11: the fold records the folded population's overall drift
@@ -251,9 +252,9 @@ def test_compact_ann_aborts_on_concurrent_append(spark, tmp_path, monkeypatch):
     # freeze the compactor's entry snapshot, then land a concurrent
     # append BEFORE its locked commit re-reads — the deterministic
     # spelling of the race window
-    stale = annindex._load_ann_manifest(idx)
+    stale = commit.load_manifest(idx)
     late = corpus.filter(F.col("vec_id") % 3 == 2)
-    real_load = annindex._load_ann_manifest
+    real_load = commit.load_manifest
     calls = {"n": 0}
 
     def entry_sees_stale(path):
@@ -263,13 +264,13 @@ def test_compact_ann_aborts_on_concurrent_append(spark, tmp_path, monkeypatch):
             return stale
         return real_load(path)
 
-    monkeypatch.setattr(annindex, "_load_ann_manifest", entry_sees_stale)
+    monkeypatch.setattr(commit, "load_manifest", entry_sees_stale)
     with _pytest.raises(RuntimeError, match="re-run compact_ann_index"):
         annindex.compact_ann_index(spark, idx)
     monkeypatch.undo()
 
     # nothing lost: the late append is still committed; re-run folds all
-    man = annindex._load_ann_manifest(idx)
+    man = commit.load_manifest(idx)
     assert {g.get("increment_id") for g in man["generations"]} == {
         None, "inc-1", "late",
     }
@@ -285,7 +286,7 @@ def test_compact_ann_aborts_on_concurrent_append(spark, tmp_path, monkeypatch):
     )
     assert got == want and got
     # the aborted fold's orphan dir is vacuum's business
-    live = {g["gen"] for g in annindex._load_ann_manifest(idx)["generations"]}
+    live = {g["gen"] for g in commit.load_manifest(idx)["generations"]}
     assert live == {gen}
     orphans = set(os.listdir(os.path.join(idx, "vectors"))) - {f"gen={gen}"}
     assert orphans, "aborted fold left no orphan (race not exercised)"
@@ -317,7 +318,7 @@ def test_ann_concurrent_distinct_appends_both_commit(spark, tmp_path):
     t2 = threading.Thread(target=_go, args=("inc-2", inc2))
     t1.start(); t2.start(); t1.join(); t2.join()
     assert results == {"inc-1": True, "inc-2": True}
-    man = annindex._load_ann_manifest(idx)
+    man = commit.load_manifest(idx)
     gens = [g["gen"] for g in man["generations"]]
     assert len(set(gens)) == 3
     # parity with a single-writer rebuild under the same pinned model
@@ -384,7 +385,7 @@ def test_rebuild_ann_index_retrains_from_stored_vectors(spark, tmp_path):
     annindex.rebuild_ann_index(spark, idx, iters=2, sample_rate=1.0)
     new_model = annindex.load_ann_model(idx)[1]
     assert new_model != old_model  # trained on base+inc, not base
-    man = annindex._load_ann_manifest(idx)
+    man = commit.load_manifest(idx)
     assert len(man["generations"]) == 1
     assert man["compacted_increments"] == ["odd"]
     assert annindex.append_ann_index(spark, inc, idx, "odd") is False
@@ -462,8 +463,6 @@ def test_append_aborts_when_retrain_flips_model_epoch(spark, tmp_path, monkeypat
     index queries identically to a scratch build."""
     import pytest as _pytest
 
-    from gcp_serverless_etl_pipeline_lab_spark.operators import incremental
-
     corpus, queries = _corpus_queries(spark)
     base = corpus.filter(F.col("vec_id") % 2 == 0)
     inc = corpus.filter(F.col("vec_id") % 2 == 1)
@@ -473,7 +472,7 @@ def test_append_aborts_when_retrain_flips_model_epoch(spark, tmp_path, monkeypat
     # deterministic race spelling: the retrain lands inside the append's
     # window between its model read and its locked commit — triggered
     # from the append's generation claim (which happens after the read)
-    real_claim = incremental._claim_generation
+    real_claim = commit.claim_generation
     state = {"fired": False}
 
     def claim_then_retrain(path):
@@ -482,7 +481,7 @@ def test_append_aborts_when_retrain_flips_model_epoch(spark, tmp_path, monkeypat
             annindex.rebuild_ann_index(spark, idx, iters=2, sample_rate=1.0)
         return real_claim(path)
 
-    monkeypatch.setattr(incremental, "_claim_generation", claim_then_retrain)
+    monkeypatch.setattr(commit, "claim_generation", claim_then_retrain)
     with _pytest.raises(
         annindex.ModelEpochChangedError, match="model epoch changed"
     ):
@@ -492,7 +491,7 @@ def test_append_aborts_when_retrain_flips_model_epoch(spark, tmp_path, monkeypat
     # nothing half-landed: the increment is NOT in the ledger, the
     # orphaned stale-assignment dir is invisible, and the retry commits
     # a re-assignment under the NEW model
-    man = annindex._load_ann_manifest(idx)
+    man = commit.load_manifest(idx)
     assert "odd" not in {g.get("increment_id") for g in man["generations"]}
     assert annindex.append_ann_index(spark, inc, idx, "odd") is True
     _, new_model = annindex.load_ann_model(idx)
@@ -523,7 +522,7 @@ def test_drift_flag_survives_compaction(spark, tmp_path):
     # baseline (64*s^2 extra squared distance per vector): far enough to
     # trip the flag, near enough that 10 shifted rows folded into ~250
     # base rows genuinely dilute the overall recompute below threshold
-    baseline = annindex._load_ann_manifest(idx)["baseline_msd"]
+    baseline = commit.load_manifest(idx)["baseline_msd"]
     s = (5.0 * baseline / 64.0) ** 0.5
     shifted = (
         corpus.filter(F.col("vec_id") % 2 == 1)

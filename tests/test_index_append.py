@@ -15,6 +15,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from gcp_serverless_etl_pipeline_lab_spark import commit
 from gcp_serverless_etl_pipeline_lab_spark.operators import incremental
 from gcp_serverless_etl_pipeline_lab_spark.sources.tables import load_table
 
@@ -96,10 +97,10 @@ def test_append_is_idempotent_by_increment_id(spark, tmp_path):
     incremental.build_base_index(base, idx, max_df=MAX_DF)
     assert incremental.append_to_index(spark, inc, idx, "epoch-7") is True
     before = _probe_all(spark, batch, idx)
-    man_before = incremental._load_manifest(idx)
+    man_before = commit.load_manifest(idx)
     # exactly-once replay: same increment_id is a committed no-op
     assert incremental.append_to_index(spark, inc, idx, "epoch-7") is False
-    assert incremental._load_manifest(idx) == man_before
+    assert commit.load_manifest(idx) == man_before
     assert _probe_all(spark, batch, idx) == before
 
 
@@ -113,7 +114,7 @@ def test_crash_orphaned_generation_is_invisible_then_replayed(spark, tmp_path):
     base_only = _probe_all(spark, batch, idx)
 
     # simulate the crashed attempt: generation files on disk, NO commit
-    man = incremental._load_manifest(idx)
+    man = commit.load_manifest(idx)
     incremental._write_generation(
         idx,
         1,
@@ -126,7 +127,7 @@ def test_crash_orphaned_generation_is_invisible_then_replayed(spark, tmp_path):
         gramdf=spark.createDataFrame([], incremental._GRAMDF_SCHEMA),
         capped=spark.createDataFrame([], incremental._CAPPED_SCHEMA),
     )
-    assert incremental._load_manifest(idx) == man  # nothing committed
+    assert commit.load_manifest(idx) == man  # nothing committed
     # orphaned generation is invisible: probe == pre-crash probe (the
     # orphan's hashes would have flipped fresh docs to exact_dup)
     assert _probe_all(spark, batch, idx) == base_only
@@ -138,15 +139,29 @@ def test_crash_orphaned_generation_is_invisible_then_replayed(spark, tmp_path):
     assert _probe_all(spark, batch, idx) == _probe_all(spark, batch, rebuilt)
 
 
-def test_append_rejects_v1_flat_layout(spark, tmp_path):
+@pytest.mark.parametrize("family", ["text", "lex", "ann"])
+def test_append_rejects_v1_flat_layout(spark, tmp_path, family):
+    """A manifest without ``version: 2`` is a layout no current writer
+    produces: every index family refuses it in ``commit.load_manifest``
+    instead of upgrading it."""
     import json
 
+    from gcp_serverless_etl_pipeline_lab_spark.operators import (
+        annindex,
+        lexindex,
+    )
+
+    append = {
+        "text": incremental.append_to_index,
+        "lex": lexindex.append_lexical_index,
+        "ann": annindex.append_ann_index,
+    }[family]
     idx = str(tmp_path / "v1")
     os.makedirs(idx)
     with open(os.path.join(idx, "_MANIFEST.json"), "w") as fh:
-        json.dump({"max_df": 100, "ngram": 3, "gram_buckets": 64}, fh)
-    with pytest.raises(ValueError, match="flat layout"):
-        incremental.append_to_index(spark, _docs(spark), idx)
+        json.dump({"generations": [{"gen": 0, "increment_id": None}]}, fh)
+    with pytest.raises(ValueError, match="manifest version None.*rebuild it"):
+        append(spark, _docs(spark), idx)
 
 
 def test_appended_probe_still_prunes_gram_buckets(spark, tmp_path):
@@ -178,7 +193,7 @@ def test_compact_folds_generations_preserves_probes_drops_dead_postings(
     assert gen == 2
     # probe-parity: compacted == multi-generation == rebuild
     assert _probe_all(spark, batch, idx) == before
-    man = incremental._load_manifest(idx)
+    man = commit.load_manifest(idx)
     assert man["generations"] == [{"gen": 2, "increment_id": None}]
     assert man["compacted_increments"] == ["inc-1"]
     # old generation dirs REMAIN on disk (an in-flight reader holding the
@@ -298,7 +313,7 @@ def test_concurrent_appends_commit_both_generations(spark, tmp_path):
     t2 = threading.Thread(target=_go, args=("inc-2", inc2))
     t1.start(); t2.start(); t1.join(); t2.join()
     assert results == {"inc-1": True, "inc-2": True}
-    man = incremental._load_manifest(idx)
+    man = commit.load_manifest(idx)
     ids = sorted(g["increment_id"] for g in man["generations"] if g["increment_id"])
     gens = [g["gen"] for g in man["generations"]]
     assert ids == ["inc-1", "inc-2"] and len(set(gens)) == 3
@@ -322,7 +337,7 @@ def test_vacuum_keeps_claim_of_actively_writing_append(spark, tmp_path):
 
     # in-flight appender: stale marker (mtime pushed into the past) but a
     # FRESH artifact file written moments ago
-    marker = os.path.join(idx, f"{incremental._GENCLAIM_PREFIX}1")
+    marker = os.path.join(idx, f"{commit.GENCLAIM_PREFIX}1")
     open(marker, "x").close()
     past = time.time() - 7200
     os.utime(marker, (past, past))
@@ -338,7 +353,7 @@ def test_vacuum_keeps_claim_of_actively_writing_append(spark, tmp_path):
     os.utime(os.path.join(gen_dir, "part-0.parquet"), (past, past))
     os.utime(gen_dir, (past, past))
     swept = incremental.vacuum_index(idx, min_age_seconds=3600)
-    assert f"{incremental._GENCLAIM_PREFIX}1" in swept
+    assert f"{commit.GENCLAIM_PREFIX}1" in swept
     assert "hashes/gen=1" in swept
     assert not os.path.exists(marker)
 
@@ -354,10 +369,10 @@ def test_commit_rejects_already_listed_generation(spark, tmp_path, monkeypatch):
     base, inc, _ = _split(spark)
     idx = str(tmp_path / "idx")
     incremental.build_base_index(base, idx, max_df=MAX_DF)
-    monkeypatch.setattr(incremental, "_claim_generation", lambda path: 0)
+    monkeypatch.setattr(commit, "claim_generation", lambda path: 0)
     with _pytest.raises(RuntimeError, match="already committed"):
         incremental.append_to_index(spark, inc, idx, "inc-stolen")
-    man = incremental._load_manifest(idx)
+    man = commit.load_manifest(idx)
     assert [g["gen"] for g in man["generations"]] == [0]
 
 
@@ -381,7 +396,7 @@ def test_same_increment_id_race_commits_exactly_once(spark, tmp_path):
     for t in threads:
         t.join()
     assert sorted(results) == [False, False, True]
-    man = incremental._load_manifest(idx)
+    man = commit.load_manifest(idx)
     assert [g["increment_id"] for g in man["generations"]].count("epoch-9") == 1
     # probe still equals rebuild despite the racing losers' orphans
     rebuilt = str(tmp_path / "reb")
@@ -407,7 +422,7 @@ def test_tiered_fold_preserves_probes_and_ledger(spark, tmp_path):
     incremental.build_base_index(base, idx, max_df=MAX_DF)
     for i, inc in enumerate(incs):
         assert incremental.append_to_index(spark, inc, idx, f"inc-{i}") is True
-    man = incremental._load_manifest(idx)
+    man = commit.load_manifest(idx)
     assert len(man["generations"]) == 4
     # the scenario is only exercised if a later generation's ledger
     # excludes earlier generations' postings
@@ -421,7 +436,7 @@ def test_tiered_fold_preserves_probes_and_ledger(spark, tmp_path):
 
     # fold newest 2 (gens of inc-1, inc-2) -> [base, inc-0, fold]
     incremental.compact_index(spark, idx, max_generations_to_fold=2)
-    man = incremental._load_manifest(idx)
+    man = commit.load_manifest(idx)
     assert len(man["generations"]) == 3
     assert [g.get("increment_id") for g in man["generations"][:2]] == [
         None,
@@ -437,10 +452,10 @@ def test_tiered_fold_preserves_probes_and_ledger(spark, tmp_path):
     # second tiered fold merges the previous fold with its neighbor
     # (LSM-style geometric merging), then a FULL fold converges to one
     incremental.compact_index(spark, idx, max_generations_to_fold=2)
-    assert len(incremental._load_manifest(idx)["generations"]) == 2
+    assert len(commit.load_manifest(idx)["generations"]) == 2
     assert _probe_all(spark, batch, idx) == before
     incremental.compact_index(spark, idx)
-    assert len(incremental._load_manifest(idx)["generations"]) == 1
+    assert len(commit.load_manifest(idx)["generations"]) == 1
     assert _probe_all(spark, batch, idx) == before
 
     # ...and everything still equals the from-scratch rebuild

@@ -11,7 +11,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from gcp_serverless_etl_pipeline_lab_spark.operators import annindex, incremental
+from gcp_serverless_etl_pipeline_lab_spark import commit
+from gcp_serverless_etl_pipeline_lab_spark.operators import annindex
 from gcp_serverless_etl_pipeline_lab_spark.sources.tables import load_table
 from gcp_serverless_etl_pipeline_lab_spark.streaming.ann_stream import (
     run_nightly_ann_loop,
@@ -56,9 +57,9 @@ def test_ann_loop_ingests_idempotently_and_compacts_on_policy(spark, tmp_path):
     assert r3["compacted_generation"] is not None
     assert r3["served_overlap"] is not None
     assert r3["rebuild_recommended"] is False
-    tel = annindex._load_ann_manifest(idx)["telemetry"]
+    tel = commit.load_manifest(idx)["telemetry"]
     assert tel[-1]["served_overlap"] == r3["served_overlap"]
-    man = annindex._load_ann_manifest(idx)
+    man = commit.load_manifest(idx)
     assert len(man["generations"]) == 1
     assert set(man["compacted_increments"]) == {"epoch=1", "epoch=2"}
 
@@ -87,7 +88,7 @@ def test_ann_loop_surfaces_drift_through_fold_and_vacuums(spark, tmp_path):
     idx = str(tmp_path / "ann")
     inbox = str(tmp_path / "inbox")
     annindex.build_ann_index(base, idx, 64, cells=8, iters=2, sample_rate=1.0)
-    baseline = annindex._load_ann_manifest(idx)["baseline_msd"]
+    baseline = commit.load_manifest(idx)["baseline_msd"]
     s = (5.0 * baseline / 64.0) ** 0.5
     shifted = (
         emb.filter(F.col("vec_id") % 2 == 1)
@@ -109,7 +110,7 @@ def test_ann_loop_surfaces_drift_through_fold_and_vacuums(spark, tmp_path):
     assert r["rebuild_recommended"] is True
     assert r["max_drift_ratio"] >= annindex.DRIFT_REBUILD_RATIO
     assert r["vacuumed"], "pre-fold generations were not swept"
-    live = {g["gen"] for g in annindex._load_ann_manifest(idx)["generations"]}
+    live = {g["gen"] for g in commit.load_manifest(idx)["generations"]}
     assert set(os.listdir(os.path.join(idx, "vectors"))) == {
         f"gen={g}" for g in live
     }
@@ -130,18 +131,18 @@ def test_ann_loop_crash_during_compact_replays_clean(spark, tmp_path, monkeypatc
     _write_epoch(emb.filter(F.col("vec_id") % 3 == 2), inbox, "epoch=2")
     run_nightly_ann_loop(spark, inbox, idx)  # appends committed
 
-    real_lock = incremental._manifest_lock
+    real_lock = commit.manifest_lock
 
     def crash_at_commit(path):
         raise RuntimeError("simulated crash before manifest flip")
 
-    monkeypatch.setattr(incremental, "_manifest_lock", crash_at_commit)
+    monkeypatch.setattr(commit, "manifest_lock", crash_at_commit)
     with pytest.raises(RuntimeError, match="simulated crash"):
         run_nightly_ann_loop(spark, inbox, idx, compact_every=3)
-    monkeypatch.setattr(incremental, "_manifest_lock", real_lock)
+    monkeypatch.setattr(commit, "manifest_lock", real_lock)
 
     # manifest untouched by the crashed fold; its dir is an orphan
-    man = annindex._load_ann_manifest(idx)
+    man = commit.load_manifest(idx)
     assert len(man["generations"]) == 3
     orphans = set(os.listdir(os.path.join(idx, "vectors"))) - {
         f"gen={g['gen']}" for g in man["generations"]
@@ -159,7 +160,7 @@ def test_ann_loop_crash_during_compact_replays_clean(spark, tmp_path, monkeypatc
     assert sorted(
         map(tuple, annindex.query_ann_index(spark, queries, idx, 5, 2).collect())
     ) == before
-    live = {g["gen"] for g in annindex._load_ann_manifest(idx)["generations"]}
+    live = {g["gen"] for g in commit.load_manifest(idx)["generations"]}
     assert set(os.listdir(os.path.join(idx, "vectors"))) == {
         f"gen={g}" for g in live
     }

@@ -9,11 +9,14 @@ fold trigger (task 3): a delete-heavy, append-quiet night still folds."""
 
 from __future__ import annotations
 
+import functools
 import os
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gcp_serverless_etl_pipeline_lab_spark import commit
 from gcp_serverless_etl_pipeline_lab_spark.operators import (
     annindex,
     incremental,
@@ -104,8 +107,17 @@ def _assert_forgotten(spark, corpus, indexed, vids, lex, ann, text, merged):
     victims = corpus.filter(F.col("doc_id").isin(vids)).select("doc_id", "text")
     assert incremental.exact_dups_vs_index(spark, victims, text).count() == 0
     # the corpus copy is scrubbed: no victim id, no victim text
-    mdocs = nightly_mod._read_merged(spark, merged, "doc_id", "text")
-    if mdocs is not None:
+    children = nightly_mod._merged_children(merged)
+    if children:
+        mdocs = functools.reduce(
+            DataFrame.unionByName,
+            (
+                spark.read.parquet(os.path.join(merged, c)).select(
+                    "doc_id", "text"
+                )
+                for c in children
+            ),
+        )
         assert mdocs.filter(F.col("doc_id").isin(vids)).count() == 0
         vtexts = {r["text"] for r in victims.collect()}
         left = mdocs.filter(F.col("text").isin(list(vtexts)))
@@ -214,44 +226,8 @@ def test_tombstone_pressure_triggers_fold(spark, tmp_path):
     assert r["compacted"]["lex"] is not None
     assert r["compacted"]["ann"] is not None
     assert r["compacted"]["text"] is not None
-    assert not lexindex._load_lex_manifest(lex).get("tombstones", [])
-    assert not annindex._load_ann_manifest(ann).get("tombstones", [])
-    assert not incremental._load_manifest(text).get("tombstones", [])
+    assert not commit.load_manifest(lex).get("tombstones", [])
+    assert not commit.load_manifest(ann).get("tombstones", [])
+    assert not commit.load_manifest(text).get("tombstones", [])
     # probes unchanged through the physical application
     _assert_forgotten(spark, corpus, indexed, vids, lex, ann, text, merged)
-
-
-def test_text_leg_resolves_legacy_hashes_from_merged(spark, tmp_path):
-    """An id-only delete against a text index whose generations predate
-    per-row hash ids resolves the content from the merged corpus (the
-    purge runs AFTER the text leg, so the text is still there)."""
-    corpus = _corpus(spark)
-    docs = corpus.select("doc_id", "text")
-    text = str(tmp_path / "text")
-    merged = str(tmp_path / "merged")
-    deletes = str(tmp_path / "deletes")
-    inbox = str(tmp_path / "inbox")
-    os.makedirs(inbox)
-    incremental.build_base_index(docs, text)
-    # strip doc_id from the stored hashes — the legacy layout
-    hdir = os.path.join(text, "hashes", "gen=0")
-    legacy = spark.read.parquet(hdir).select("k").collect()
-    spark.createDataFrame(legacy, "k string").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(hdir)
-    # the merged corpus holds the text (as the nightly loop would have
-    # left it)
-    docs.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(merged, "epoch=0")
-    )
-    victim = docs.orderBy("doc_id").limit(1)
-    vid = victim.collect()[0]["doc_id"]
-    _write_delete(spark, deletes, "take=1", [vid])
-    r = run_nightly(
-        spark, inbox, text_index_path=text, merged_dir=merged,
-        deletes_dir=deletes,
-    )
-    assert r["applied_deletes"] == ["take=1"]
-    assert incremental.exact_dups_vs_index(spark, victim, text).count() == 0
-    mdocs = nightly_mod._read_merged(spark, merged, "doc_id", "text")
-    assert mdocs.filter(F.col("doc_id") == vid).count() == 0

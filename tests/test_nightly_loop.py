@@ -15,6 +15,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from gcp_serverless_etl_pipeline_lab_spark import commit
 from gcp_serverless_etl_pipeline_lab_spark.operators import incremental
 from gcp_serverless_etl_pipeline_lab_spark.sinks import read_warehouse
 from gcp_serverless_etl_pipeline_lab_spark.sources.tables import load_table
@@ -77,7 +78,7 @@ def test_nightly_loop_converges_across_crash(spark, tmp_path):
 
     # CRASH mid-merge: a generation was written but never committed
     # (manifest untouched) — the orphan must stay invisible...
-    man_before = incremental._load_manifest(idx)
+    man_before = commit.load_manifest(idx)
     incremental._write_generation(
         idx,
         1,
@@ -87,7 +88,7 @@ def test_nightly_loop_converges_across_crash(spark, tmp_path):
         gramdf=spark.createDataFrame([], incremental._GRAMDF_SCHEMA),
         capped=spark.createDataFrame([], incremental._CAPPED_SCHEMA),
     )
-    assert incremental._load_manifest(idx) == man_before
+    assert commit.load_manifest(idx) == man_before
 
     # ...and the replayed merge commits exactly once
     assert _merge_new(spark, out1, night1, idx, corpus_dir, "epoch-0") is True
@@ -152,7 +153,7 @@ def test_nightly_loop_converges_across_crash(spark, tmp_path):
         map(tuple, via_rebuilt.collect())
     )
     # two committed generations beyond gen 0
-    gens = incremental._load_manifest(idx)["generations"]
+    gens = commit.load_manifest(idx)["generations"]
     assert [g["increment_id"] for g in gens] == [None, "epoch-0", "epoch-1"]
     assert os.path.isdir(os.path.join(idx, "grams", "gen=2"))
 
@@ -240,7 +241,7 @@ def test_nightly_loop_compact_every_policy(spark, tmp_path):
         spark, inbox, idx, merged_dir, out, ckpt, THRESH, compact_every=3
     )
     assert s1["compacted_generation"] is None
-    assert len(incremental._load_manifest(idx)["generations"]) == 2
+    assert len(commit.load_manifest(idx)["generations"]) == 2
 
     # night 2 crosses the policy: 3 generations -> compact fires; the
     # zero-horizon vacuum then sweeps the unlisted pre-compaction dirs
@@ -250,7 +251,7 @@ def test_nightly_loop_compact_every_policy(spark, tmp_path):
         compact_every=3, vacuum_min_age_seconds=0.0,
     )
     assert s2["compacted_generation"] is not None
-    man = incremental._load_manifest(idx)
+    man = commit.load_manifest(idx)
     assert len(man["generations"]) == 1
     assert set(man["compacted_increments"]) == {"epoch-0", "epoch-1"}
     assert any(s.startswith("grams/gen=") for s in s2["vacuumed"]), s2
@@ -317,7 +318,7 @@ def test_nightly_loop_at_least_once_inbox_indexes_once(spark, tmp_path):
 
     # one sizes row / one hash row per appended doc — the index never saw
     # the retransmission
-    man = incremental._load_manifest(idx)
+    man = commit.load_manifest(idx)
     sizes = incremental._read_artifact(
         spark, idx, "sizes", man, incremental._SIZES_SCHEMA
     )
@@ -357,7 +358,7 @@ def test_nightly_loop_partial_fold_policy(spark, tmp_path):
         compact_every=3, max_generations_to_fold=2,
     )
     assert s2["compacted_generation"] is not None
-    man = incremental._load_manifest(idx)
+    man = commit.load_manifest(idx)
     # base gen stays listed and physically untouched; the two epoch
     # generations folded into one
     assert [g.get("increment_id") for g in man["generations"]] == [None, None]

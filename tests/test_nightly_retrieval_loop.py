@@ -12,6 +12,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from gcp_serverless_etl_pipeline_lab_spark import commit
 from gcp_serverless_etl_pipeline_lab_spark.operators import (
     annindex,
     lexindex,
@@ -117,7 +118,7 @@ def test_loop_dedup_guard_drops_cross_increment_replays(spark, tmp_path):
     )
     assert got == want and got
     # and n_docs counted each doc once
-    man = lexindex._load_lex_manifest(lex)
+    man = commit.load_manifest(lex)
     assert sum(g["n_docs"] for g in man["generations"]) == corpus.count()
 
 
@@ -143,9 +144,9 @@ def test_loop_crash_between_legs_replays_the_ann_leg(spark, tmp_path, monkeypatc
     monkeypatch.setattr(_ann_mod, "append_ann_index", real_append)
 
     # lex committed, ann didn't — invariant (ANN ⊆ doclist) still holds
-    lex_man = lexindex._load_lex_manifest(lex)
+    lex_man = commit.load_manifest(lex)
     assert "epoch=1" in {g.get("increment_id") for g in lex_man["generations"]}
-    ann_man = annindex._load_ann_manifest(ann)
+    ann_man = commit.load_manifest(ann)
     assert "epoch=1" not in {
         g.get("increment_id") for g in ann_man["generations"]
     }
@@ -159,7 +160,7 @@ def test_loop_crash_between_legs_replays_the_ann_leg(spark, tmp_path, monkeypatc
     ann_ids = {
         row["vec_id"]
         for row in annindex._read_vectors(
-            spark, ann, annindex._load_ann_manifest(ann)
+            spark, ann, commit.load_manifest(ann)
         ).select("vec_id").collect()
     }
     want_ids = {
@@ -183,8 +184,8 @@ def test_loop_compacts_on_policy_and_replays_across_fold(spark, tmp_path):
     assert r["compacted_lex"] is not None and r["compacted_ann"] is not None
     assert r["ann_docs_missing_from_lex"] == 0
     for p, man in (
-        (lex, lexindex._load_lex_manifest(lex)),
-        (ann, annindex._load_ann_manifest(ann)),
+        (lex, commit.load_manifest(lex)),
+        (ann, commit.load_manifest(ann)),
     ):
         assert len(man["generations"]) == 1
         assert set(man["compacted_increments"]) == {"epoch=1", "epoch=2"}
@@ -305,7 +306,7 @@ def test_telemetry_observes_decay_and_rebuild_restores(spark, tmp_path):
     rep = annindex.ann_drift_report(ann)
     assert rep["served_overlap_low"] is True
     assert rep["served_overlap_baseline"] == r0["served_overlap"]
-    tel = annindex._load_ann_manifest(ann)["telemetry"]
+    tel = commit.load_manifest(ann)["telemetry"]
     assert tel and tel[-1]["served_overlap"] == r1["served_overlap"]
 
     # the recommended retrain, then the next night's loop re-measures —
@@ -340,9 +341,7 @@ def test_append_assert_new_doc_ids_guards_the_contract(spark, tmp_path):
     ) is True
 
 
-def test_indexed_doc_ids_membership_and_legacy_upgrade(spark, tmp_path):
-    import shutil
-
+def test_indexed_doc_ids_membership(spark, tmp_path):
     docs = _corpus(spark).select("doc_id", "text")
     half = docs.filter(F.col("doc_id") % 2 == 0)
     idx = str(tmp_path / "lex")
@@ -354,14 +353,3 @@ def test_indexed_doc_ids_membership_and_legacy_upgrade(spark, tmp_path):
     }
     want = {r["doc_id"] for r in half.select("doc_id").collect()}
     assert got == want
-
-    # pre-round-12 index shape (no doclist artifact): round 13 upgrades
-    # it in place on first probe instead of degrading to an unpruned
-    # postings scan — answers match and the artifact now exists
-    shutil.rmtree(os.path.join(idx, "doclist"))
-    got2 = {
-        r["doc_id"]
-        for r in lexindex.indexed_doc_ids(spark, idx, asked).collect()
-    }
-    assert got2 == want
-    assert os.path.isdir(os.path.join(idx, "doclist", "gen=0"))

@@ -1,7 +1,7 @@
 """Round-13 contracts: shared fold-slice tiering policy (+ the
 protected-increment guard), sampled-model nprobe escalation for served
-ANN probes, metadata-filtered retrieval inside both hybrid legs, and
-the in-place doclist upgrade for pre-round-12 lexical indexes."""
+ANN probes, metadata-filtered retrieval inside both hybrid legs, and the
+membership artifacts (a listed generation without one raises)."""
 
 from __future__ import annotations
 
@@ -12,12 +12,10 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from gcp_serverless_etl_pipeline_lab_spark import commit
 from gcp_serverless_etl_pipeline_lab_spark.operators import (
     annindex,
     lexindex,
-)
-from gcp_serverless_etl_pipeline_lab_spark.operators.incremental import (
-    _split_fold_slice,
 )
 from gcp_serverless_etl_pipeline_lab_spark.sources.tables import load_table
 
@@ -47,25 +45,25 @@ def _rows(df):
 def test_split_fold_slice_policy():
     ents = [{"gen": i, "increment_id": f"i{i}"} for i in range(5)]
     # full fold: None or k >= len
-    assert _split_fold_slice(ents, None) == (ents, [])
-    assert _split_fold_slice(ents, 5) == (ents, [])
-    assert _split_fold_slice(ents, 99) == (ents, [])
+    assert commit.split_fold_slice(ents, None) == (ents, [])
+    assert commit.split_fold_slice(ents, 5) == (ents, [])
+    assert commit.split_fold_slice(ents, 99) == (ents, [])
     # tiered: newest k fold, prefix kept in order
-    fold, keep = _split_fold_slice(ents, 2)
+    fold, keep = commit.split_fold_slice(ents, 2)
     assert [g["gen"] for g in fold] == [3, 4]
     assert [g["gen"] for g in keep] == [0, 1, 2]
     with pytest.raises(ValueError):
-        _split_fold_slice(ents, 1)
+        commit.split_fold_slice(ents, 1)
 
 
 def test_split_fold_slice_protects_pending_increments():
     ents = [{"gen": i, "increment_id": f"i{i}"} for i in range(5)]
-    fold, keep = _split_fold_slice(ents, 3, protect_increments={"i3"})
+    fold, keep = commit.split_fold_slice(ents, 3, protect_increments={"i3"})
     assert [g["gen"] for g in fold] == [2, 4]
     # protected entry stays LISTED (appended after the kept prefix)
     assert [g["gen"] for g in keep] == [0, 1, 3]
     # protecting everything in the slice leaves nothing to fold
-    fold2, keep2 = _split_fold_slice(ents, 2, protect_increments={"i3", "i4"})
+    fold2, keep2 = commit.split_fold_slice(ents, 2, protect_increments={"i3", "i4"})
     assert fold2 == [] and [g["gen"] for g in keep2] == [0, 1, 2, 3, 4]
 
 
@@ -84,7 +82,7 @@ def test_compact_lexical_protect_keeps_increment_listed(spark, tmp_path):
     gen = lexindex.compact_lexical_index(
         spark, idx, protect_increments={"night2"}
     )
-    man = lexindex._load_lex_manifest(idx)
+    man = commit.load_manifest(idx)
     ids = [g.get("increment_id") for g in man["generations"]]
     assert ids == ["night2", None], man["generations"]
     assert man["generations"][-1]["gen"] == gen
@@ -129,7 +127,7 @@ def test_sampled_index_probe_equals_explicit_double_nprobe(spark, tmp_path):
     annindex.build_ann_index(
         emb, idx, EMB_DIM, cells=8, iters=2, sample_rate=0.1
     )
-    man = annindex._load_ann_manifest(idx)
+    man = commit.load_manifest(idx)
     assert man["train_sample_rate"] == 0.1
     rep = annindex.ann_drift_report(idx)
     assert rep["low_training_coverage"] is True
@@ -322,67 +320,28 @@ def test_indexed_vec_ids_membership(spark, tmp_path):
     # compaction folds the veclist alongside the vectors
     annindex.compact_ann_index(spark, idx)
     assert annindex.indexed_vec_ids(spark, idx, asked).count() == emb.count()
-    gen = annindex._load_ann_manifest(idx)["generations"][-1]["gen"]
+    gen = commit.load_manifest(idx)["generations"][-1]["gen"]
     assert os.path.isdir(os.path.join(idx, "veclist", f"gen={gen}"))
 
 
-def test_legacy_ann_index_upgrades_veclist_in_place(spark, tmp_path):
-    emb = _emb(spark)
-    idx = str(tmp_path / "ann")
-    annindex.build_ann_index(
-        emb, idx, EMB_DIM, cells=4, iters=2, sample_rate=1.0
-    )
-    shutil.rmtree(os.path.join(idx, "veclist"))
-    asked = emb.select("vec_id").limit(9)
-    assert annindex.indexed_vec_ids(spark, idx, asked).count() == 9
-    assert os.path.isdir(os.path.join(idx, "veclist", "gen=0"))
-
-
-# ------------------------------------------------------ doclist upgrade
-
-
-def test_legacy_index_upgrades_doclist_in_place(spark, tmp_path):
-    """A pre-round-12 index (no doclist artifact) used to degrade EVERY
-    membership probe to an unpruned postings scan that was also blind to
-    tokenless docs in post-upgrade generations. First probe now
-    materializes the legacy generations' doclists once; tokenless docs
-    appended afterwards are visible."""
-    docs = _docs(spark)
-    idx = str(tmp_path / "lex")
-    lexindex.build_lexical_index(docs, idx)
-    # simulate the pre-round-12 layout
-    shutil.rmtree(os.path.join(idx, "doclist"))
-    # a post-upgrade append carrying a TOKENLESS doc (empty text)
-    inc = spark.createDataFrame(
-        [(9_000_001, "fresh appended words"), (9_000_002, "")],
-        "doc_id bigint, text string",
-    )
-    assert lexindex.append_lexical_index(spark, inc, idx, "night1") is True
-    ids = spark.createDataFrame(
-        [(9_000_001,), (9_000_002,), (123_456_789,)], "doc_id bigint"
-    )
-    hit = lexindex.indexed_doc_ids(spark, idx, ids)
-    assert {r["doc_id"] for r in hit.collect()} == {9_000_001, 9_000_002}
-    # the upgrade materialized gen=0's doclist on disk (one-time)
-    assert os.path.isdir(os.path.join(idx, "doclist", "gen=0"))
-    # base docs are members too (derived from gen-0 postings)
-    some = docs.select("doc_id").limit(5)
-    assert lexindex.indexed_doc_ids(spark, idx, some).count() == 5
-
-
-def test_partial_fold_over_legacy_generation_writes_doclist(spark, tmp_path):
-    """Round-12 advice: a fold whose slice contains a doclist-less
-    generation must materialize it first, so the fold generation always
-    carries a doclist and the index never re-enters the legacy state."""
-    docs = _docs(spark)
-    idx = str(tmp_path / "lex")
-    lexindex.build_lexical_index(docs.filter(F.col("doc_id") % 2 == 0), idx)
-    shutil.rmtree(os.path.join(idx, "doclist"))
-    lexindex.append_lexical_index(
-        spark, docs.filter(F.col("doc_id") % 2 == 1), idx, "odd"
-    )
-    gen = lexindex.compact_lexical_index(spark, idx)
-    assert os.path.isdir(os.path.join(idx, "doclist", f"gen={gen}"))
-    # membership after the fold runs the pruned path over the fold's list
-    some = docs.select("doc_id").limit(7)
-    assert lexindex.indexed_doc_ids(spark, idx, some).count() == 7
+@pytest.mark.parametrize("family", ["doclist", "veclist"])
+def test_missing_membership_dir_raises(spark, tmp_path, family):
+    """Every writer lists a generation only after its membership artifact
+    (lexical doclist / ANN veclist) landed, so a listed generation without
+    one is a damaged index: the membership probe raises, naming the
+    missing dir, instead of rebuilding it in place."""
+    idx = str(tmp_path / family)
+    if family == "doclist":
+        lexindex.build_lexical_index(_docs(spark), idx)
+        asked = _docs(spark).select("doc_id").limit(9)
+        probe = lexindex.indexed_doc_ids
+    else:
+        annindex.build_ann_index(
+            _emb(spark), idx, EMB_DIM, cells=4, iters=2, sample_rate=1.0
+        )
+        asked = _emb(spark).select("vec_id").limit(9)
+        probe = annindex.indexed_vec_ids
+    shutil.rmtree(os.path.join(idx, family))
+    with pytest.raises(FileNotFoundError, match=f"{family}/gen=0"):
+        probe(spark, idx, asked)
+    assert not os.path.exists(os.path.join(idx, family))

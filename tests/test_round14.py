@@ -20,11 +20,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from gcp_serverless_etl_pipeline_lab_spark.operators import (
-    annindex,
-    incremental,
-    lexindex,
-)
+from gcp_serverless_etl_pipeline_lab_spark import commit
+from gcp_serverless_etl_pipeline_lab_spark.operators import annindex, lexindex
 from gcp_serverless_etl_pipeline_lab_spark.sources.tables import load_table
 from gcp_serverless_etl_pipeline_lab_spark.streaming.nightly import run_nightly
 from gcp_serverless_etl_pipeline_lab_spark.streaming.retrieval_stream import (
@@ -118,7 +115,7 @@ def test_lex_delete_concurrent_append_fence(spark, tmp_path):
         [(987_000_001, "join filter vector")], "doc_id bigint, text string"
     )
 
-    real_claim = lexindex._claim_generation
+    real_claim = commit.claim_generation
     state = {"fired": False}
 
     def claim_with_append(path):
@@ -131,22 +128,22 @@ def test_lex_delete_concurrent_append_fence(spark, tmp_path):
             ) is True
         return real_claim(path)
 
-    lexindex._claim_generation = claim_with_append
+    commit.claim_generation = claim_with_append
     try:
         with pytest.raises(RuntimeError, match="concurrent append"):
             lexindex.delete_from_lexical_index(
                 spark, _ids(spark, victim), lex, "take"
             )
     finally:
-        lexindex._claim_generation = real_claim
-    man = lexindex._load_lex_manifest(lex)
+        commit.claim_generation = real_claim
+    man = commit.load_manifest(lex)
     # no tombstone committed; stats untouched (append counted, no subtraction)
     assert not man.get("tombstones", [])
     # the retry succeeds against the settled manifest
     assert lexindex.delete_from_lexical_index(
         spark, _ids(spark, victim), lex, "take"
     ) is True
-    n, s = lexindex._live_stats(lexindex._load_lex_manifest(lex))
+    n, s = lexindex._live_stats(commit.load_manifest(lex))
     want = corpus.filter(~F.col("doc_id").isin(victim)).unionByName(extra)
     row = want.agg(
         F.count(F.lit(1)).alias("n"),
@@ -165,7 +162,7 @@ def test_ann_delete_concurrent_append_fence(spark, tmp_path):
         (F.col("vec_id") + 900_000).alias("vec_id"), "embedding"
     )
 
-    real_claim = incremental._claim_generation
+    real_claim = commit.claim_generation
     state = {"fired": False}
 
     def claim_with_append(path):
@@ -174,15 +171,15 @@ def test_ann_delete_concurrent_append_fence(spark, tmp_path):
             assert annindex.append_ann_index(spark, extra, ann, "sneak") is True
         return real_claim(path)
 
-    incremental._claim_generation = claim_with_append
+    commit.claim_generation = claim_with_append
     try:
         with pytest.raises(RuntimeError, match="concurrent append"):
             annindex.delete_from_ann_index(
                 spark, _ids(spark, victim), ann, "take"
             )
     finally:
-        incremental._claim_generation = real_claim
-    assert not annindex._load_ann_manifest(ann).get("tombstones", [])
+        commit.claim_generation = real_claim
+    assert not commit.load_manifest(ann).get("tombstones", [])
     assert annindex.delete_from_ann_index(
         spark, _ids(spark, victim), ann, "take"
     ) is True
@@ -266,11 +263,11 @@ def test_cell_counts_recorded_through_lifecycle(spark, tmp_path):
     base = vecs.filter(F.col("vec_id") % 3 == 0)
     inc = vecs.filter(F.col("vec_id") % 3 == 1)
     annindex.build_ann_index(base, ann, 64, cells=8, iters=2, sample_rate=1.0)
-    man = annindex._load_ann_manifest(ann)
+    man = commit.load_manifest(ann)
     counts = annindex._total_cell_counts(man)
     assert counts is not None and sum(counts.values()) == base.count()
     assert annindex.append_ann_index(spark, inc, ann, "inc1") is True
-    man = annindex._load_ann_manifest(ann)
+    man = commit.load_manifest(ann)
     assert sum(annindex._total_cell_counts(man).values()) == (
         base.count() + inc.count()
     )
@@ -278,27 +275,23 @@ def test_cell_counts_recorded_through_lifecycle(spark, tmp_path):
     doomed = base.limit(3).select("vec_id")
     assert annindex.delete_from_ann_index(spark, doomed, ann, "take") is True
     annindex.compact_ann_index(spark, ann)
-    man = annindex._load_ann_manifest(ann)
+    man = commit.load_manifest(ann)
     assert sum(annindex._total_cell_counts(man).values()) == (
         base.count() + inc.count() - 3
     )
     # rebuild: fresh counts over the live population
     annindex.rebuild_ann_index(spark, ann, sample_rate=1.0)
-    man = annindex._load_ann_manifest(ann)
+    man = commit.load_manifest(ann)
     assert sum(annindex._total_cell_counts(man).values()) == (
         base.count() + inc.count() - 3
     )
     # a legacy manifest (no counts) reads as no-signal, not a crash
-    from gcp_serverless_etl_pipeline_lab_spark.operators.incremental import (
-        _manifest_lock,
-    )
-
-    with _manifest_lock(ann):
-        man = annindex._load_ann_manifest(ann)
+    with commit.manifest_lock(ann):
+        man = commit.load_manifest(ann)
         for g in man["generations"]:
             g.pop("cell_counts", None)
-        annindex._write_ann_manifest(ann, man)
-    assert annindex._total_cell_counts(annindex._load_ann_manifest(ann)) is None
+        commit.write_manifest(ann, man)
+    assert annindex._total_cell_counts(commit.load_manifest(ann)) is None
 
 
 def test_drift_baseline_ignores_param_mismatched_readings(spark, tmp_path):

@@ -12,6 +12,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from gcp_serverless_etl_pipeline_lab_spark import commit
 from gcp_serverless_etl_pipeline_lab_spark.operators import incremental
 from gcp_serverless_etl_pipeline_lab_spark.sources.tables import load_table
 
@@ -70,7 +71,7 @@ def test_text_delete_nonmember_is_noop(spark, tmp_path):
     incremental.build_base_index(docs, idx)
     ghost = _ids(spark, [987_654_321])
     assert incremental.delete_from_index(spark, ghost, idx, "ghost") is False
-    assert not incremental._load_manifest(idx).get("tombstones", [])
+    assert not commit.load_manifest(idx).get("tombstones", [])
     # the id was NOT consumed: a later real delete under it still works
     victim = docs.orderBy("doc_id").limit(1).select("doc_id")
     assert incremental.delete_from_index(spark, victim, idx, "ghost") is True
@@ -99,28 +100,6 @@ def test_text_delete_then_reingest_works(spark, tmp_path):
     assert {r["base_id"] for r in nd.collect()} == {vid}
 
 
-def test_text_delete_legacy_generation_requires_text(spark, tmp_path):
-    docs = _docs(spark)
-    idx = str(tmp_path / "text")
-    incremental.build_base_index(docs, idx)
-    # simulate a pre-round-14 generation: strip doc_id from the stored
-    # hashes (legacy files carry only k)
-    hdir = os.path.join(idx, "hashes", "gen=0")
-    legacy = spark.read.parquet(hdir).select("k").collect()
-    spark.createDataFrame(legacy, "k string").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(hdir)
-    victim = docs.orderBy("doc_id").limit(1)
-    with pytest.raises(ValueError, match="pass .doc_id, text."):
-        incremental.delete_from_index(spark, victim.select("doc_id"), idx)
-    # with the text the delete resolves the hash and fully masks
-    assert incremental.delete_from_index(spark, victim, idx, "take") is True
-    assert incremental.exact_dups_vs_index(spark, victim, idx).count() == 0
-    nd = incremental.near_dups_vs_index(spark, victim, idx, threshold=0.99)
-    vid = victim.collect()[0]["doc_id"]
-    assert vid not in {r["base_id"] for r in nd.collect()}
-
-
 def test_text_compact_applies_tombstones_and_retires(spark, tmp_path):
     docs = _docs(spark)
     idx = str(tmp_path / "text")
@@ -133,7 +112,7 @@ def test_text_compact_applies_tombstones_and_retires(spark, tmp_path):
         spark, doomed.select("doc_id"), idx, "take"
     ) is True
     gen = incremental.compact_index(spark, idx)
-    man = incremental._load_manifest(idx)
+    man = commit.load_manifest(idx)
     # fully absorbed: tombstone left the manifest, id is consumed
     assert not man.get("tombstones", [])
     assert "take" in man.get("applied_deletes", [])
@@ -177,7 +156,7 @@ def test_text_compact_concurrent_delete_fence(spark, tmp_path):
     ) is True
     victim = docs.filter(F.col("doc_id") % 3 == 0).limit(1).select("doc_id")
 
-    real_claim = incremental._claim_generation
+    real_claim = commit.claim_generation
     state = {"fired": False}
 
     def claim_with_delete(path):
@@ -187,13 +166,13 @@ def test_text_compact_concurrent_delete_fence(spark, tmp_path):
             assert incremental.delete_from_index(spark, victim, idx, "mid") is True
         return g
 
-    incremental._claim_generation = claim_with_delete
+    commit.claim_generation = claim_with_delete
     try:
         with pytest.raises(RuntimeError, match="concurrent delete"):
             incremental.compact_index(spark, idx)
     finally:
-        incremental._claim_generation = real_claim
+        commit.claim_generation = real_claim
     # the delete survived; a compaction re-run applies it
-    assert incremental._load_manifest(idx)["tombstones"]
+    assert commit.load_manifest(idx)["tombstones"]
     incremental.compact_index(spark, idx)
-    assert not incremental._load_manifest(idx).get("tombstones", [])
+    assert not commit.load_manifest(idx).get("tombstones", [])
