@@ -15,9 +15,18 @@ one atomically replaced log record, whatever the table holds.
   a torn one.
 - ``load_manifest`` / ``write_manifest`` read and commit the generational
   index manifest. Only version 2 is read; any other layout is refused
-  here, in one place, and must be rebuilt. ``claim_generation``,
-  ``applied_increments`` / ``applied_deletes`` and ``split_fold_slice``
-  are the manifest's ledger rules the three index families share.
+  here, in one place, and must be rebuilt.
+- The generation protocol of the three index families: artifacts land
+  in a ``claim_generation``-numbered ``gen=N`` dir first, then one of
+  three locked transactions lists them — ``commit_append`` (a new
+  generation), ``commit_delete`` (a tombstone generation covering every
+  generation listed) or ``commit_fold`` (generations replaced by one
+  rewrite; ``split_fold_slice`` picks them, ``absorbed`` names the
+  tombstones it applies). Each re-reads the manifest under the lock,
+  makes an ``increment_id`` replay a no-op and refuses a commit that
+  would lose a concurrent one. ``vacuum_index`` sweeps what crashed or
+  unlisted generations leave behind. The Spark side of the same layout
+  (reading generations, masking tombstones) is ``operators/generations``.
 - ``is_stale`` is the age test both vacuums share.
 
 Local filesystem only: ``claim`` and ``replace`` refuse a ``scheme://``
@@ -31,6 +40,7 @@ import fcntl
 import json
 import os
 import re
+import shutil
 import time
 import uuid
 from collections.abc import Callable, Iterable, Iterator
@@ -41,6 +51,7 @@ MANIFEST_VERSION = 2
 GENCLAIM_PREFIX = ".genclaim-"
 _MANIFEST_LOCK = "." + MANIFEST + ".lock"
 _URI = re.compile(r"[A-Za-z][A-Za-z0-9+.-]*://")
+_GEN_DIR = re.compile(r"gen=(\d+)")
 
 
 def _require_local(path: str) -> None:
@@ -123,7 +134,7 @@ def replace(file: str, text: str) -> None:
         raise
 
 
-# ---- generational index manifests (incremental, lexindex, annindex)
+# ---- generational index manifests and their transactions
 
 
 def load_manifest(path: str) -> dict:
@@ -221,7 +232,176 @@ def split_fold_slice(
     return fold, keep
 
 
-# ---- vacuum age test (sinks.vacuum_versions, incremental.vacuum_index)
+def commit_append(
+    path: str,
+    gen: int,
+    increment_id: str | None,
+    entry: dict,
+    fence: Callable[[dict], None] | None = None,
+) -> bool:
+    """List claimed generation ``gen`` (its artifacts already written) as
+    the append of ``increment_id``; ``entry`` carries the family's extra
+    generation fields. Under the manifest lock, on the re-read manifest:
+
+    - a replay of an increment that is already committed (a same-id
+      race lost) is a no-op: the claim is released, ``gen`` stays an
+      orphan for ``vacuum_index`` and False is returned;
+    - ``fence(cur)`` may raise to refuse the commit (the ANN index
+      checks its model epoch);
+    - a ``gen`` that is already listed means the claim was stolen (swept
+      past the vacuum horizon during a stall) and the thief committed
+      it; listing it twice would double-read it, so this raises.
+
+    Otherwise the entry is appended, the manifest written and the claim
+    released; returns True."""
+    with manifest_lock(path):
+        cur = load_manifest(path)
+        if increment_id is not None and increment_id in applied_increments(cur):
+            release(path, GENCLAIM_PREFIX, gen)
+            return False
+        if fence is not None:
+            fence(cur)
+        if any(g["gen"] == gen for g in cur["generations"]):
+            raise RuntimeError(
+                f"generation {gen} already committed at {path}; "
+                "claim was lost mid-append — retry the append"
+            )
+        cur["generations"].append(
+            {"gen": gen, "increment_id": increment_id, **entry}
+        )
+        write_manifest(path, cur)
+    release(path, GENCLAIM_PREFIX, gen)
+    return True
+
+
+def _fence_appends(path: str, seen: dict, cur: dict, op: str) -> None:
+    if {g["gen"] for g in cur["generations"]} != {
+        g["gen"] for g in seen["generations"]
+    }:
+        raise RuntimeError(
+            f"concurrent append landed during {op} at {path}; re-run {op}"
+        )
+
+
+def commit_delete(
+    path: str,
+    seen: dict,
+    gen: int,
+    increment_id: str | None,
+    entry: dict,
+    op: str,
+) -> bool:
+    """List ``tombstones/gen=N`` (already written) as the delete of
+    ``increment_id``; ``entry`` carries the family's extra tombstone
+    fields. ``seen`` is the manifest the caller resolved membership
+    against. Under the manifest lock:
+
+    - a replayed delete id is a no-op (claim released, False);
+    - an append that committed since ``seen`` raises: the tombstone's
+      cover would reach a generation the membership probe never saw,
+      masking a concurrently (re-)appended id. The tombstone dir is an
+      orphan for ``vacuum_index``; ``op`` is the call to re-run.
+
+    The tombstone covers every generation listed now (``max_gen``): a
+    later re-append lands above the cover and is live."""
+    with manifest_lock(path):
+        cur = load_manifest(path)
+        if increment_id is not None and increment_id in applied_deletes(cur):
+            release(path, GENCLAIM_PREFIX, gen)
+            return False
+        _fence_appends(path, seen, cur, op)
+        cur.setdefault("tombstones", []).append(
+            {
+                "gen": gen,
+                "increment_id": increment_id,
+                "max_gen": max(g["gen"] for g in cur["generations"]),
+                **entry,
+            }
+        )
+        write_manifest(path, cur)
+    release(path, GENCLAIM_PREFIX, gen)
+    return True
+
+
+def absorbed(man: dict, keep_entries: list[dict]) -> list[dict]:
+    """The tombstones a fold applies in full: none of their covered
+    generations stays listed in ``keep_entries``. A tombstone that still
+    covers a kept generation stays active for the read-side mask."""
+    return [
+        t
+        for t in man.get("tombstones", [])
+        if not any(g["gen"] <= t["max_gen"] for g in keep_entries)
+    ]
+
+
+def commit_fold(
+    path: str,
+    seen: dict,
+    gen: int,
+    fold_entries: list[dict],
+    keep_entries: list[dict],
+    entry: dict,
+    op: str,
+    fields: dict | None = None,
+) -> None:
+    """Replace ``fold_entries`` by generation ``gen`` (already written,
+    with the tombstones of ``seen`` applied to it); ``entry`` carries the
+    family's extra generation fields and ``fields`` any top-level
+    manifest fields the same commit sets (a retrain's model). ``seen``
+    is the manifest the fold read. Under the manifest lock:
+
+    - an append committed since ``seen`` raises: the fold is missing
+      its generation;
+    - a delete committed since ``seen`` raises: it was not applied to
+      the rewrite, and the rewrite moved its covered rows above the
+      tombstone's cover, so committing would resurrect them.
+
+    ``op`` is the call to re-run; the folded dirs are orphans for
+    ``vacuum_index``. The folded increment ids move to
+    ``compacted_increments`` and the absorbed tombstones' ids to
+    ``applied_deletes``, so replays stay no-ops. The kept entries keep
+    their order ahead of the fold; the old generation dirs stay on disk
+    for in-flight readers until ``vacuum_index`` sweeps them."""
+    gone = absorbed(seen, keep_entries)
+    gone_gens = {t["gen"] for t in gone}
+    with manifest_lock(path):
+        cur = load_manifest(path)
+        _fence_appends(path, seen, cur, op)
+        if {t["gen"] for t in cur.get("tombstones", [])} != {
+            t["gen"] for t in seen.get("tombstones", [])
+        }:
+            raise RuntimeError(
+                f"concurrent delete landed during {op} at {path}; re-run {op}"
+            )
+        cur["compacted_increments"] = sorted(
+            set(cur.get("compacted_increments", []))
+            | {
+                g["increment_id"]
+                for g in fold_entries
+                if g.get("increment_id") is not None
+            }
+        )
+        if gone:
+            cur["applied_deletes"] = sorted(
+                set(cur.get("applied_deletes", []))
+                | {
+                    t["increment_id"]
+                    for t in gone
+                    if t.get("increment_id") is not None
+                }
+            )
+            cur["tombstones"] = [
+                t for t in cur.get("tombstones", []) if t["gen"] not in gone_gens
+            ]
+        cur.update(fields or {})
+        cur["generations"] = keep_entries + [
+            {"gen": gen, "increment_id": None, **entry}
+        ]
+        write_manifest(path, cur)
+    release(path, GENCLAIM_PREFIX, gen)
+
+
+# ---- vacuum (sinks.vacuum_versions, vacuum_index)
 
 
 def _mtime(path: str) -> float | None:
@@ -253,3 +433,69 @@ def is_stale(paths: Iterable[str], min_age_seconds: float) -> bool:
         if stamp is not None:
             stamps.append(stamp)
     return bool(stamps) and time.time() - max(stamps) >= min_age_seconds
+
+
+def _artifact_roots(path: str) -> list[str]:
+    """Top-level artifact dirs of the generational index at ``path`` —
+    discovered from the layout itself (a dir holding ``gen=N`` children),
+    so every family's artifacts and tombstones are swept by one vacuum."""
+    roots = []
+    for name in sorted(os.listdir(path)):
+        root = os.path.join(path, name)
+        if not os.path.isdir(root):
+            continue
+        if any(
+            _GEN_DIR.fullmatch(child) and os.path.isdir(os.path.join(root, child))
+            for child in os.listdir(root)
+        ):
+            roots.append(name)
+    return roots
+
+
+def vacuum_index(path: str, min_age_seconds: float = 86400.0) -> list[str]:
+    """Sweep ORPHANED generation dirs of any generational index — debris
+    of appends, deletes and folds that crashed between their artifact
+    writes and the manifest commit, plus the generations a fold unlists
+    but deliberately leaves on disk for in-flight readers, and the
+    tombstones a fold retired. Readers never see orphans (only listed
+    generations are read), so this is storage hygiene, not correctness.
+
+    The age bound tells a crash from an IN-FLIGHT writer producing its
+    dirs right now (``is_stale``, the rule ``sinks.vacuum_versions``
+    shares): sweeping a live append's files would let it commit a
+    manifest pointing at deleted data. A claim marker ages off the
+    NEWEST file its generation has produced, so a writer that runs
+    longer than the horizon keeps its claim while it keeps writing, and
+    ``commit_append`` rejects a generation number that is already
+    listed, so even a stolen claim never double-counts a generation. The
+    residual window — a writer that stalls silently past the horizon,
+    loses its claim, then rewrites a number someone else committed — is
+    the standard snapshot-store contract: size the horizon beyond any
+    writer stall. Returns the swept ``<artifact>/gen=N`` relpaths and
+    claim markers."""
+    man = load_manifest(path)
+    # active tombstones are live artifacts; only retired ones are debris
+    live = {g["gen"] for g in man["generations"]} | {
+        t["gen"] for t in man.get("tombstones", [])
+    }
+    roots = _artifact_roots(path)
+    swept: list[str] = []
+    for gen in claims(path, GENCLAIM_PREFIX):
+        if gen in live:
+            continue
+        gen_dirs = [os.path.join(path, a, f"gen={gen}") for a in roots]
+        if is_stale([marker(path, GENCLAIM_PREFIX, gen), *gen_dirs], min_age_seconds):
+            release(path, GENCLAIM_PREFIX, gen)
+            swept.append(f"{GENCLAIM_PREFIX}{gen}")
+    for artifact in roots:
+        root = os.path.join(path, artifact)
+        for name in os.listdir(root):
+            m = _GEN_DIR.fullmatch(name)
+            d = os.path.join(root, name)
+            if not m or not os.path.isdir(d) or int(m.group(1)) in live:
+                continue
+            if not is_stale([d], min_age_seconds):
+                continue
+            shutil.rmtree(d, ignore_errors=True)
+            swept.append(f"{artifact}/{name}")
+    return sorted(swept)

@@ -1,5 +1,4 @@
-"""Persisted IVF index over an embedding column — the VECTOR twin of the
-text incremental index (operators/incremental.py).
+"""Persisted IVF index over an embedding column.
 
 ``ivf_trained_topk`` trains + assigns per invocation; the operating mode
 for a served corpus is train ONCE, assign ONCE, store the vectors
@@ -26,22 +25,24 @@ ranking, same tie rules (pinned by tests/test_ann_index.py and the
 At 100 TB: the cell partitioning is the pruning unit (raise ``cells``
 so each holds many files); ``append_ann_index`` adds vectors WITHOUT
 retraining — new arrivals are assigned against the STORED model and
-land as an immutable generation dir committed by one atomic manifest
-replace, the same crash/idempotence discipline as the text index's
-``append_to_index`` (orphans invisible, ``increment_id`` replays are
-no-ops). The model itself is pinned per index: appending changes which
-vectors each cell holds, never the cell geometry, so
-query-after-append == query-against-rebuild WITH THE SAME MODEL
-(pinned by tests and the ``a0f_ann_index_append`` oracle).
+land as an immutable generation. The generation protocol is the one all
+three index families share (``operators/generations`` reads and masks,
+``commit`` lists appends / deletes / folds and vacuums), so orphans are
+invisible and ``increment_id`` replays are no-ops. The model itself is
+pinned per index: appending changes which vectors each cell holds,
+never the cell geometry, so query-after-append == query-against-rebuild
+WITH THE SAME MODEL (pinned by tests and the ``a0f_ann_index_append``
+oracle); the append's commit also checks that no retrain changed the
+model since it was read.
 
 Lifecycle beyond append (round 10): ``compact_ann_index`` folds the
 accumulated generations back to one scan (probe cost flat in nights
-elapsed), ``vacuum_index`` (shared with the text index) sweeps orphaned
-``vectors/gen=N`` dirs and unlisted pre-compaction generations, every
-append records its quantization error so ``ann_drift_report`` can flag
-when the pinned centroids stop fitting the data, and
-``rebuild_ann_index`` performs the recommended retrain entirely from
-the stored vectors.
+elapsed), ``commit.vacuum_index`` sweeps orphaned and unlisted
+generations, every append records its quantization error so
+``ann_drift_report`` can flag when the pinned centroids stop fitting the
+data, and ``rebuild_ann_index`` performs the recommended retrain
+entirely from the stored vectors — a fold of every generation that also
+replaces the model.
 """
 
 from __future__ import annotations
@@ -51,6 +52,7 @@ from pyspark.sql import functions as F
 
 from .. import commit
 from ..functions.local_frames import literal_frame
+from . import generations
 
 from .similarity import (
     _assign_cell,
@@ -62,14 +64,20 @@ from .similarity import (
 
 # the ANN membership artifact (round-12 verdict task 6): one row per
 # indexed vector, hive-partitioned by vb = pmod(vec_id, VEC_BUCKETS) —
-# the vector twin of the lexical doclist. "Are these vec_ids indexed?"
+# the vector counterpart of the lexical doclist. "Are these vec_ids indexed?"
 # probes read only the asked ids' buckets of this narrow artifact,
 # never the cell-partitioned vectors/ (whose rows carry the embedding
 # payload and whose CELL partitioning prunes nothing for an id lookup —
 # every cell would scan). Feeds the nightly hybrid-consistency check at
 # consistency_scope="full", whose cost now tracks asked-set size.
 VEC_BUCKETS = 64
-_VECLIST_SCHEMA = "vec_id bigint, vb int"
+VECLIST_SCHEMA = "vec_id bigint, vb int"
+# the id-keyed artifacts as (name, read schema, id column), audited by
+# takedown.verify_forgotten; vectors/ is read with its inferred schema
+ID_KEYED_ARTIFACTS = (
+    ("vectors", None, "vec_id"),
+    ("veclist", VECLIST_SCHEMA, "vec_id"),
+)
 
 
 def _vb(col: str):
@@ -273,8 +281,7 @@ def append_ann_index(
     INCREMENT. An empty increment is a no-op (returns False) — an empty
     generation dir would carry no schema to read back.
 
-    Concurrent appenders are safe — same claim+locked-commit discipline
-    as the text index (operators/incremental.append_to_index), with no
+    Concurrent appenders are safe (``commit.commit_append``), with no
     cap-consistency relaxation to document: the model is pinned, so
     concurrent assignments never interact.
 
@@ -302,40 +309,24 @@ def append_ann_index(
     # data has drifted away from the centroids (recall decays silently
     # otherwise; the model is never retrained by appends)
     drift_msd = _mean_assign_msd(increment, model)
-    with commit.manifest_lock(path):
-        cur = commit.load_manifest(path)
-        applied_now = commit.applied_increments(cur)
-        if increment_id is not None and increment_id in applied_now:
-            commit.release(path, commit.GENCLAIM_PREFIX, gen)
-            return False
+
+    def same_model(cur: dict) -> None:
+        # a retrain flipped the model between our model read and this
+        # commit: our vectors are assigned under superseded centroids and
+        # queries would route by the NEW model straight past them. The
+        # written generation stays an orphan for vacuum_index.
         if int(cur.get("model_epoch", 0)) != model_epoch:
-            # a retrain flipped the model between our model read and this
-            # commit: our vectors are assigned under superseded centroids
-            # and queries would route by the NEW model straight past them.
-            # The written generation stays an orphan for vacuum_index.
             raise ModelEpochChangedError(
                 f"model epoch changed during append at {path} "
                 f"(read {model_epoch}, now {cur.get('model_epoch', 0)}); "
                 "retry the append to re-assign against the new model"
             )
-        if any(g["gen"] == gen for g in cur["generations"]):
-            # stolen claim (vacuumed past the horizon) already committed
-            # this number — a second commit would double-read gen={gen}
-            raise RuntimeError(
-                f"generation {gen} already committed at {path}; "
-                "claim was lost mid-append — retry the append"
-            )
-        cur["generations"].append(
-            {
-                "gen": gen,
-                "increment_id": increment_id,
-                "drift_msd": drift_msd,
-                "cell_counts": cell_counts,
-            }
-        )
-        commit.write_manifest(path, cur)
-    commit.release(path, commit.GENCLAIM_PREFIX, gen)
-    return True
+
+    return commit.commit_append(
+        path, gen, increment_id,
+        {"drift_msd": drift_msd, "cell_counts": cell_counts},
+        fence=same_model,
+    )
 
 
 def load_ann_model(path: str) -> tuple[int, list[tuple[int, list[float]]]]:
@@ -344,60 +335,6 @@ def load_ann_model(path: str) -> tuple[int, list[tuple[int, list[float]]]]:
     return int(man["dim"]), [
         (int(cid), [float(x) for x in vec]) for cid, vec in man["model"]
     ]
-
-
-def _read_vectors(spark, path: str, man: dict) -> DataFrame:
-    """Union of the committed vector generations (manifest-listed only —
-    crashed appends' orphans are never read). Each slice carries its
-    generation number as ``_gen`` (a literal) so tombstone masking can
-    scope deletes to the generations they covered (round 13 — a vec_id
-    re-appended after its delete lands in a higher generation and serves
-    unmasked)."""
-    import os
-
-    root = os.path.join(path, "vectors")
-    out = None
-    for g in man["generations"]:
-        d = os.path.join(root, f"gen={g['gen']}")
-        part = (
-            spark.read.option("basePath", d)
-            .parquet(d)
-            .withColumn("_gen", F.lit(int(g["gen"])))
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
-
-
-def _active_vec_tombstones(spark, path: str, man: dict) -> DataFrame | None:
-    """(vec_id, max_gen) union of the listed tombstone generations, or
-    None — the ANN twin of ``lexindex._active_tombstones``; the frame is
-    delete-volume-sized (deletes are rare) so the mask join broadcasts."""
-    import os
-
-    out = None
-    for t in man.get("tombstones", []):
-        d = os.path.join(path, "tombstones", f"gen={t['gen']}")
-        part = (
-            spark.read.schema("vec_id bigint, vb int")
-            .option("basePath", d)
-            .parquet(d)
-            .select("vec_id", F.lit(int(t["max_gen"])).alias("max_gen"))
-        )
-        out = part if out is None else out.unionByName(part)
-    if out is None:
-        return None
-    return out.groupBy("vec_id").agg(F.max("max_gen").alias("max_gen"))
-
-
-def _mask_deleted_vecs(df: DataFrame, tomb: DataFrame | None) -> DataFrame:
-    """Drop rows whose (vec_id, _gen) a tombstone covers."""
-    if tomb is None:
-        return df
-    return df.join(
-        tomb,
-        (df["vec_id"] == tomb["vec_id"]) & (df["_gen"] <= tomb["max_gen"]),
-        "left_anti",
-    )
 
 
 def delete_from_ann_index(
@@ -417,7 +354,7 @@ def delete_from_ann_index(
     is row-identical to querying an index holding only the survivors
     under the SAME pinned model (oracled by a0k_ann_delete_query).
     Compaction and retrain apply tombstones physically and retire them.
-    Generation-scoped like the lexical twin (re-appends serve);
+    Generation-scoped like every index delete (re-appends serve);
     ``increment_id`` replays are committed no-ops; deleting non-members
     is a no-op that does not consume the id."""
     import os
@@ -441,58 +378,11 @@ def delete_from_ann_index(
         .partitionBy("vb")
         .parquet(os.path.join(path, "tombstones", f"gen={gen}"))
     )
-    with commit.manifest_lock(path):
-        cur = commit.load_manifest(path)
-        applied_now = commit.applied_deletes(cur)
-        if increment_id is not None and increment_id in applied_now:
-            commit.release(path, commit.GENCLAIM_PREFIX, gen)
-            return False
-        if {g["gen"] for g in cur["generations"]} != {
-            g["gen"] for g in man["generations"]
-        }:
-            # concurrent-append fence (round-14 advice): membership was
-            # resolved against ``man``; stamping max_gen from ``cur``
-            # would cover an append the probe never saw, silently
-            # masking a concurrently (re-)appended vector. Same fence
-            # as compact/retrain; the tombstone dir is a vacuum orphan.
-            raise RuntimeError(
-                f"concurrent append landed during delete from {path}; "
-                "re-run delete_from_ann_index"
-            )
-        cur.setdefault("tombstones", []).append(
-            {
-                "gen": gen,
-                "increment_id": increment_id,
-                "max_gen": max(g["gen"] for g in cur["generations"]),
-            }
-        )
-        commit.write_manifest(path, cur)
-    commit.release(path, commit.GENCLAIM_PREFIX, gen)
-    return True
-
-
-def _read_veclist(spark, path: str, man: dict) -> DataFrame:
-    """Union of the committed veclist generations. Every writer lists a
-    generation only after its veclist landed, so a missing dir is a
-    damaged index: ``FileNotFoundError`` names it."""
-    import os
-
-    out = None
-    for g in man["generations"]:
-        d = os.path.join(path, "veclist", f"gen={g['gen']}")
-        if not os.path.isdir(d):
-            raise FileNotFoundError(
-                f"ANN index at {path} lists generation {g['gen']} but has "
-                f"no veclist/gen={g['gen']} dir; rebuild the index"
-            )
-        part = (
-            spark.read.schema(_VECLIST_SCHEMA)
-            .option("basePath", d)
-            .parquet(d)
-            .withColumn("_gen", F.lit(int(g["gen"])))
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
+    # membership was resolved against ``man``: commit_delete refuses an
+    # append that landed since, whose vector the tombstone would mask
+    return commit.commit_delete(
+        path, man, gen, increment_id, {}, "delete_from_ann_index"
+    )
 
 
 def indexed_vec_ids(
@@ -500,38 +390,35 @@ def indexed_vec_ids(
     path: str,
     ids: DataFrame,
     exclude_increment_id: str | None = None,
-    generations: list[dict] | None = None,
 ) -> DataFrame:
     """Which of ``ids`` (a 1-column (vec_id) frame) are already in the
-    ANN index — the vector twin of ``lexindex.indexed_doc_ids``, reading
-    only the asked ids' ``vb`` bucket partitions of the veclist (the
-    bucket list is a ≤VEC_BUCKETS-value driver-side collect over the
-    IDS — bounded gate), never the embedding-carrying vectors/. Probe
-    cost tracks |ids| x bucket share, not index size.
+    ANN index — the vector counterpart of ``lexindex.indexed_doc_ids``,
+    reading only the asked ids' ``vb`` bucket partitions of the veclist
+    (the bucket list is a ≤VEC_BUCKETS-value driver-side collect over
+    the IDS — bounded gate), never the embedding-carrying vectors/.
+    Probe cost tracks |ids| x bucket share, not index size.
 
     ``exclude_increment_id`` skips the generation that increment itself
-    committed (the crash-replay contract, same as the lexical twin).
-    ``generations`` restricts the probe to an explicit entry subset
-    (the nightly consistency check scopes to tonight's generations);
-    entries must come from this index's manifest."""
+    committed (the crash-replay contract, same as the lexical index)."""
     man = commit.load_manifest(path)
     gens = [
         g
-        for g in (generations if generations is not None else man["generations"])
+        for g in man["generations"]
         if exclude_increment_id is None
         or g.get("increment_id") != exclude_increment_id
     ]
     want = ids.select(F.col(ids.columns[0]).cast("long").alias("vec_id")).distinct()
     if not gens:
         return want.limit(0)
-    sub = dict(man, generations=gens)
-    vl = _read_veclist(spark, path, sub)
+    vl = generations.read(spark, path, "veclist", gens, VECLIST_SCHEMA)
     vbs = [r["vb"] for r in want.select(_vb("vec_id").alias("vb")).distinct().collect()]
     if len(vbs) < VEC_BUCKETS:
         vl = vl.filter(F.col("vb").isin(vbs))
     # deleted vectors are not members; the mask is generation-scoped so
     # a re-appended vec_id's new row stays a member (round 13)
-    vl = _mask_deleted_vecs(vl, _active_vec_tombstones(spark, path, man))
+    vl = generations.mask(
+        vl, generations.tombstones(spark, path, man, "vec_id"), "vec_id"
+    )
     return want.join(vl.select("vec_id"), "vec_id", "left_semi")
 
 
@@ -625,11 +512,13 @@ def query_ann_index(
     # bounded driver-side gate (<= len(model) values): the scan below
     # carries a partition filter on exactly the probed cells
     probed = [r["cell"] for r in probes.select("cell").distinct().collect()]
-    vec = _read_vectors(spark, path, man)
+    vec = generations.read(spark, path, "vectors", man["generations"])
     if len(probed) < len(model):
         vec = vec.filter(F.col("cell").isin(probed))
     # tombstone mask (round-13 deletes) — deleted vectors never rank
-    vec = _mask_deleted_vecs(vec, _active_vec_tombstones(spark, path, man))
+    vec = generations.mask(
+        vec, generations.tombstones(spark, path, man, "vec_id"), "vec_id"
+    )
     if filter_ids is not None:
         # allowed-set semi-join on the probed candidates — BEFORE the
         # ranking window, so every returned row is allowed AND the top-k
@@ -668,9 +557,9 @@ def compact_ann_index(
     spark, path: str, max_generations_to_fold: int | None = None
 ) -> int:
     """Fold all committed vector generations into ONE — the maintenance
-    step that completes the ANN lifecycle (build -> append* -> compact),
-    mirroring the text index's compact_index. A year of nightly appends
-    means ~365 generation dirs; ``_read_vectors`` unions one parquet scan
+    step that completes the ANN lifecycle (build -> append* -> compact).
+    A year of nightly appends
+    means ~365 generation dirs; the reader unions one parquet scan
     per generation, so probe plan size and small-file count grow linearly
     with nights elapsed until this folds them back to one scan.
 
@@ -681,13 +570,11 @@ def compact_ann_index(
     row-identical to query-before (pinned by tests and the
     ``a0g_ann_index_compact`` oracle).
 
-    Commit discipline matches the text index exactly: fresh claimed
-    generation number, artifacts first, atomic manifest flip under the
-    lock, ABORT if a concurrent append committed while folding (the
-    folded dir would silently drop that generation — the orphan is
-    vacuum's business, the caller re-runs), old generation dirs LEFT on
-    disk for in-flight readers until ``vacuum_index``'s age-based sweep.
-    Applied increment_ids move into ``compacted_increments`` so append
+    Commit: fresh claimed generation number, artifacts first, then
+    ``commit.commit_fold`` — it aborts if an append or delete committed
+    while folding (the caller re-runs), leaves the old generation dirs
+    for in-flight readers until ``commit.vacuum_index`` sweeps them, and
+    keeps applied increment_ids under ``compacted_increments`` so append
     idempotence survives. Returns the new generation number.
 
     **Tiered fold** (``max_generations_to_fold=K``, round 12): fold
@@ -701,32 +588,19 @@ def compact_ann_index(
     the rebuild flag."""
     import os
 
-
     man = commit.load_manifest(path)
-    entries = list(man["generations"])
-    old_gens = [g["gen"] for g in entries]
     fold_entries, keep_entries = commit.split_fold_slice(
-        entries, max_generations_to_fold
+        man["generations"], max_generations_to_fold
     )
-    fold_man = dict(man, generations=fold_entries)
     # tombstones apply PHYSICALLY at fold time (round 13): folded rows
     # land under a NEW generation above every tombstone's cover, so a
-    # covered row carried through would un-mask — same discipline and
-    # retirement rule as the lexical compactor
-    tomb = _active_vec_tombstones(spark, path, man)
-    old_tomb_gens = {t["gen"] for t in man.get("tombstones", [])}
-    absorbed_gens = {
-        t["gen"]
-        for t in man.get("tombstones", [])
-        if not any(g["gen"] <= t["max_gen"] for g in keep_entries)
-    }
-    absorbed_ids = {
-        t["increment_id"]
-        for t in man.get("tombstones", [])
-        if t["gen"] in absorbed_gens and t.get("increment_id") is not None
-    }
+    # covered row carried through would un-mask — commit_fold retires
+    # the tombstones the fold absorbs
+    tomb = generations.tombstones(spark, path, man, "vec_id")
     gen = commit.claim_generation(path)
-    vec = _mask_deleted_vecs(_read_vectors(spark, path, fold_man), tomb)
+    vec = generations.mask(
+        generations.read(spark, path, "vectors", fold_entries), tomb, "vec_id"
+    )
     _fold_dir = os.path.join(path, "vectors", f"gen={gen}")
     (
         vec.select("vec_id", "embedding", "cell")
@@ -739,7 +613,11 @@ def compact_ann_index(
     # fold the membership artifact alongside — from the folded slice's
     # own veclists (narrow scan)
     (
-        _mask_deleted_vecs(_read_veclist(spark, path, fold_man), tomb)
+        generations.mask(
+            generations.read(spark, path, "veclist", fold_entries, VECLIST_SCHEMA),
+            tomb,
+            "vec_id",
+        )
         .select("vec_id", "vb")
         .repartition(VEC_BUCKETS, F.col("vb"))
         .write.mode("overwrite")
@@ -765,46 +643,12 @@ def compact_ann_index(
         for m in (g.get("drift_msd"), g.get("carried_max_drift_msd"))
         if m is not None
     ]
-    applied = [
-        g["increment_id"]
-        for g in fold_entries
-        if g.get("increment_id") is not None
-    ]
-    with commit.manifest_lock(path):
-        cur = commit.load_manifest(path)
-        if {g["gen"] for g in cur["generations"]} != set(old_gens):
-            raise RuntimeError(
-                f"concurrent append landed during compaction of {path}; "
-                "re-run compact_ann_index"
-            )
-        if {t["gen"] for t in cur.get("tombstones", [])} != old_tomb_gens:
-            raise RuntimeError(
-                f"concurrent delete landed during compaction of {path}; "
-                "re-run compact_ann_index"
-            )
-        cur["compacted_increments"] = sorted(
-            set(cur.get("compacted_increments", [])) | set(applied)
-        )
-        if absorbed_gens:
-            cur["applied_deletes"] = sorted(
-                set(cur.get("applied_deletes", [])) | absorbed_ids
-            )
-            cur["tombstones"] = [
-                t
-                for t in cur.get("tombstones", [])
-                if t["gen"] not in absorbed_gens
-            ]
-        entry: dict = {
-            "gen": gen,
-            "increment_id": None,
-            "drift_msd": fold_msd,
-            "cell_counts": fold_cell_counts,
-        }
-        if carried:
-            entry["carried_max_drift_msd"] = max(carried)
-        cur["generations"] = keep_entries + [entry]
-        commit.write_manifest(path, cur)
-    commit.release(path, commit.GENCLAIM_PREFIX, gen)
+    entry: dict = {"drift_msd": fold_msd, "cell_counts": fold_cell_counts}
+    if carried:
+        entry["carried_max_drift_msd"] = max(carried)
+    commit.commit_fold(
+        path, man, gen, fold_entries, keep_entries, entry, "compact_ann_index"
+    )
     return gen
 
 
@@ -854,9 +698,10 @@ def serving_overlap_probe(
     # ground truth over the LIVE population only (tombstone mask) — the
     # served probe masks identically, so overlap measures the probe, not
     # the deletes
-    vec = _mask_deleted_vecs(
-        _read_vectors(spark, path, man),
-        _active_vec_tombstones(spark, path, man),
+    vec = generations.mask(
+        generations.read(spark, path, "vectors", man["generations"]),
+        generations.tombstones(spark, path, man, "vec_id"),
+        "vec_id",
     ).select("vec_id", "embedding")
     picked = (
         vec.withColumn("h", F.xxhash64("vec_id"))
@@ -1031,8 +876,8 @@ def ann_drift_report(path: str, ratio_threshold: float = DRIFT_REBUILD_RATIO) ->
 
 
 def ann_index_stats(spark, path: str) -> "DataFrame":
-    """One-row observability report for an ANN index (round 15, the
-    lexical twin of ``lexical_index_stats``): listed vector count (from
+    """One-row observability report for an ANN index (round 15, like
+    ``lexical_index_stats``): listed vector count (from
     the per-generation ``cell_counts`` manifests when every generation
     carries them — the round-14 instrument — else one masked veclist
     count), model shape, and the lifecycle counters (generations,
@@ -1046,9 +891,12 @@ def ann_index_stats(spark, path: str) -> "DataFrame":
             sum(int(c) for c in g["cell_counts"].values()) for g in gens
         )
     else:
-        vl = _mask_deleted_vecs(
-            _read_veclist(spark, path, man),
-            _active_vec_tombstones(spark, path, man),
+        vl = generations.mask(
+            generations.read(
+                spark, path, "veclist", man["generations"], VECLIST_SCHEMA
+            ),
+            generations.tombstones(spark, path, man, "vec_id"),
+            "vec_id",
         )
         nv = vl.count()
     # literal projection over range(1) — see lexical_index_stats: a
@@ -1091,70 +939,37 @@ def rebuild_ann_index(
     dim = int(man["dim"])
     if cells is None:
         cells = len(man["model"])
-    old_gens = [g["gen"] for g in man["generations"]]
-    old_tomb_gens = {t["gen"] for t in man.get("tombstones", [])}
     gen = commit.claim_generation(path)
     # deleted vectors must not shape the new quantizer NOR re-enter the
     # rebuilt index — the retrain consumes only the live population, so
-    # every tombstone is fully applied and retires below (round 13)
-    vec = _mask_deleted_vecs(
-        _read_vectors(spark, path, man),
-        _active_vec_tombstones(spark, path, man),
+    # every tombstone is fully applied: a fold of every generation that
+    # keeps none retires them all (round 13)
+    vec = generations.mask(
+        generations.read(spark, path, "vectors", man["generations"]),
+        generations.tombstones(spark, path, man, "vec_id"),
+        "vec_id",
     ).select("vec_id", "embedding")
     model = kmeans_centroids(
         vec, dim, k=cells, iters=iters, sample_rate=sample_rate
     )
     rebuild_cell_counts = _write_vectors_gen(vec, path, gen, model)
     baseline = _mean_assign_msd(vec, model)
-    applied = [
-        g["increment_id"]
-        for g in man["generations"]
-        if g.get("increment_id") is not None
-    ]
-    with commit.manifest_lock(path):
-        cur = commit.load_manifest(path)
-        if {g["gen"] for g in cur["generations"]} != set(old_gens):
-            raise RuntimeError(
-                f"concurrent append landed during retrain of {path}; "
-                "re-run rebuild_ann_index"
-            )
-        if {t["gen"] for t in cur.get("tombstones", [])} != old_tomb_gens:
-            raise RuntimeError(
-                f"concurrent delete landed during retrain of {path}; "
-                "re-run rebuild_ann_index"
-            )
-        cur["model"] = [[cid, list(vec_)] for cid, vec_ in model]
-        # fence in-flight appends: one that read the OLD model but commits
-        # after this flip sees the bumped epoch and raises (its vectors
-        # were assigned under the superseded centroids)
-        cur["model_epoch"] = int(cur.get("model_epoch", 0)) + 1
-        cur["baseline_msd"] = baseline
-        # the retrain's own coverage replaces the build's — a
-        # sample_rate=1.0 rebuild is exactly how an operator retires the
-        # low-coverage probe surcharge
-        cur["train_sample_rate"] = float(sample_rate)
-        cur["compacted_increments"] = sorted(
-            set(cur.get("compacted_increments", [])) | set(applied)
-        )
-        # every tombstone was applied to the rebuilt population — retire
-        # them all (ids preserved for replay idempotence)
-        if cur.get("tombstones"):
-            cur["applied_deletes"] = sorted(
-                set(cur.get("applied_deletes", []))
-                | {
-                    t["increment_id"]
-                    for t in cur["tombstones"]
-                    if t.get("increment_id") is not None
-                }
-            )
-            cur["tombstones"] = []
-        cur["generations"] = [
-            {
-                "gen": gen,
-                "increment_id": None,
-                "cell_counts": rebuild_cell_counts,
-            }
-        ]
-        commit.write_manifest(path, cur)
-    commit.release(path, commit.GENCLAIM_PREFIX, gen)
+    commit.commit_fold(
+        path, man, gen, man["generations"], [],
+        {"cell_counts": rebuild_cell_counts}, "rebuild_ann_index",
+        fields={
+            "model": [[cid, list(vec_)] for cid, vec_ in model],
+            # fence in-flight appends: one that read the OLD model but
+            # commits after this flip sees the bumped epoch and raises
+            # (its vectors were assigned under the superseded centroids).
+            # commit_fold's append fence guarantees no other retrain
+            # moved the epoch since ``man`` was read.
+            "model_epoch": int(man.get("model_epoch", 0)) + 1,
+            "baseline_msd": baseline,
+            # the retrain's own coverage replaces the build's — a
+            # sample_rate=1.0 rebuild is exactly how an operator retires
+            # the low-coverage probe surcharge
+            "train_sample_rate": float(sample_rate),
+        },
+    )
     return gen

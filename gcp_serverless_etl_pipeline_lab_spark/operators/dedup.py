@@ -654,16 +654,21 @@ def gram_novelty(
     hold a materialized (doc_id, shingles) frame pass it via
     ``shingles`` and skip the extra copy (a0d_novelty_survivors shares
     one across edge detection and scoring). A shared frame fixes the
-    gram width at ITS build-time n, so combining it with a non-default
-    ``n`` is rejected loudly (ADVICE r15: silently wrong novelty
-    otherwise)."""
-    if shingles is not None and n != 3:
-        raise ValueError(
-            "gram_novelty: a caller-provided `shingles` frame fixes the "
-            f"gram width at its own build-time n; passing n={n} with it "
-            "is contradictory — shingle with that n yourself and pass "
-            "the frame, or drop the n argument"
+    gram width at ITS build-time n, so the frame is checked against
+    ``n``: one gram is read back and its token count compared (a
+    mismatch raises — silently wrong novelty otherwise, ADVICE r15).
+    Grams join their ``n`` tokens with single spaces, so the count is
+    exact even for empty tokens."""
+    if shingles is not None:
+        one = (
+            shingles.select(F.explode("shingles").alias("g")).limit(1).collect()
         )
+        if one and len(one[0]["g"].split(" ")) != n:
+            raise ValueError(
+                "gram_novelty: the `shingles` frame holds "
+                f"{len(one[0]['g'].split(' '))}-grams but n={n}; pass the n "
+                "the frame was built with"
+            )
     sh = (
         shingles
         if shingles is not None

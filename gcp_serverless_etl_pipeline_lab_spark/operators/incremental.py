@@ -41,14 +41,17 @@ compact index:
 
 The index is extended, not rebuilt, after an increment is merged into
 the base: ``append_to_index`` writes the increment's hashes / postings /
-sizes as a new immutable GENERATION directory per artifact and commits
-it with one atomic manifest replace — append cost tracks INCREMENT
-size, never base size, and the df-cap contract is re-enforced across
-old+new (a gram whose cumulative document frequency crosses the cap at
-append time is added to a capped-grams ledger the probes anti-join, so
-probe-after-append is bit-identical to probe-against-rebuilt-index —
-pinned by tests/test_incremental_index.py and the ``a0e_index_append``
-oracle query).
+sizes as a new immutable GENERATION directory per artifact — append
+cost tracks INCREMENT size, never base size — and the df-cap contract
+is re-enforced across old+new (a gram whose cumulative document
+frequency crosses the cap at append time is added to a capped-grams
+ledger the probes anti-join, so probe-after-append is bit-identical to
+probe-against-rebuilt-index — pinned by tests/test_incremental_index.py
+and the ``a0e_index_append`` oracle query). ``delete_from_index`` and
+``compact_index`` complete the lifecycle. The generation layout and its
+commits are the ones all three index families share: readers and the
+tombstone mask in ``operators/generations``, the append / delete / fold
+transactions and ``vacuum_index`` in ``commit``.
 """
 
 from __future__ import annotations
@@ -57,6 +60,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import commit
+from . import generations
 from .dedup import _with_shingles, cap_document_frequency
 
 
@@ -190,6 +194,13 @@ _GRAMS_SCHEMA = "base_id bigint, g string, gb int"
 _SIZES_SCHEMA = "base_id bigint, sz_b int"
 _GRAMDF_SCHEMA = "g string, df bigint, gb int"
 _CAPPED_SCHEMA = "g string"
+# the id-keyed artifacts as (name, read schema, id column), audited by
+# takedown.verify_forgotten
+ID_KEYED_ARTIFACTS = (
+    ("grams", _GRAMS_SCHEMA, "base_id"),
+    ("sizes", _SIZES_SCHEMA, "base_id"),
+    ("hashes", _HASHES_SCHEMA, "doc_id"),
+)
 
 
 def _gb(col: str):
@@ -320,71 +331,6 @@ def _write_generation(
     )
 
 
-def _read_artifact(spark, path: str, name: str, man: dict, schema: str) -> DataFrame:
-    """Union of the artifact's COMMITTED generations (manifest-listed
-    only — an orphaned gen dir from a crashed append is never read).
-    The explicit schema makes an EMPTY generation (e.g. an all-capped
-    increment's postings) read as zero rows instead of failing schema
-    inference; partition columns (gb) resolve from dir names as usual.
-    Each slice carries its generation number as ``_gen`` (a literal —
-    free) so tombstone masking can scope a delete to the generations it
-    covered (round 14): writers that persist an artifact back must
-    select it away."""
-    import os
-
-    out = None
-    for g in man["generations"]:
-        gen = int(g["gen"])
-        d = os.path.join(path, name, f"gen={gen}")
-        part = (
-            spark.read.schema(schema)
-            .option("basePath", d)
-            .parquet(d)
-            .withColumn("_gen", F.lit(gen))
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
-
-
-def _active_text_tombstones(spark, path: str, man: dict) -> DataFrame | None:
-    """(doc_id, max_gen) union of the listed tombstone generations, or
-    None when the index has no active deletes — the text index's twin of
-    ``lexindex._active_tombstones``. The frame is delete-volume-sized
-    (deletes are rare events), so every mask join rides a small frame
-    AQE broadcasts."""
-    import os
-
-    out = None
-    for t in man.get("tombstones", []):
-        d = os.path.join(path, "tombstones", f"gen={t['gen']}")
-        part = (
-            spark.read.schema("doc_id bigint, k string")
-            .option("basePath", d)
-            .parquet(d)
-            .select("doc_id", F.lit(int(t["max_gen"])).alias("max_gen"))
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
-
-
-def _mask_deleted_ids(
-    df: DataFrame, tomb: DataFrame | None, key: str = "base_id"
-) -> DataFrame:
-    """Drop rows whose (``key``, _gen) a tombstone covers — the probe-
-    side view of a text-index delete (grams and sizes by ``base_id``,
-    hashes by ``doc_id``) until compaction applies it physically."""
-    if tomb is None:
-        return df
-    t = tomb.groupBy(F.col("doc_id").alias("_tomb_id")).agg(
-        F.max("max_gen").alias("_tomb_gen")
-    )
-    return df.join(
-        t,
-        (df[key] == t["_tomb_id"]) & (df["_gen"] <= t["_tomb_gen"]),
-        "left_anti",
-    )
-
-
 def _keyed_shingles(batch: DataFrame, n: int) -> DataFrame:
     """(doc_id, k, shingles) in ONE pass over the batch (round 16, guide
     §1.2/§2.3): the md5 exact-probe key rides the token barrier next to
@@ -429,9 +375,9 @@ def exact_dups_vs_index(
         if keyed is not None
         else batch.select("doc_id", F.md5("text").alias("k"))
     )
-    base_k = _mask_deleted_ids(
-        _read_artifact(spark, path, "hashes", man, _HASHES_SCHEMA),
-        _active_text_tombstones(spark, path, man),
+    base_k = generations.mask(
+        generations.read(spark, path, "hashes", man["generations"], _HASHES_SCHEMA),
+        generations.tombstones(spark, path, man, "doc_id"),
         "doc_id",
     )
     return b.join(base_k, "k", "left_semi").select("doc_id")
@@ -492,19 +438,19 @@ def near_dups_vs_index(
         .distinct()
         .collect()
     ]
-    g_base = _read_artifact(spark, path, "grams", man, _GRAMS_SCHEMA)
+    g_base = generations.read(spark, path, "grams", man["generations"], _GRAMS_SCHEMA)
     if len(gbs) < nb:
         g_base = g_base.filter(F.col("gb").isin(gbs))
     # mask deleted docs' postings and sizes (round 14) — a taken-down
     # doc must stop near-matching future ingests; the mask is
     # generation-scoped so a re-appended doc's new rows stay live
-    _tomb = _active_text_tombstones(spark, path, man)
-    g_base = _mask_deleted_ids(g_base, _tomb)
+    tomb = generations.tombstones(spark, path, man, "doc_id")
+    g_base = generations.mask(g_base, tomb, "base_id")
     # exclude grams that crossed the df-cap in a later generation (their
     # pre-crossing postings are physically present). The ledger is small
     # by construction — broadcast anti-join, no extra shuffle of the
     # postings.
-    capped = _read_artifact(spark, path, "capped", man, _CAPPED_SCHEMA)
+    capped = generations.read(spark, path, "capped", man["generations"], _CAPPED_SCHEMA)
     g_base = g_base.join(F.broadcast(capped), "g", "left_anti")
     inter = (
         g_new.join(g_base.select("base_id", "g"), "g")
@@ -514,8 +460,10 @@ def near_dups_vs_index(
     sz_new = sh_new.select(
         F.col("doc_id").alias("new_id"), F.size("shingles").alias("sz_n")
     )
-    sz_base = _mask_deleted_ids(
-        _read_artifact(spark, path, "sizes", man, _SIZES_SCHEMA), _tomb
+    sz_base = generations.mask(
+        generations.read(spark, path, "sizes", man["generations"], _SIZES_SCHEMA),
+        tomb,
+        "base_id",
     )
     return (
         inter.join(sz_new, "new_id")
@@ -611,7 +559,9 @@ def append_to_index(
     try:
         nb = int(man["gram_buckets"])
         gbs = [r["gb"] for r in inc_df.select("gb").distinct().collect()]
-        old_df = _read_artifact(spark, path, "gramdf", man, _GRAMDF_SCHEMA)
+        old_df = generations.read(
+            spark, path, "gramdf", man["generations"], _GRAMDF_SCHEMA
+        )
         if len(gbs) < nb:
             old_df = old_df.filter(F.col("gb").isin(gbs))
         # semi-join against the increment's gram set BEFORE the sum:
@@ -670,31 +620,7 @@ def append_to_index(
                 gramdf=inc_df.select("g", "df", "gb"),
                 capped=newly_capped,
             )
-            with commit.manifest_lock(path):
-                # re-read: racing commits land
-                cur = commit.load_manifest(path)
-                applied_now = commit.applied_increments(cur)
-                if increment_id is not None and increment_id in applied_now:
-                    # same-increment race lost: our generation stays an
-                    # orphan for vacuum_index; the committed one wins
-                    commit.release(path, commit.GENCLAIM_PREFIX, gen)
-                    return False
-                if any(g["gen"] == gen for g in cur["generations"]):
-                    # our claim was stolen (e.g. vacuumed past the horizon
-                    # during an extreme stall) and the thief already
-                    # committed this number — committing too would make
-                    # _read_artifact scan gen={gen} twice (double-counted
-                    # postings). Fail loudly; a retry claims a fresh gen.
-                    raise RuntimeError(
-                        f"generation {gen} already committed at {path}; "
-                        "claim was lost mid-append — retry the append"
-                    )
-                cur["generations"].append(
-                    {"gen": gen, "increment_id": increment_id}
-                )
-                commit.write_manifest(path, cur)
-            commit.release(path, commit.GENCLAIM_PREFIX, gen)
-            return True
+            return commit.commit_append(path, gen, increment_id, {})
         finally:
             merged.unpersist()
     finally:
@@ -713,8 +639,8 @@ def delete_from_index(
     / right-to-be-forgotten: the serving indexes could forget since
     round 13, but a taken-down doc kept matching future ingests here as
     "already seen", silently suppressing legitimate re-ingest, and its
-    fingerprints persisted forever). Same generation-scoped tombstone
-    design as the lexical/ANN twins:
+    fingerprints persisted forever). Generation-scoped tombstones, as in
+    every index family:
 
     - ``docs`` carries a ``doc_id`` column (other columns are ignored).
       The asked ids resolve against current membership (live ``sizes``
@@ -749,11 +675,12 @@ def delete_from_index(
     if increment_id is not None and increment_id in applied:
         return False
     want = docs.select(F.col("doc_id").cast("long").alias("doc_id")).distinct()
-    tomb_now = _active_text_tombstones(spark, path, man)
+    tomb_now = generations.tombstones(spark, path, man, "doc_id")
     member = (
-        _mask_deleted_ids(
-            _read_artifact(spark, path, "sizes", man, _SIZES_SCHEMA),
+        generations.mask(
+            generations.read(spark, path, "sizes", man["generations"], _SIZES_SCHEMA),
             tomb_now,
+            "base_id",
         )
         .select(F.col("base_id").alias("doc_id"))
         .distinct()
@@ -762,8 +689,8 @@ def delete_from_index(
     # one tombstone row per (member, stored content hash): a doc whose
     # generations hold different texts stops matching under every hash
     stored_k = (
-        _mask_deleted_ids(
-            _read_artifact(spark, path, "hashes", man, _HASHES_SCHEMA),
+        generations.mask(
+            generations.read(spark, path, "hashes", man["generations"], _HASHES_SCHEMA),
             tomb_now,
             "doc_id",
         )
@@ -780,29 +707,9 @@ def delete_from_index(
     tomb_rows.select("doc_id", "k").coalesce(1).write.mode(
         "overwrite"
     ).parquet(os.path.join(path, "tombstones", f"gen={gen}"))
-    with commit.manifest_lock(path):
-        cur = commit.load_manifest(path)
-        applied_now = commit.applied_deletes(cur)
-        if increment_id is not None and increment_id in applied_now:
-            commit.release(path, commit.GENCLAIM_PREFIX, gen)
-            return False
-        if {g["gen"] for g in cur["generations"]} != {
-            g["gen"] for g in man["generations"]
-        }:
-            raise RuntimeError(
-                f"concurrent append landed during delete from {path}; "
-                "re-run delete_from_index"
-            )
-        cur.setdefault("tombstones", []).append(
-            {
-                "gen": gen,
-                "increment_id": increment_id,
-                "max_gen": max(g["gen"] for g in cur["generations"]),
-            }
-        )
-        commit.write_manifest(path, cur)
-    commit.release(path, commit.GENCLAIM_PREFIX, gen)
-    return True
+    return commit.commit_delete(
+        path, man, gen, increment_id, {}, "delete_from_index"
+    )
 
 
 def compact_index(
@@ -862,45 +769,34 @@ def compact_index(
     survives compaction."""
     man = commit.load_manifest(path)
     max_df = man["max_df"]
-    old_gens = [g["gen"] for g in man["generations"]]
     fold_entries, keep_entries = commit.split_fold_slice(
         man["generations"], max_generations_to_fold
     )
     full = not keep_entries
-    fold_man = {"generations": fold_entries}
     # tombstones (round-14 deletes) apply PHYSICALLY at fold time: the
     # folded slice lands under a NEW generation number above every
     # cover, so a covered row carried through would un-mask — covered
-    # rows are dropped from the rewrite instead. A tombstone whose whole
-    # cover lies inside the fold is fully absorbed (leaves the manifest,
-    # its increment_id moves to applied_deletes); one still covering a
-    # KEPT generation stays listed for the probe-side mask. The deleted
-    # docs' per-gram df is subtracted from their physically-present
-    # (under-cap) postings; an already-over-cap gram's contribution is
-    # unrecoverable, leaving that df a documented upper bound (see
-    # delete_from_index).
-    tomb = _active_text_tombstones(spark, path, man)
-    old_tomb_gens = {t["gen"] for t in man.get("tombstones", [])}
-    absorbed = [
-        t
-        for t in man.get("tombstones", [])
-        if not any(g["gen"] <= t["max_gen"] for g in keep_entries)
-    ]
-    absorbed_gens = {t["gen"] for t in absorbed}
+    # rows are dropped from the rewrite instead (commit_fold retires the
+    # tombstones the fold absorbs). The deleted docs' per-gram df is
+    # subtracted from their physically-present (under-cap) postings; an
+    # already-over-cap gram's contribution is unrecoverable, leaving
+    # that df a documented upper bound (see delete_from_index).
+    tomb = generations.tombstones(spark, path, man, "doc_id")
     gen = commit.claim_generation(path)
 
-    hashes = _mask_deleted_ids(
-        _read_artifact(spark, path, "hashes", fold_man, _HASHES_SCHEMA),
-        tomb,
-        "doc_id",
+    def folded(artifact: str, schema: str) -> DataFrame:
+        return generations.read(spark, path, artifact, fold_entries, schema)
+
+    hashes = generations.mask(
+        folded("hashes", _HASHES_SCHEMA), tomb, "doc_id"
     ).select("k", "doc_id")
-    sizes = _mask_deleted_ids(
-        _read_artifact(spark, path, "sizes", fold_man, _SIZES_SCHEMA), tomb
+    sizes = generations.mask(
+        folded("sizes", _SIZES_SCHEMA), tomb, "base_id"
     ).select("base_id", "sz_b")
-    grams_raw = _read_artifact(spark, path, "grams", fold_man, _GRAMS_SCHEMA)
-    grams = _mask_deleted_ids(grams_raw, tomb)
+    grams_raw = folded("grams", _GRAMS_SCHEMA)
+    grams = generations.mask(grams_raw, tomb, "base_id")
     gramdf = (
-        _read_artifact(spark, path, "gramdf", fold_man, _GRAMDF_SCHEMA)
+        folded("gramdf", _GRAMDF_SCHEMA)
         .groupBy("g", "gb")
         .agg(F.sum("df").alias("df"))
         .select("g", "df", "gb")
@@ -909,16 +805,8 @@ def compact_index(
         # subtract the deleted docs' recoverable gram occurrences (their
         # physically-present postings in the folded slice) from the
         # folded df sums; rows hitting zero drop out entirely
-        _t = tomb.groupBy(F.col("doc_id").alias("base_id")).agg(
-            F.max("max_gen").alias("max_gen")
-        )
         removed = (
-            grams_raw.join(
-                _t,
-                (grams_raw["base_id"] == _t["base_id"])
-                & (grams_raw["_gen"] <= _t["max_gen"]),
-                "left_semi",
-            )
+            generations.mask(grams_raw, tomb, "base_id", how="left_semi")
             .groupBy("g")
             .agg(F.count(F.lit(1)).alias("rm"))
         )
@@ -946,11 +834,9 @@ def compact_index(
     else:
         # preserve the folded slice's ledger; drop postings dead under
         # the GLOBAL ledger (safe: probes anti-join the global union)
-        capped = _read_artifact(
-            spark, path, "capped", fold_man, _CAPPED_SCHEMA
-        ).select("g").distinct()
-        global_capped = _read_artifact(
-            spark, path, "capped", man, _CAPPED_SCHEMA
+        capped = folded("capped", _CAPPED_SCHEMA).select("g").distinct()
+        global_capped = generations.read(
+            spark, path, "capped", man["generations"], _CAPPED_SCHEMA
         ).select("g")
         grams = grams.join(global_capped, "g", "left_anti")
     _write_generation(
@@ -962,137 +848,10 @@ def compact_index(
         gramdf=gramdf,
         capped=capped,
     )
-    applied = [
-        g["increment_id"]
-        for g in fold_entries
-        if g.get("increment_id") is not None
-    ]
-    with commit.manifest_lock(path):
-        cur = commit.load_manifest(path)
-        if {g["gen"] for g in cur["generations"]} != set(old_gens):
-            # an append committed while we folded: our fold is missing
-            # its generation — abort loudly (the folded dirs are orphans
-            # vacuum_index sweeps); caller re-runs compaction
-            raise RuntimeError(
-                f"concurrent append landed during compaction of {path}; "
-                "re-run compact_index"
-            )
-        if {t["gen"] for t in cur.get("tombstones", [])} != old_tomb_gens:
-            # a delete that landed mid-fold was not applied to the
-            # rewrite, and the rewrite moved its covered rows above the
-            # tombstone's cover — committing would resurrect them
-            raise RuntimeError(
-                f"concurrent delete landed during compaction of {path}; "
-                "re-run compact_index"
-            )
-        cur["compacted_increments"] = sorted(
-            set(cur.get("compacted_increments", [])) | set(applied)
-        )
-        if absorbed:
-            cur["applied_deletes"] = sorted(
-                set(cur.get("applied_deletes", []))
-                | {
-                    t["increment_id"]
-                    for t in absorbed
-                    if t.get("increment_id") is not None
-                }
-            )
-            cur["tombstones"] = [
-                t
-                for t in cur.get("tombstones", [])
-                if t["gen"] not in absorbed_gens
-            ]
-        cur["generations"] = keep_entries + [
-            {"gen": gen, "increment_id": None}
-        ]
-        commit.write_manifest(path, cur)
-    commit.release(path, commit.GENCLAIM_PREFIX, gen)
+    commit.commit_fold(
+        path, man, gen, fold_entries, keep_entries, {}, "compact_index"
+    )
     return gen
-
-
-def _artifact_roots(path: str) -> list[str]:
-    """Top-level artifact dirs of ANY generational index at ``path`` —
-    discovered from the layout itself (a dir holding ``gen=N`` children),
-    so the text index's five artifacts and the ANN index's ``vectors/``
-    are all swept by the one vacuum."""
-    import os
-    import re
-
-    roots = []
-    for name in sorted(os.listdir(path)):
-        root = os.path.join(path, name)
-        if not os.path.isdir(root):
-            continue
-        if any(
-            re.fullmatch(r"gen=\d+", child)
-            and os.path.isdir(os.path.join(root, child))
-            for child in os.listdir(root)
-        ):
-            roots.append(name)
-    return roots
-
-
-def vacuum_index(path: str, min_age_seconds: float = 86400.0) -> list[str]:
-    """Sweep ORPHANED generation dirs — debris of appends/compactions
-    that crashed between their artifact writes and the manifest commit,
-    plus the pre-compaction generations ``compact_index`` unlists but
-    deliberately leaves on disk for in-flight readers. Readers never see
-    orphans (only manifest-listed generations are read), so this is
-    storage hygiene, not correctness. Works on any generational index —
-    artifact dirs are discovered from the layout, so the text index
-    (hashes/grams/sizes/gramdf/capped) and the ANN index (vectors) share
-    this one sweeper. The age bound disambiguates a crash from an
-    IN-FLIGHT append writing its dirs right now (same rule as
-    sinks.vacuum_versions: nothing legitimately idles mid-write for
-    longer than the vacuum horizon — sweeping a live append's files
-    would let it commit a manifest pointing at deleted data). A claim
-    marker ages off the NEWEST file its generation has produced, not its
-    own creation time, so an append that runs longer than the horizon
-    keeps its claim as long as it keeps writing; the locked manifest
-    commit additionally rejects a generation number that is already
-    listed, so even a stolen claim can never double-count a generation.
-    (The residual zombie-writer window — a writer that stalls SILENTLY
-    past the horizon, loses its claim, then wakes and rewrites a number
-    someone else committed — is the standard snapshot-store contract:
-    size the horizon beyond any possible writer stall, exactly as
-    object-store table formats require for their vacuum.) Returns the
-    swept ``<artifact>/gen=N`` relpaths."""
-    import os
-    import re
-    import shutil
-
-    man = commit.load_manifest(path)
-    live = {g["gen"] for g in man["generations"]}
-    # active tombstones (round-13 deletes) are live artifacts — only
-    # retired ones (absorbed by compaction, unlisted) are debris
-    live |= {t["gen"] for t in man.get("tombstones", [])}
-    roots = _artifact_roots(path)
-    swept: list[str] = []
-    # stale generation-claim markers (crashed appenders) age out too —
-    # aged off the newest write under the claimed gen, so a slow but
-    # ACTIVE appender is never swept mid-flight
-    prefix = commit.GENCLAIM_PREFIX
-    for gen in commit.claims(path, prefix):
-        if gen in live:
-            continue
-        gen_dirs = [os.path.join(path, a, f"gen={gen}") for a in roots]
-        if commit.is_stale(
-            [commit.marker(path, prefix, gen), *gen_dirs], min_age_seconds
-        ):
-            commit.release(path, prefix, gen)
-            swept.append(f"{prefix}{gen}")
-    for artifact in roots:
-        root = os.path.join(path, artifact)
-        for name in os.listdir(root):
-            m = re.fullmatch(r"gen=(\d+)", name)
-            d = os.path.join(root, name)
-            if not m or not os.path.isdir(d) or int(m.group(1)) in live:
-                continue
-            if not commit.is_stale([d], min_age_seconds):
-                continue
-            shutil.rmtree(d, ignore_errors=True)
-            swept.append(f"{artifact}/{name}")
-    return sorted(swept)
 
 
 def classify_batch_vs_index(

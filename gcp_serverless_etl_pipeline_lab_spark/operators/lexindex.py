@@ -1,16 +1,16 @@
-"""Persisted inverted (BM25) lexical index — the LEXICAL twin of the
-text dedup index (operators/incremental.py) and the ANN index
-(operators/annindex.py), completing the round-10 retrieval work: the
-scan-based ``retrieval.bm25_topk`` re-explodes every document's tokens
-per query, so one query costs a corpus scan; a query SERVICE builds the
-postings ONCE and every probe reads only the term buckets the query
-names.
+"""Persisted inverted (BM25) lexical index, completing the round-10
+retrieval work next to the text dedup index (operators/incremental.py)
+and the ANN index (operators/annindex.py): the scan-based
+``retrieval.bm25_topk`` re-explodes every document's tokens per query,
+so one query costs a corpus scan; a query SERVICE builds the postings
+ONCE and every probe reads only the term buckets the query names.
 
-Layout under ``path`` (the generational commit discipline the sibling
-indexes share through the ``commit`` module — immutable ``gen=N`` dirs,
-atomic manifest replace as the one commit point, crash orphans
-invisible, ``increment_id`` replays committed no-ops, shared
-``vacuum_index``):
+Layout under ``path`` — the generation protocol all three index
+families share (immutable ``gen=N`` dirs read and tombstone-masked by
+``operators/generations``; the manifest append / delete / fold
+transactions of ``commit`` as the one commit point; crash orphans
+invisible, ``increment_id`` replays committed no-ops,
+``commit.vacuum_index`` sweeps the debris):
 
 - ``postings/gen=N`` — one row per (term, doc) pair: ``(term, doc_id,
   tf, dl)``, hive-partitioned by ``tb = pmod(xxhash64(term),
@@ -62,6 +62,7 @@ from pyspark.sql import functions as F
 
 from .. import commit
 from ..functions.local_frames import literal_frame
+from . import generations
 
 
 def _literal_terms(spark, terms):
@@ -87,6 +88,13 @@ _POSITIONS_SCHEMA = "term string, doc_id bigint, positions array<int>, tb int"
 # the doclist carries the doc length so DELETES can subtract exact
 # (n_docs, sum_dl) even for tokenless docs (no postings to read dl from)
 _DOCLIST_SCHEMA = "doc_id bigint, dl int, db int"
+# the id-keyed artifacts as (name, read schema, id column): the rows a
+# takedown must remove, audited by takedown.verify_forgotten
+ID_KEYED_ARTIFACTS = (
+    ("postings", _POSTINGS_SCHEMA, "doc_id"),
+    ("positions", _POSITIONS_SCHEMA, "doc_id"),
+    ("doclist", _DOCLIST_SCHEMA, "doc_id"),
+)
 
 
 def _tb(col: str):
@@ -141,24 +149,6 @@ def _write_positions_gen(positions: DataFrame, path: str, gen: int) -> None:
         .partitionBy("tb")
         .parquet(os.path.join(path, "positions", f"gen={gen}"))
     )
-
-
-def _read_positions(spark, path: str, man: dict) -> DataFrame:
-    """Union of the committed positions generations, tagged with _gen
-    for tombstone scoping — the positional twin of _read_postings."""
-    import os
-
-    out = None
-    for g in man["generations"]:
-        d = os.path.join(path, "positions", f"gen={g['gen']}")
-        part = (
-            spark.read.schema(_POSITIONS_SCHEMA)
-            .option("basePath", d)
-            .parquet(d)
-            .withColumn("_gen", F.lit(int(g["gen"])))
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
 
 
 def _corpus_stats(docs: DataFrame, text_col: str) -> tuple[int, int]:
@@ -258,13 +248,12 @@ def append_lexical_index(
     assert_new_doc_ids: bool = False,
 ) -> bool:
     """Extend the index with NEWLY MERGED documents WITHOUT touching the
-    existing postings — the nightly-loop step, same contract as the
-    sibling indexes: cost tracks increment size; the new postings land
-    as an immutable generation committed by one atomic manifest replace;
-    ``increment_id`` replays are committed no-ops (returns False);
-    concurrent appenders claim distinct generation numbers and the
-    locked commit drops neither. Corpus stats ride the generation entry,
-    so N/avgdl stay exact without any rescan.
+    existing postings — the nightly-loop step: cost tracks increment
+    size; the new postings land as an immutable generation listed by
+    ``commit.commit_append``, so ``increment_id`` replays are committed
+    no-ops (returns False) and concurrent appenders, which claim
+    distinct generation numbers, are never dropped. Corpus stats ride
+    the generation entry, so N/avgdl stay exact without any rescan.
 
     CONTRACT — the increment must contain only doc_ids NOT already in
     the index (round-11 advice): a replayed doc would double-count its
@@ -302,28 +291,9 @@ def append_lexical_index(
             _positions_of(increment, id_col, text_col), path, gen
         )
     n_docs, sum_dl = _corpus_stats(increment, text_col)
-    with commit.manifest_lock(path):
-        cur = commit.load_manifest(path)
-        applied_now = commit.applied_increments(cur)
-        if increment_id is not None and increment_id in applied_now:
-            commit.release(path, commit.GENCLAIM_PREFIX, gen)
-            return False
-        if any(g["gen"] == gen for g in cur["generations"]):
-            raise RuntimeError(
-                f"generation {gen} already committed at {path}; "
-                "claim was lost mid-append — retry the append"
-            )
-        cur["generations"].append(
-            {
-                "gen": gen,
-                "increment_id": increment_id,
-                "n_docs": n_docs,
-                "sum_dl": sum_dl,
-            }
-        )
-        commit.write_manifest(path, cur)
-    commit.release(path, commit.GENCLAIM_PREFIX, gen)
-    return True
+    return commit.commit_append(
+        path, gen, increment_id, {"n_docs": n_docs, "sum_dl": sum_dl}
+    )
 
 
 def compact_lexical_index(
@@ -332,13 +302,12 @@ def compact_lexical_index(
     max_generations_to_fold: int | None = None,
     protect_increments: set[str] | None = None,
 ) -> int:
-    """Fold committed posting generations — same discipline as the
-    sibling compactors: fresh claimed generation, artifacts first,
-    locked flip, abort if a concurrent append landed, old dirs left for
-    in-flight readers (vacuum_index sweeps them), applied increment_ids
-    preserved under ``compacted_increments``. Postings are immutable
-    facts (a doc's tf/dl never change), so the fold is a pure rewrite —
-    probe-after == probe-before.
+    """Fold committed posting generations: fresh claimed generation,
+    artifacts first, then ``commit.commit_fold`` (aborts on a concurrent
+    append or delete, leaves the old dirs for in-flight readers, keeps
+    applied increment_ids under ``compacted_increments``). Postings are
+    immutable facts (a doc's tf/dl never change), so the fold is a pure
+    rewrite — probe-after == probe-before.
 
     **Tiered fold** (``max_generations_to_fold=K``, round 12 — the
     round-11 lever the text index got, completed across the family): a
@@ -367,10 +336,8 @@ def compact_lexical_index(
     import os
 
     man = commit.load_manifest(path)
-    entries = list(man["generations"])
-    old_gens = [g["gen"] for g in entries]
     fold_entries, keep_entries = commit.split_fold_slice(
-        entries, max_generations_to_fold, protect_increments
+        man["generations"], max_generations_to_fold, protect_increments
     )
     # a 1-generation fold is a no-op rewrite UNLESS there are active
     # tombstones — then it is exactly how a delete gets applied
@@ -384,186 +351,48 @@ def compact_lexical_index(
             "(a 1-fold is a no-op rewrite; re-run after the pending "
             "sibling-leg appends land)"
         )
-    fold_man = dict(man, generations=fold_entries)
     n_docs = sum(int(g["n_docs"]) for g in fold_entries)
     sum_dl = sum(int(g["sum_dl"]) for g in fold_entries)
     # tombstones (round-13 deletes) apply PHYSICALLY at fold time: masked
     # rows in the folded slice are dropped from the rewrite (they must be
     # — folded rows land under a NEW generation number above every
-    # tombstone's cover, so a row carried through would un-mask). A
-    # tombstone whose whole cover lies inside the fold is fully absorbed:
-    # it leaves the manifest, its increment_id moves to applied_deletes,
-    # and its recorded removals move INTO the fold entry's stats (they
+    # tombstone's cover, so a row carried through would un-mask). The
+    # tombstones the fold absorbs leave the manifest (commit_fold), and
+    # their recorded removals move INTO the fold entry's stats (they
     # were subtracted globally before; the global arithmetic
-    # Σ generations − Σ active tombstones is invariant). One still
-    # covering a KEPT generation stays listed — its folded rows are
-    # gone but its kept-generation rows still need the probe-side mask.
-    tomb = _active_tombstones(spark, path, man)
-    old_tomb_gens = {t["gen"] for t in man.get("tombstones", [])}
-    absorbed = [
-        t
-        for t in man.get("tombstones", [])
-        if not any(g["gen"] <= t["max_gen"] for g in keep_entries)
-    ]
-    absorbed_gens = {t["gen"] for t in absorbed}
-    n_docs -= sum(int(t["n_docs_removed"]) for t in absorbed)
-    sum_dl -= sum(int(t["sum_dl_removed"]) for t in absorbed)
+    # Σ generations − Σ active tombstones is invariant).
+    tomb = generations.tombstones(spark, path, man, "doc_id")
+    for t in commit.absorbed(man, keep_entries):
+        n_docs -= int(t["n_docs_removed"])
+        sum_dl -= int(t["sum_dl_removed"])
     gen = commit.claim_generation(path)
-    _write_postings_gen(
-        _mask_deleted(_read_postings(spark, path, fold_man), tomb), path, gen
-    )
+
+    def folded(artifact: str, schema: str) -> DataFrame:
+        return generations.mask(
+            generations.read(spark, path, artifact, fold_entries, schema),
+            tomb,
+            "doc_id",
+        )
+
+    _write_postings_gen(folded("postings", _POSTINGS_SCHEMA), path, gen)
     if man.get("positions"):
         # the positional artifact folds alongside, under the same
         # tombstone mask (positions rows are (doc_id, _gen)-keyed like
         # postings, so the one mask covers both)
-        _write_positions_gen(
-            _mask_deleted(_read_positions(spark, path, fold_man), tomb),
-            path,
-            gen,
-        )
+        _write_positions_gen(folded("positions", _POSITIONS_SCHEMA), path, gen)
     (
-        _mask_deleted(_read_doclist(spark, path, fold_man), tomb)
+        folded("doclist", _DOCLIST_SCHEMA)
         .select("doc_id", "dl", "db")
         .repartition(DOC_BUCKETS, F.col("db"))
         .write.mode("overwrite")
         .partitionBy("db")
         .parquet(os.path.join(path, "doclist", f"gen={gen}"))
     )
-    applied = [
-        g["increment_id"]
-        for g in fold_entries
-        if g.get("increment_id") is not None
-    ]
-    with commit.manifest_lock(path):
-        cur = commit.load_manifest(path)
-        if {g["gen"] for g in cur["generations"]} != set(old_gens):
-            raise RuntimeError(
-                f"concurrent append landed during compaction of {path}; "
-                "re-run compact_lexical_index"
-            )
-        if {t["gen"] for t in cur.get("tombstones", [])} != old_tomb_gens:
-            # a delete that landed mid-fold was not applied to the
-            # rewrite, and the rewrite moved its covered rows above the
-            # tombstone's cover — committing would resurrect them
-            raise RuntimeError(
-                f"concurrent delete landed during compaction of {path}; "
-                "re-run compact_lexical_index"
-            )
-        cur["compacted_increments"] = sorted(
-            set(cur.get("compacted_increments", [])) | set(applied)
-        )
-        if absorbed:
-            cur["applied_deletes"] = sorted(
-                set(cur.get("applied_deletes", []))
-                | {
-                    t["increment_id"]
-                    for t in absorbed
-                    if t.get("increment_id") is not None
-                }
-            )
-            cur["tombstones"] = [
-                t
-                for t in cur.get("tombstones", [])
-                if t["gen"] not in absorbed_gens
-            ]
-        cur["generations"] = keep_entries + [
-            {
-                "gen": gen,
-                "increment_id": None,
-                "n_docs": n_docs,
-                "sum_dl": sum_dl,
-            }
-        ]
-        commit.write_manifest(path, cur)
-    commit.release(path, commit.GENCLAIM_PREFIX, gen)
-    return gen
-
-
-def _read_postings(spark, path: str, man: dict) -> DataFrame:
-    """Union of the committed posting generations (manifest-listed only;
-    crash orphans invisible). Explicit schema so an empty generation
-    reads as zero rows; ``tb`` resolves from the partition dirs. Each
-    slice carries its generation number as ``_gen`` (a literal — free)
-    so tombstone masking can scope a delete to the generations it
-    covered: a doc re-appended AFTER its delete lands in a higher
-    generation and must not be masked (round 13)."""
-    import os
-
-    out = None
-    for g in man["generations"]:
-        d = os.path.join(path, "postings", f"gen={g['gen']}")
-        part = (
-            spark.read.schema(_POSTINGS_SCHEMA)
-            .option("basePath", d)
-            .parquet(d)
-            .withColumn("_gen", F.lit(int(g["gen"])))
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
-
-
-def _read_doclist(spark, path: str, man: dict) -> DataFrame:
-    """Union of the committed doclist generations. Every writer lists a
-    generation only after its doclist landed, so a missing dir is a
-    damaged index: ``FileNotFoundError`` names it."""
-    import os
-
-    out = None
-    for g in man["generations"]:
-        d = os.path.join(path, "doclist", f"gen={g['gen']}")
-        if not os.path.isdir(d):
-            raise FileNotFoundError(
-                f"lexical index at {path} lists generation {g['gen']} but "
-                f"has no doclist/gen={g['gen']} dir; rebuild the index"
-            )
-        part = (
-            spark.read.schema(_DOCLIST_SCHEMA)
-            .option("basePath", d)
-            .parquet(d)
-            .withColumn("_gen", F.lit(int(g["gen"])))
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
-
-
-def _active_tombstones(spark, path: str, man: dict) -> DataFrame | None:
-    """(doc_id, max_gen) union of the listed tombstone generations, or
-    None when the index has no active deletes. ``max_gen`` (the highest
-    listed generation at delete-commit time, a manifest field stamped
-    per tombstone) scopes the mask: rows from generations <= max_gen are
-    dead, rows appended later (a re-added doc) are live. The set is
-    delete-volume-sized — deletes are rare events, so the mask join
-    rides a small frame AQE broadcasts."""
-    import os
-
-    ents = man.get("tombstones", [])
-    out = None
-    for t in ents:
-        d = os.path.join(path, "tombstones", f"gen={t['gen']}")
-        part = (
-            spark.read.schema("doc_id bigint, db int")
-            .option("basePath", d)
-            .parquet(d)
-            .select("doc_id", F.lit(int(t["max_gen"])).alias("max_gen"))
-        )
-        out = part if out is None else out.unionByName(part)
-    if out is None:
-        return None
-    # a doc deleted, re-added, and deleted again carries two tombstone
-    # rows — the widest cover wins (one tiny aggregate on a small frame)
-    return out.groupBy("doc_id").agg(F.max("max_gen").alias("max_gen"))
-
-
-def _mask_deleted(df: DataFrame, tomb: DataFrame | None) -> DataFrame:
-    """Drop rows whose (doc_id, _gen) a tombstone covers — the probe-
-    side view of a delete until compaction applies it physically."""
-    if tomb is None:
-        return df
-    return df.join(
-        tomb,
-        (df["doc_id"] == tomb["doc_id"]) & (df["_gen"] <= tomb["max_gen"]),
-        "left_anti",
+    commit.commit_fold(
+        path, man, gen, fold_entries, keep_entries,
+        {"n_docs": n_docs, "sum_dl": sum_dl}, "compact_lexical_index",
     )
+    return gen
 
 
 def _live_stats(man: dict) -> tuple[int, int]:
@@ -619,8 +448,10 @@ def delete_from_lexical_index(
     # exact removal mass from the doclist's dl; already-deleted rows are
     # masked — a deleted-then-re-added doc has TWO doclist rows and only
     # the live one may contribute its dl
-    dl = _mask_deleted(
-        _read_doclist(spark, path, man), _active_tombstones(spark, path, man)
+    dl = generations.mask(
+        generations.read(spark, path, "doclist", man["generations"], _DOCLIST_SCHEMA),
+        generations.tombstones(spark, path, man, "doc_id"),
+        "doc_id",
     )
     row = (
         member.join(dl.select("doc_id", "dl"), "doc_id", "left")
@@ -638,40 +469,16 @@ def delete_from_lexical_index(
         .partitionBy("db")
         .parquet(os.path.join(path, "tombstones", f"gen={gen}"))
     )
-    with commit.manifest_lock(path):
-        cur = commit.load_manifest(path)
-        applied_now = commit.applied_deletes(cur)
-        if increment_id is not None and increment_id in applied_now:
-            commit.release(path, commit.GENCLAIM_PREFIX, gen)
-            return False
-        if {g["gen"] for g in cur["generations"]} != {
-            g["gen"] for g in man["generations"]
-        }:
-            # an append committed between membership resolution and this
-            # commit: max_gen stamped from cur would cover generations
-            # the membership probe never saw — a concurrently
-            # (re-)appended doc would be masked while its stats were
-            # never subtracted, a permanent live-stat overcount. Same
-            # fence as compact/rebuild (round-14 advice); the tombstone
-            # dir is an orphan vacuum_index sweeps.
-            raise RuntimeError(
-                f"concurrent append landed during delete from {path}; "
-                "re-run delete_from_lexical_index"
-            )
-        cur.setdefault("tombstones", []).append(
-            {
-                "gen": gen,
-                "increment_id": increment_id,
-                # cover = everything listed NOW; a later re-append gets
-                # a higher generation and serves unmasked
-                "max_gen": max(g["gen"] for g in cur["generations"]),
-                "n_docs_removed": d_n,
-                "sum_dl_removed": d_s,
-            }
-        )
-        commit.write_manifest(path, cur)
-    commit.release(path, commit.GENCLAIM_PREFIX, gen)
-    return True
+    # an append committing between membership resolution and this
+    # commit would be covered by the tombstone's max_gen while the
+    # membership probe never saw it: a concurrently (re-)appended doc
+    # masked while its stats were never subtracted, a permanent
+    # live-stat overcount — commit_delete refuses it
+    return commit.commit_delete(
+        path, man, gen, increment_id,
+        {"n_docs_removed": d_n, "sum_dl_removed": d_s},
+        "delete_from_lexical_index",
+    )
 
 
 def indexed_doc_ids(
@@ -706,15 +513,16 @@ def indexed_doc_ids(
     ]
     if not gens:
         return ids.select(F.col("doc_id").cast("long").alias("doc_id")).limit(0)
-    sub = dict(man, generations=gens)
     want = ids.select(F.col("doc_id").cast("long").alias("doc_id")).distinct()
-    dl = _read_doclist(spark, path, sub)
+    dl = generations.read(spark, path, "doclist", gens, _DOCLIST_SCHEMA)
     dbs = [r["db"] for r in want.select(_db("doc_id").alias("db")).distinct().collect()]
     if len(dbs) < DOC_BUCKETS:
         dl = dl.filter(F.col("db").isin(dbs))
     # deleted docs are not members (round 13); the mask is scoped by
     # generation so a re-appended doc's new row stays a member
-    dl = _mask_deleted(dl, _active_tombstones(spark, path, man))
+    dl = generations.mask(
+        dl, generations.tombstones(spark, path, man, "doc_id"), "doc_id"
+    )
     return want.join(dl.select("doc_id"), "doc_id", "left_semi")
 
 
@@ -767,12 +575,16 @@ def bm25_topk_from_index(
     # it is computed BY Spark, not reimplemented driver-side)
     tq = _literal_terms(spark, terms)
     tbs = [r["tb"] for r in tq.select(_tb("term").alias("tb")).distinct().collect()]
-    post = _read_postings(spark, path, man)
+    post = generations.read(
+        spark, path, "postings", man["generations"], _POSTINGS_SCHEMA
+    )
     if len(tbs) < nb:
         post = post.filter(F.col("tb").isin(tbs))
     post = post.filter(F.col("term").isin(list(terms)))
     # tombstone mask BEFORE the df window: df is a surviving-docs fact
-    post = _mask_deleted(post, _active_tombstones(spark, path, man))
+    post = generations.mask(
+        post, generations.tombstones(spark, path, man, "doc_id"), "doc_id"
+    )
     tfdf = post.withColumn(
         "df", F.count(F.lit(1)).over(Window.partitionBy("term"))
     )
@@ -872,11 +684,15 @@ def phrase_matching_docs(
     tbs = [
         r["tb"] for r in slots.select(_tb("term").alias("tb")).distinct().collect()
     ]
-    pos = _read_positions(spark, path, man)
+    pos = generations.read(
+        spark, path, "positions", man["generations"], _POSITIONS_SCHEMA
+    )
     if len(tbs) < nb:
         pos = pos.filter(F.col("tb").isin(tbs))
     pos = pos.filter(F.col("term").isin(terms))
-    pos = _mask_deleted(pos, _active_tombstones(spark, path, man))
+    pos = generations.mask(
+        pos, generations.tombstones(spark, path, man, "doc_id"), "doc_id"
+    )
     votes = (
         pos.join(F.broadcast(slots), "term")
         .select("doc_id", "slot", F.explode("positions").alias("p"))
@@ -969,11 +785,15 @@ def proximity_matching_docs(
     nb = int(man.get("term_buckets", TERM_BUCKETS))
     tq = _literal_terms(spark, sorted(set(terms)))
     tbs = [r["tb"] for r in tq.select(_tb("term").alias("tb")).distinct().collect()]
-    pos = _read_positions(spark, path, man)
+    pos = generations.read(
+        spark, path, "positions", man["generations"], _POSITIONS_SCHEMA
+    )
     if len(tbs) < nb:
         pos = pos.filter(F.col("tb").isin(tbs))
     pos = pos.filter(F.col("term").isin(list(set(terms))))
-    pos = _mask_deleted(pos, _active_tombstones(spark, path, man))
+    pos = generations.mask(
+        pos, generations.tombstones(spark, path, man, "doc_id"), "doc_id"
+    )
     occ = pos.select("doc_id", "term", F.explode("positions").alias("p"))
     w = (
         Window.partitionBy("doc_id")
@@ -1027,11 +847,15 @@ def proximity_matching_docs_batch(
     if not tbs:
         raise ValueError("proximity_matching_docs_batch needs non-empty terms")
     terms = [r["term"] for r in qt.select("term").distinct().collect()]
-    pos = _read_positions(spark, path, man)
+    pos = generations.read(
+        spark, path, "positions", man["generations"], _POSITIONS_SCHEMA
+    )
     if len(tbs) < nb:
         pos = pos.filter(F.col("tb").isin(tbs))
     pos = pos.filter(F.col("term").isin(terms))
-    pos = _mask_deleted(pos, _active_tombstones(spark, path, man))
+    pos = generations.mask(
+        pos, generations.tombstones(spark, path, man, "doc_id"), "doc_id"
+    )
     occ = (
         pos.join(F.broadcast(qt), "term")
         .select("query_id", "doc_id", "term", F.explode("positions").alias("p"))
@@ -1089,10 +913,12 @@ def add_positions_to_index(
     man = commit.load_manifest(path)
     if man.get("positions"):
         return []
-    dl = _read_doclist(spark, path, man)
-    live = _mask_deleted(dl, _active_tombstones(spark, path, man)).select(
-        "doc_id", "_gen"
+    dl = generations.read(
+        spark, path, "doclist", man["generations"], _DOCLIST_SCHEMA
     )
+    live = generations.mask(
+        dl, generations.tombstones(spark, path, man, "doc_id"), "doc_id"
+    ).select("doc_id", "_gen")
     docs = (
         corpus.select(
             F.col(id_col).cast("long").alias("doc_id"),
@@ -1183,11 +1009,15 @@ def phrase_matching_docs_batch(
     if not tbs:
         raise ValueError("phrase_matching_docs_batch needs non-empty phrases")
     terms = [r["term"] for r in slots.select("term").distinct().collect()]
-    pos = _read_positions(spark, path, man)
+    pos = generations.read(
+        spark, path, "positions", man["generations"], _POSITIONS_SCHEMA
+    )
     if len(tbs) < nb:
         pos = pos.filter(F.col("tb").isin(tbs))
     pos = pos.filter(F.col("term").isin(terms))
-    pos = _mask_deleted(pos, _active_tombstones(spark, path, man))
+    pos = generations.mask(
+        pos, generations.tombstones(spark, path, man, "doc_id"), "doc_id"
+    )
     votes = (
         pos.join(F.broadcast(slots), "term")
         .select("query_id", "doc_id", "slot", F.explode("positions").alias("p"))
@@ -1497,14 +1327,18 @@ def hybrid_topk_rrf_batch(
     tbs = [
         r["tb"] for r in tq.select(_tb("term").alias("tb")).distinct().collect()
     ]
-    post = _read_postings(spark, lex_path, man)
+    post = generations.read(
+        spark, lex_path, "postings", man["generations"], _POSTINGS_SCHEMA
+    )
     if len(tbs) < nb:
         post = post.filter(F.col("tb").isin(tbs))
     post = post.filter(F.col("term").isin(terms))
     # tombstone mask before ANY statistics (deleted docs are gone from
     # df too); then df over the UNFILTERED-by-metadata pruned postings —
     # index-level term rarity, same contract as the single-query path
-    post = _mask_deleted(post, _active_tombstones(spark, lex_path, man))
+    post = generations.mask(
+        post, generations.tombstones(spark, lex_path, man, "doc_id"), "doc_id"
+    )
     dfx = post.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     if filter_ids is not None:
         allowed = (

@@ -6,10 +6,13 @@ artifacts); compliance users need it as an OPERATOR: given doc_ids,
 report any residue per artifact family across every index the pipeline
 maintains — the evidence a right-to-be-forgotten audit files.
 
-Spark-first shape: each family check is one delete-sized semi-join
-against the family's id column (narrow-column parquet scans, nothing
-corpus-sized materializes on the driver), unioned into a single
-residue report. ``scope`` picks the contract being audited:
+Spark-first shape: each artifact check is one delete-sized semi-join
+against the artifact's id column (narrow-column parquet scans, nothing
+corpus-sized materializes on the driver), unioned into a single residue
+report. Each index family names its id-keyed artifacts
+(``ID_KEYED_ARTIFACTS``); the audit reads them and masks tombstones
+through the shared generation reader (``operators/generations``), the
+same code every probe uses. ``scope`` picks the contract being audited:
 
 - ``"served"`` (default): what probes can SEE — tombstone masks
   applied. Must be empty immediately after a committed takedown; any
@@ -29,6 +32,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from .. import commit
 from ..functions.local_frames import literal_frame
+from . import annindex, generations, incremental, lexindex
 
 _REPORT_SCHEMA = "artifact string, doc_id bigint, n_rows bigint"
 
@@ -59,9 +63,8 @@ def verify_forgotten(
     path is configured): lex ``postings`` / ``positions`` (when the
     index stores them) / ``doclist``; ann ``vectors`` / ``veclist``;
     text ``grams`` / ``sizes`` / ``hashes``; ``merged`` corpus rows.
-    A listed generation without its doclist or veclist raises
-    ``FileNotFoundError`` rather than dropping that family from the
-    audit.
+    A listed generation without one of its artifact dirs raises
+    ``FileNotFoundError`` rather than dropping it from the audit.
 
     Cost: delete-sized semi-joins on narrow id columns — the same probe
     class as the deletes themselves; the merged check prunes children
@@ -75,83 +78,30 @@ def verify_forgotten(
         F.col(id_col).cast("long").alias("doc_id")
     ).distinct()
     parts: list[DataFrame] = []
-    if lex_index_path is not None:
-        from . import lexindex as lx
-
-        man = commit.load_manifest(lex_index_path)
-        tomb = lx._active_tombstones(spark, lex_index_path, man) if served else None
-        post = lx._read_postings(spark, lex_index_path, man)
-        parts.append(
-            _residue(lx._mask_deleted(post, tomb), "doc_id", want, "lex:postings")
-        )
-        if man.get("positions"):
-            pos = lx._read_positions(spark, lex_index_path, man)
+    for family, path, key, artifacts in (
+        ("lex", lex_index_path, "doc_id", lexindex.ID_KEYED_ARTIFACTS),
+        ("ann", ann_index_path, "vec_id", annindex.ID_KEYED_ARTIFACTS),
+        ("text", text_index_path, "doc_id", incremental.ID_KEYED_ARTIFACTS),
+    ):
+        if path is None:
+            continue
+        man = commit.load_manifest(path)
+        tomb = generations.tombstones(spark, path, man, key) if served else None
+        for artifact, schema, col in artifacts:
+            # positions exist only in an index built or backfilled with them
+            if artifact == "positions" and not man.get("positions"):
+                continue
+            rows = generations.read(
+                spark, path, artifact, man["generations"], schema
+            )
             parts.append(
                 _residue(
-                    lx._mask_deleted(pos, tomb), "doc_id", want, "lex:positions"
+                    generations.mask(rows, tomb, col),
+                    col,
+                    want,
+                    f"{family}:{artifact}",
                 )
             )
-        dl = lx._read_doclist(spark, lex_index_path, man)
-        parts.append(
-            _residue(lx._mask_deleted(dl, tomb), "doc_id", want, "lex:doclist")
-        )
-    if ann_index_path is not None:
-        from . import annindex as ax
-
-        man = commit.load_manifest(ann_index_path)
-        tomb = (
-            ax._active_vec_tombstones(spark, ann_index_path, man)
-            if served
-            else None
-        )
-        vecs = ax._read_vectors(spark, ann_index_path, man)
-        parts.append(
-            _residue(
-                ax._mask_deleted_vecs(vecs, tomb), "vec_id", want, "ann:vectors"
-            )
-        )
-        vl = ax._read_veclist(spark, ann_index_path, man)
-        parts.append(
-            _residue(
-                ax._mask_deleted_vecs(vl, tomb), "vec_id", want, "ann:veclist"
-            )
-        )
-    if text_index_path is not None:
-        from . import incremental as inc
-
-        man = commit.load_manifest(text_index_path)
-        tomb = (
-            inc._active_text_tombstones(spark, text_index_path, man)
-            if served
-            else None
-        )
-        grams = inc._read_artifact(
-            spark, text_index_path, "grams", man, inc._GRAMS_SCHEMA
-        )
-        sizes = inc._read_artifact(
-            spark, text_index_path, "sizes", man, inc._SIZES_SCHEMA
-        )
-        hashes = inc._read_artifact(
-            spark, text_index_path, "hashes", man, inc._HASHES_SCHEMA
-        )
-        parts.append(
-            _residue(
-                inc._mask_deleted_ids(grams, tomb), "base_id", want, "text:grams"
-            )
-        )
-        parts.append(
-            _residue(
-                inc._mask_deleted_ids(sizes, tomb), "base_id", want, "text:sizes"
-            )
-        )
-        parts.append(
-            _residue(
-                inc._mask_deleted_ids(hashes, tomb, "doc_id"),
-                "doc_id",
-                want,
-                "text:hashes",
-            )
-        )
     if merged_dir is not None:
         import os
 

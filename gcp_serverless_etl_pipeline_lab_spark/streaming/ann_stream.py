@@ -116,7 +116,6 @@ def run_nightly_ann_loop(
         append_ann_index,
         compact_ann_index,
     )
-    from ..operators.incremental import vacuum_index
 
     man = commit.load_manifest(index_path)
     applied = commit.applied_increments(man)
@@ -176,7 +175,7 @@ def run_nightly_ann_loop(
     rep = ann_drift_report(index_path)
     vacuumed: list[str] = []
     if vacuum_min_age_seconds is not None:
-        vacuumed = vacuum_index(index_path, vacuum_min_age_seconds)
+        vacuumed = commit.vacuum_index(index_path, vacuum_min_age_seconds)
     return {
         "appended": appended,
         "skipped": skipped,

@@ -211,7 +211,6 @@ def run_nightly_loop(
         append_to_index,
         compact_index,
         exact_dups_vs_index,
-        vacuum_index,
     )
 
     run_incremental_classify(
@@ -283,7 +282,7 @@ def run_nightly_loop(
         )
     vacuumed: list[str] = []
     if vacuum_min_age_seconds is not None:
-        vacuumed = vacuum_index(index_path, vacuum_min_age_seconds)
+        vacuumed = commit.vacuum_index(index_path, vacuum_min_age_seconds)
     return {
         "classified_epochs": epochs,
         "merged_epochs": merged,

@@ -591,7 +591,6 @@ def run_nightly(
     rebuild = None
     drift = None
     served_overlap = None
-    missing = 0
     vacuumed: list[str] = []
     if lex_index_path is not None:
         from ..operators.lexindex import compact_lexical_index
@@ -685,49 +684,13 @@ def run_nightly(
                 max_generations_to_fold=max_generations_to_fold,
             )
     if ann_index_path is not None and lex_index_path is not None:
-        from ..operators.annindex import (
-            _active_vec_tombstones,
-            _mask_deleted_vecs,
-            _read_veclist,
+        from .retrieval_stream import check_hybrid_consistency
+
+        check_hybrid_consistency(
+            spark, ann_index_path, lex_index_path, consistency_scope,
+            appended_ann, compacted["ann"],
         )
-        from ..operators.lexindex import indexed_doc_ids
-
-        ann_man = commit.load_manifest(ann_index_path)
-        if consistency_scope == "full":
-            check_gens = ann_man["generations"]
-        elif consistency_scope == "new":
-            tonight = set(appended_ann)
-            check_gens = [
-                g
-                for g in ann_man["generations"]
-                if g.get("increment_id") in tonight
-                or (compacted["ann"] is not None and g["gen"] == compacted["ann"])
-            ]
-        else:
-            check_gens = []
-        if check_gens:
-            sub = dict(ann_man, generations=check_gens)
-            vl = _read_veclist(spark, ann_index_path, sub)
-            # mask ANN tombstones: a documented takedown deletes ANN
-            # first, then lex — between that and ANN compaction the raw
-            # veclist still carries the deleted vec_id while the lexical
-            # membership (correctly) denies it, and an unmasked check
-            # would raise a FALSE consistency violation (round-14 advice)
-            vl = _mask_deleted_vecs(
-                vl, _active_vec_tombstones(spark, ann_index_path, ann_man)
-            )
-            ann_ids = vl.select(F.col("vec_id").alias("doc_id"))
-            present = indexed_doc_ids(spark, lex_index_path, ann_ids)
-            missing = ann_ids.join(present, "doc_id", "left_anti").count()
-        if missing:
-            raise RuntimeError(
-                f"hybrid consistency violated: {missing} doc_ids are in "
-                f"the ANN index at {ann_index_path} but not in the "
-                f"lexical index at {lex_index_path}"
-            )
     if vacuum_min_age_seconds is not None:
-        from ..operators.incremental import vacuum_index
-
         for tag, p in (
             ("", lex_index_path),
             ("ann:", ann_index_path),
@@ -735,7 +698,8 @@ def run_nightly(
         ):
             if p is not None:
                 vacuumed += [
-                    f"{tag}{rel}" for rel in vacuum_index(p, vacuum_min_age_seconds)
+                    f"{tag}{rel}"
+                    for rel in commit.vacuum_index(p, vacuum_min_age_seconds)
                 ]
     return {
         "appended_lex": appended_lex,
@@ -751,7 +715,8 @@ def run_nightly(
         "purge_children_skipped": purge_children_skipped,
         "forgotten_residue": forgotten_residue,
         "compacted": compacted,
-        "ann_docs_missing_from_lex": missing,
+        # a violation raised above
+        "ann_docs_missing_from_lex": 0,
         "rebuild_recommended": rebuild,
         "max_drift_ratio": drift,
         "served_overlap": served_overlap,

@@ -32,6 +32,67 @@ from pyspark.sql import functions as F
 from .. import commit
 
 
+def check_hybrid_consistency(
+    spark,
+    ann_index_path: str,
+    lex_index_path: str,
+    scope: str,
+    appended_ann: list[str],
+    compacted_ann: int | None,
+) -> None:
+    """The invariant hybrid serving rests on: every vector the ANN leg
+    can rank is a doc the BM25 leg has indexed. One doc-bucket-pruned
+    anti-join; a violation raises ``RuntimeError``. ``scope`` "full"
+    checks every ANN generation, "new" only tonight's ``appended_ann``
+    increments — or, when compaction just folded them, the fold
+    ``compacted_ann`` — and anything else checks nothing. The ids come
+    from the ANN membership artifact (veclist), a narrow id-only read,
+    so even "full" never scans the embedding-carrying vectors/.
+
+    ANN tombstones are masked: a takedown deletes from ANN first, then
+    lex, and until ANN compaction retires the tombstone the raw veclist
+    still lists the deleted vec_id while lexical membership (correctly)
+    denies it — an unmasked check would raise a FALSE violation every
+    night in between (round-14 advice)."""
+    from ..operators import generations
+    from ..operators.annindex import VECLIST_SCHEMA
+    from ..operators.lexindex import indexed_doc_ids
+
+    man = commit.load_manifest(ann_index_path)
+    if scope == "full":
+        check_gens = man["generations"]
+    elif scope == "new":
+        tonight = set(appended_ann)
+        check_gens = [
+            g
+            for g in man["generations"]
+            if g.get("increment_id") in tonight
+            or (compacted_ann is not None and g["gen"] == compacted_ann)
+        ]
+    else:
+        check_gens = []
+    if not check_gens:
+        return
+    vl = generations.mask(
+        generations.read(
+            spark, ann_index_path, "veclist", check_gens, VECLIST_SCHEMA
+        ),
+        generations.tombstones(spark, ann_index_path, man, "vec_id"),
+        "vec_id",
+    )
+    ann_ids = vl.select(F.col("vec_id").alias("doc_id"))
+    present = indexed_doc_ids(spark, lex_index_path, ann_ids)
+    missing = ann_ids.join(present, "doc_id", "left_anti").count()
+    if missing:
+        raise RuntimeError(
+            f"hybrid consistency violated: {missing} doc_ids are in "
+            f"the ANN index at {ann_index_path} but not in the "
+            f"lexical index at {lex_index_path} — RRF fusion over "
+            "these indexes would silently skew; re-run the loop "
+            "after appending the missing docs' text"
+        )
+
+
 def _resolve_increment(raw, id_col, text_col, embedding_col, has_vec):
     """Deterministic one-row-per-doc resolution of an at-least-once
     inbox increment: ``min_by`` of the whole row over a content key, so
@@ -281,16 +342,9 @@ def run_nightly_retrieval_loop(
     rebuild = None
     drift = None
     served_overlap = None
-    missing = 0
     vacuumed: list[str] = []
     if ann_index_path is not None:
-        from ..operators.annindex import (
-            _active_vec_tombstones,
-            _mask_deleted_vecs,
-            _read_veclist,
-            ann_drift_report,
-            compact_ann_index,
-        )
+        from ..operators.annindex import ann_drift_report, compact_ann_index
 
         if (
             compact_every is not None
@@ -324,60 +378,19 @@ def run_nightly_retrieval_loop(
         rep = ann_drift_report(ann_index_path)
         rebuild = rep["rebuild_recommended"]
         drift = rep["max_ratio"]
-        # the invariant this loop exists to hold: every vector the ANN
-        # leg can rank is a doc the BM25 leg has indexed — one
-        # doc-bucket-pruned anti-join, loud on violation. Scope "new"
-        # reads only tonight's appended generations (night-bounded);
-        # compaction may have just folded them, in which case the fold
-        # IS tonight's generation and gets checked instead.
-        ann_man = commit.load_manifest(ann_index_path)
-        if consistency_scope == "full":
-            check_gens = ann_man["generations"]
-        elif consistency_scope == "new":
-            tonight = set(appended_ann)
-            check_gens = [
-                g
-                for g in ann_man["generations"]
-                if g.get("increment_id") in tonight
-                or (compacted_ann is not None and g["gen"] == compacted_ann)
-            ]
-        else:
-            check_gens = []
-        if check_gens:
-            # the checked generations' ids come from the ANN membership
-            # artifact (veclist, round 13) — a narrow id-only read, so
-            # even consistency_scope="full" never scans the embedding-
-            # carrying vectors/
-            sub = dict(ann_man, generations=check_gens)
-            vl = _read_veclist(spark, ann_index_path, sub)
-            # mask ANN tombstones: after a takedown (delete ANN, then
-            # lex) the raw veclist still lists the deleted vec_id until
-            # ANN compaction retires the tombstone, while the lexical
-            # membership probe (correctly) denies it — an unmasked
-            # full-scope check would raise a FALSE violation every night
-            # in between (round-14 advice)
-            vl = _mask_deleted_vecs(
-                vl, _active_vec_tombstones(spark, ann_index_path, ann_man)
-            )
-            ann_ids = vl.select(F.col("vec_id").alias("doc_id"))
-            present = indexed_doc_ids(spark, lex_index_path, ann_ids)
-            missing = ann_ids.join(present, "doc_id", "left_anti").count()
-        if missing:
-            raise RuntimeError(
-                f"hybrid consistency violated: {missing} doc_ids are in "
-                f"the ANN index at {ann_index_path} but not in the "
-                f"lexical index at {lex_index_path} — RRF fusion over "
-                "these indexes would silently skew; re-run the loop "
-                "after appending the missing docs' text"
-            )
+        # the invariant this loop exists to hold; scope "new" reads only
+        # tonight's appended generations (night-bounded) — or the fold
+        # that just absorbed them
+        check_hybrid_consistency(
+            spark, ann_index_path, lex_index_path, consistency_scope,
+            appended_ann, compacted_ann,
+        )
     if vacuum_min_age_seconds is not None:
-        from ..operators.incremental import vacuum_index
-
-        vacuumed = vacuum_index(lex_index_path, vacuum_min_age_seconds)
+        vacuumed = commit.vacuum_index(lex_index_path, vacuum_min_age_seconds)
         if ann_index_path is not None:
             vacuumed += [
                 f"ann:{p}"
-                for p in vacuum_index(ann_index_path, vacuum_min_age_seconds)
+                for p in commit.vacuum_index(ann_index_path, vacuum_min_age_seconds)
             ]
     return {
         "appended_lex": appended_lex,
@@ -387,7 +400,8 @@ def run_nightly_retrieval_loop(
         "duplicate_docs": n_dup,
         "compacted_lex": compacted_lex,
         "compacted_ann": compacted_ann,
-        "ann_docs_missing_from_lex": missing,
+        # a violation raised above
+        "ann_docs_missing_from_lex": 0,
         "rebuild_recommended": rebuild,
         "max_drift_ratio": drift,
         "served_overlap": served_overlap,

@@ -1,7 +1,6 @@
 """Persisted IVF index (operators/annindex.py): build-once-query-many
 parity with the per-invocation ivf_trained_topk, cell partition pruning,
-and vacuum of orphaned text-index generations (operators/incremental.py
-vacuum_index)."""
+and vacuum of orphaned text-index generations (commit.vacuum_index)."""
 
 from __future__ import annotations
 
@@ -82,7 +81,7 @@ def test_vacuum_index_sweeps_only_stale_orphans(spark, tmp_path):
         capped=spark.createDataFrame([], incremental._CAPPED_SCHEMA),
     )
     # fresh orphan survives (could be an in-flight append)
-    assert incremental.vacuum_index(idx, min_age_seconds=3600) == []
+    assert commit.vacuum_index(idx, min_age_seconds=3600) == []
     # age it past the horizon -> swept, across every artifact
     for artifact in ("hashes", "grams", "sizes", "gramdf", "capped"):
         d = os.path.join(idx, artifact, "gen=7")
@@ -90,7 +89,7 @@ def test_vacuum_index_sweeps_only_stale_orphans(spark, tmp_path):
             for f in fs:
                 os.utime(os.path.join(r, f), (1, 1))
         os.utime(d, (1, 1))
-    swept = incremental.vacuum_index(idx, min_age_seconds=3600)
+    swept = commit.vacuum_index(idx, min_age_seconds=3600)
     assert swept == sorted(
         f"{a}/gen=7" for a in ("hashes", "grams", "sizes", "gramdf", "capped")
     )
@@ -180,7 +179,7 @@ def test_compact_ann_index_folds_generations_preserves_queries(spark, tmp_path):
     assert sorted(os.listdir(os.path.join(idx, "vectors"))) == [
         "gen=0", "gen=1", "gen=2",
     ]
-    swept = incremental.vacuum_index(idx, min_age_seconds=0.0)
+    swept = commit.vacuum_index(idx, min_age_seconds=0.0)
     assert swept == [
         # the membership artifact (round 13) is swept alongside the vectors
         "veclist/gen=0", "veclist/gen=1",
@@ -290,7 +289,7 @@ def test_compact_ann_aborts_on_concurrent_append(spark, tmp_path, monkeypatch):
     assert live == {gen}
     orphans = set(os.listdir(os.path.join(idx, "vectors"))) - {f"gen={gen}"}
     assert orphans, "aborted fold left no orphan (race not exercised)"
-    swept = incremental.vacuum_index(idx, min_age_seconds=0.0)
+    swept = commit.vacuum_index(idx, min_age_seconds=0.0)
     assert {f"vectors/gen={g}" for g in range(gen)} <= set(swept)
 
 

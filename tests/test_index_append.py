@@ -202,7 +202,7 @@ def test_compact_folds_generations_preserves_probes_drops_dead_postings(
         gens = sorted(os.listdir(os.path.join(idx, artifact)))
         assert gens == ["gen=0", "gen=1", "gen=2"], (artifact, gens)
     # ...until vacuum's age-based sweep removes them past the horizon
-    swept = incremental.vacuum_index(idx, min_age_seconds=0.0)
+    swept = commit.vacuum_index(idx, min_age_seconds=0.0)
     assert {s.split("/")[0] for s in swept} == {
         "hashes", "grams", "sizes", "gramdf", "capped"
     }
@@ -345,14 +345,14 @@ def test_vacuum_keeps_claim_of_actively_writing_append(spark, tmp_path):
     os.makedirs(gen_dir)
     with open(os.path.join(gen_dir, "part-0.parquet"), "w") as fh:
         fh.write("x")
-    swept = incremental.vacuum_index(idx, min_age_seconds=3600)
+    swept = commit.vacuum_index(idx, min_age_seconds=3600)
     assert swept == [] and os.path.exists(marker)
 
     # the same appender gone silent past the horizon: marker AND its
     # orphaned dir are swept
     os.utime(os.path.join(gen_dir, "part-0.parquet"), (past, past))
     os.utime(gen_dir, (past, past))
-    swept = incremental.vacuum_index(idx, min_age_seconds=3600)
+    swept = commit.vacuum_index(idx, min_age_seconds=3600)
     assert f"{commit.GENCLAIM_PREFIX}1" in swept
     assert "hashes/gen=1" in swept
     assert not os.path.exists(marker)
@@ -362,7 +362,7 @@ def test_commit_rejects_already_listed_generation(spark, tmp_path, monkeypatch):
     """Belt-and-braces for a stolen claim: if an append's generation
     number somehow got committed by another writer (claim vacuumed during
     an extreme stall), the locked manifest commit must raise instead of
-    listing the number twice — _read_artifact would double-count that
+    listing the number twice — the reader would double-count that
     generation's postings."""
     import pytest as _pytest
 

@@ -14,11 +14,9 @@ from pyspark.sql import functions as F
 from gcp_serverless_etl_pipeline_lab_spark import commit
 from gcp_serverless_etl_pipeline_lab_spark.operators import (
     annindex,
+    generations,
     lexindex,
     retrieval,
-)
-from gcp_serverless_etl_pipeline_lab_spark.operators.incremental import (
-    vacuum_index,
 )
 from gcp_serverless_etl_pipeline_lab_spark.sources.tables import load_table
 
@@ -156,10 +154,12 @@ def test_full_fold_absorbs_tombstones_and_vacuum_sweeps(spark, tmp_path):
     assert after == before
     assert after == _rows(retrieval.bm25_topk(survivors, TERMS, k=10))
     # the deleted docs are PHYSICALLY gone from the folded postings
-    post = lexindex._read_postings(spark, idx, man)
+    post = generations.read(
+        spark, idx, "postings", man["generations"], lexindex._POSTINGS_SCHEMA
+    )
     assert post.filter(F.col("doc_id") % 5 == 0).count() == 0
     # the retired tombstone dir is unlisted debris — vacuum sweeps it
-    swept = vacuum_index(idx, min_age_seconds=0.0)
+    swept = commit.vacuum_index(idx, min_age_seconds=0.0)
     assert f"tombstones/gen={tomb_gen}" in swept
 
 
@@ -274,9 +274,9 @@ def test_ann_delete_then_reappend_and_compact_retires(spark, tmp_path):
     )
     assert after == before and after
     # the re-added vector survived the fold; exactly one copy remains
-    vecs = annindex._read_vectors(spark, idx, man)
+    vecs = generations.read(spark, idx, "vectors", man["generations"])
     assert vecs.filter(F.col("vec_id") == vid).count() == 1
-    swept = vacuum_index(idx, min_age_seconds=0.0)
+    swept = commit.vacuum_index(idx, min_age_seconds=0.0)
     assert f"tombstones/gen={tomb_gen}" in swept
 
 
@@ -290,6 +290,6 @@ def test_ann_rebuild_drops_deleted_from_retrain(spark, tmp_path):
     man = commit.load_manifest(idx)
     assert man.get("tombstones", []) == []
     assert man["applied_deletes"] == ["take"]
-    vecs = annindex._read_vectors(spark, idx, man)
+    vecs = generations.read(spark, idx, "vectors", man["generations"])
     assert vecs.filter(F.col("vec_id") % 3 == 0).count() == 0
     assert vecs.count() == emb.filter(F.col("vec_id") % 3 != 0).count()

@@ -59,10 +59,6 @@ def test_append_keeps_probe_equal_to_full_scan(spark, tmp_path):
 
 
 def test_compact_folds_generations_pure_rewrite(spark, tmp_path):
-    from gcp_serverless_etl_pipeline_lab_spark.operators.incremental import (
-        vacuum_index,
-    )
-
     docs = _docs(spark)
     idx = str(tmp_path / "lex")
     lexindex.build_lexical_index(docs.filter(F.col("doc_id") % 2 == 0), idx)
@@ -79,7 +75,7 @@ def test_compact_folds_generations_pure_rewrite(spark, tmp_path):
     assert _rows(lexindex.bm25_topk_from_index(spark, idx, TERMS, k=10)) == before
     # old dirs stay for in-flight readers until the shared vacuum sweeps
     assert len(os.listdir(os.path.join(idx, "postings"))) == 3
-    swept = vacuum_index(idx, min_age_seconds=0.0)
+    swept = commit.vacuum_index(idx, min_age_seconds=0.0)
     assert swept == [
         "doclist/gen=0",
         "doclist/gen=1",

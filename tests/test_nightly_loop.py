@@ -16,7 +16,7 @@ import os
 from pyspark.sql import functions as F
 
 from gcp_serverless_etl_pipeline_lab_spark import commit
-from gcp_serverless_etl_pipeline_lab_spark.operators import incremental
+from gcp_serverless_etl_pipeline_lab_spark.operators import generations, incremental
 from gcp_serverless_etl_pipeline_lab_spark.sinks import read_warehouse
 from gcp_serverless_etl_pipeline_lab_spark.sources.tables import load_table
 from gcp_serverless_etl_pipeline_lab_spark.streaming.dedup_stream import (
@@ -319,8 +319,8 @@ def test_nightly_loop_at_least_once_inbox_indexes_once(spark, tmp_path):
     # one sizes row / one hash row per appended doc — the index never saw
     # the retransmission
     man = commit.load_manifest(idx)
-    sizes = incremental._read_artifact(
-        spark, idx, "sizes", man, incremental._SIZES_SCHEMA
+    sizes = generations.read(
+        spark, idx, "sizes", man["generations"], incremental._SIZES_SCHEMA
     )
     dup_sizes = (
         sizes.groupBy("base_id").count().filter(F.col("count") > 1).count()

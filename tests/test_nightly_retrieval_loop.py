@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from gcp_serverless_etl_pipeline_lab_spark import commit
 from gcp_serverless_etl_pipeline_lab_spark.operators import (
     annindex,
+    generations,
     lexindex,
     retrieval,
 )
@@ -159,8 +160,8 @@ def test_loop_crash_between_legs_replays_the_ann_leg(spark, tmp_path, monkeypatc
     # the replayed ANN leg holds the full increment (not starved empty)
     ann_ids = {
         row["vec_id"]
-        for row in annindex._read_vectors(
-            spark, ann, commit.load_manifest(ann)
+        for row in generations.read(
+            spark, ann, "vectors", commit.load_manifest(ann)["generations"]
         ).select("vec_id").collect()
     }
     want_ids = {

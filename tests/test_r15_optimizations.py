@@ -19,6 +19,7 @@ from __future__ import annotations
 import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_SMOKE
@@ -70,6 +71,22 @@ def test_gram_novelty_accepts_shared_shingles(spark):
     sh = dedup._with_shingles(corpus).localCheckpoint(eager=True)
     shared = dedup.gram_novelty(corpus, shingles=sh).collect()
     assert sorted(map(tuple, default)) == sorted(map(tuple, shared))
+
+
+def test_gram_novelty_checks_the_shared_frame_width(spark):
+    """The guard reads the width off the ``shingles`` frame itself: a
+    4-gram frame with n=4 is consistent and matches the self-shingling
+    spelling; the same frame with the default n=3 raises."""
+    corpus = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "b c d e f"), (3, "x  y z w")],
+        "doc_id long, text string",
+    )
+    sh = dedup._with_shingles(corpus, 4).localCheckpoint(eager=True)
+    default = dedup.gram_novelty(corpus, n=4).collect()
+    shared = dedup.gram_novelty(corpus, n=4, shingles=sh).collect()
+    assert sorted(map(tuple, shared)) == sorted(map(tuple, default))
+    with pytest.raises(ValueError, match="4-grams but n=3"):
+        dedup.gram_novelty(corpus, shingles=sh)
 
 
 def test_ngram_jaccard_accepts_shared_shingles(spark):

@@ -192,3 +192,26 @@ def test_cc_loop_leaves_caller_aqe_conf_alone(spark):
     # one component, labeled by its min node
     assert {r["cluster_id"] for r in out} == {0}
     assert len(out) == n + 1
+
+
+def test_cc_loop_session_follows_caller_conf_changes(spark):
+    """The cloned loop session is cached per caller, but the mirrored
+    confs are copied again on every run: a shuffle-partition change on
+    the caller between two runs reaches the clone (ADVICE r16)."""
+    from gcp_serverless_etl_pipeline_lab_spark.operators import cluster
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "doc_a long, doc_b long")
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "5")
+        cluster.connected_components(pairs).collect()
+        clone = cluster._LOOP_SESSIONS[spark]
+        assert clone.conf.get(key) == "5"
+        spark.conf.set(key, "7")
+        out = cluster.connected_components(pairs).collect()
+        assert cluster._LOOP_SESSIONS[spark] is clone
+        assert clone.conf.get(key) == "7"
+    finally:
+        spark.conf.set(key, old)
+    assert {r["cluster_id"] for r in out} == {1}
